@@ -606,12 +606,6 @@ object Clustering {
       .limit(topK)
   }
 
-  /** Artifact root for catalog queries (driver/bench sessions). Lives under
-    * the build's target dir (gitignored) unless overridden.
-    */
-  private def artifactRoot: String =
-    sys.env.getOrElse("GRAFT_ARTIFACT_DIR", "/root/repo/target/graft-artifacts")
-
   private val builtIndexDirs = scala.collection.mutable.Set[String]()
   // sfDir -> resolved index dir: fixtures are immutable, so the corpus
   // fingerprint needs computing once per corpus per session, not per query
@@ -641,7 +635,7 @@ object Clustering {
       s"|m=$PQ_M|k=$K|it=$ITERS|v=$ARTIFACT_VERSION"
     val digest = java.security.MessageDigest.getInstance("MD5")
       .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
-    val dir = s"$artifactRoot/ivfpq_$digest"
+    val dir = s"${DedupArtifacts.artifactRoot}/ivfpq_$digest"
     this.synchronized {
       if (!builtIndexDirs.contains(dir)) {
         val marker = new java.io.File(s"$dir/_GRAFT_INDEX_OK")

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
+import graft.store.Manifests
 
 /** The composed training-data curation pipeline: quality scoring ->
   * quality gate -> exact near-dup removal -> curated corpus. This is the
@@ -651,7 +652,7 @@ object Curation {
     nearDupIngestBatch(batch, batchId, indexDir, pairsDir, thresholdX1e3)
     val deltaPairs = spark.read.parquet(s"$pairsDir/batch=$batchId")
       .select("d1", "d2").persist()
-    val priorMan = latestLabelManifest(spark, labelsDir, batchId)
+    val priorMan = latestLabelCommit(spark, labelsDir, batchId)
       .map(_._2).getOrElse(LabelManifest(Map.empty, Map.empty))
     val eps = deltaPairs.select(col("d1").as("doc_id"))
       .union(deltaPairs.select(col("d2").as("doc_id"))).distinct().persist()
@@ -726,7 +727,7 @@ object Curation {
       writtenD = bucketSet(outD.select("dbkt"), "dbkt")
       outD.unpersist()
     }
-    writeLabelManifest(spark, labelsDir, batchId, LabelManifest(
+    commitLabels(spark, labelsDir, batchId, LabelManifest(
       (priorMan.labels -- touched) ++ written.map(_ -> batchId),
       (priorMan.docs -- touchedD) ++ writtenD.map(_ -> batchId)))
     docDelta.unpersist(); folded.unpersist(); changedOld.unpersist()
@@ -734,8 +735,6 @@ object Curation {
     deltaPairs.unpersist()
     ((epLabelPaths ++ carryPaths).distinct, docmapPaths)
   }
-
-  private val LABEL_MANIFEST = "_MANIFEST"
 
   /** A committed batch's view of the label state: `labels` maps each live
     * cluster bucket (cbkt) to the batch directory owning its current
@@ -745,116 +744,47 @@ object Curation {
   private[operators] case class LabelManifest(labels: Map[Long, Long],
                                               docs: Map[Long, Long])
 
-  /** Commit a batch's label-state manifest, written AFTER the bucket data
-    * — its presence is what makes the batch readable, so a crashed
-    * attempt leaves no visible state. The commit itself is ATOMIC: the
-    * body goes to a temp name and FileSystem.rename() publishes it
-    * (atomic on local FS and HDFS), and the body ends with an
-    * `END <n-entries>` terminator that [[readLabelManifest]] validates —
-    * a torn write can neither surface as a committed manifest nor parse
-    * as a silently-shorter one.
-    */
-  private def writeLabelManifest(spark: SparkSession, labelsDir: String,
-                                 batchId: Long,
-                                 man: LabelManifest): Unit = {
-    val p = new org.apache.hadoop.fs.Path(
-      s"$labelsDir/batch=$batchId/$LABEL_MANIFEST")
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"$labelsDir/batch=$batchId/$LABEL_MANIFEST.tmp")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val body =
-      man.labels.toSeq.sorted.map { case (b, o) => s"L $b $o\n" }.mkString +
-      man.docs.toSeq.sorted.map { case (b, o) => s"D $b $o\n" }.mkString +
-      s"END ${man.labels.size + man.docs.size}\n"
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-    // ATOMIC overwrite (the ReleaseStream.writeManifest protocol): the
-    // ingest's own replay only ever re-publishes an IDENTICAL body, but
-    // the residue repair ([[exciseDocsFromClusterState]]) REWRITES the
-    // frontier manifest with a different one — a delete-then-rename
-    // window there would leave no frontier manifest, silently regressing
-    // readers to the previous batch's labels. file:// gets rename(2) via
-    // nio; elsewhere FileContext's OVERWRITE rename (atomic on HDFS),
-    // with the delete+rename fallback only for object-store connectors
-    // that register no AbstractFileSystem.
-    Seq(p, tmp).foreach(f => fs.delete(
-      new org.apache.hadoop.fs.Path(f.getParent, s".${f.getName}.crc"),
-      false))
-    val conf = spark.sessionState.newHadoopConf()
-    val qp = fs.makeQualified(p)
-    if (qp.toUri.getScheme == "file")
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(fs.makeQualified(tmp).toUri.getPath),
-        java.nio.file.Paths.get(qp.toUri.getPath),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    else
-      try
-        org.apache.hadoop.fs.FileContext.getFileContext(qp.toUri, conf)
-          .rename(fs.makeQualified(tmp), qp,
-            org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      catch {
-        case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-          fs.delete(qp, false)
-          if (!fs.rename(fs.makeQualified(tmp), qp))
-            sys.error(s"label manifest publication failed: rename($tmp -> " +
-              s"$qp) returned false after delete — frontier manifest is " +
-              "missing")
-      }
-  }
-
-  /** The newest COMMITTED manifest strictly below `batchId` (replay
-    * safety: a retried batch never reads its own attempt's write — an
-    * uncommitted data dir has no manifest and is skipped). A MISSING
-    * labels root means "first batch"; any other filesystem failure
-    * propagates (the [[readPrunedIndex]] policy).
-    */
-  private def latestLabelManifest(spark: SparkSession, labelsDir: String,
-                                  batchId: Long): Option[(Long, LabelManifest)] = {
-    val base = new org.apache.hadoop.fs.Path(labelsDir)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(base)) return None
-    require(fs.getFileStatus(base).isDirectory,
-      s"label-state path $labelsDir exists but is not a directory")
-    fs.listStatus(base).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .map(_.getPath.getName.stripPrefix("batch=").toLong)
-      .filter(b => b < batchId &&
-        fs.exists(new org.apache.hadoop.fs.Path(
-          s"$labelsDir/batch=$b/$LABEL_MANIFEST")))
-      .sorted.lastOption
-      .map(b => (b, readLabelManifest(fs, labelsDir, b)))
-  }
-
-  private def readLabelManifest(fs: org.apache.hadoop.fs.FileSystem,
-                                labelsDir: String,
-                                batchId: Long): LabelManifest = {
-    val path = s"$labelsDir/batch=$batchId/$LABEL_MANIFEST"
-    val in = fs.open(new org.apache.hadoop.fs.Path(path))
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val lines = text.linesIterator.filter(_.nonEmpty).toSeq
-    // legacy-format detection (pre-r12 manifests had bare "<bucket> <owner>"
-    // lines, no L/D relation tag and no END terminator): fail with an
-    // explicit migration message, not a misleading "truncated" error
-    require(!(lines.nonEmpty &&
-        lines.forall(l => l.trim.split(" ").length == 2 &&
-          !l.startsWith("L ") && !l.startsWith("D ") && !l.startsWith("END "))),
+  // Headerless: the label manifest predates the format-version header.
+  // Pre-r12 manifests had bare "<bucket> <owner>" lines, no L/D relation
+  // tag and no END terminator: fail those with an explicit migration
+  // message, not a misleading "truncated" error.
+  private val LABEL_FORMAT = Manifests.Format("label-state", None,
+    Set("L", "D"), (path, lines) => require(!(lines.nonEmpty &&
+      lines.forall(l => l.trim.split(" ").length == 2 && !l.startsWith("L ") &&
+        !l.startsWith("D ") && !l.startsWith("END "))),
       s"manifest $path is in the legacy 2-field format (written by a " +
         "pre-docmap graft version): the label-state format migrated to " +
         "tagged L/D entries with an END terminator — rebuild the label " +
-        "state from the stream (delete the labels directory and replay)")
-    require(lines.nonEmpty && lines.last.startsWith("END "),
-      s"manifest $path is truncated (no END terminator)")
-    require(lines.size - 1 == lines.last.stripPrefix("END ").trim.toInt,
-      s"manifest $path entry count disagrees with its END terminator")
-    val parsed = lines.dropRight(1).map { l =>
-      val Array(rel, b, owner) = l.trim.split(" ")
-      (rel, b.toLong -> owner.toLong)
-    }
-    LabelManifest(parsed.collect { case ("L", e) => e }.toMap,
-      parsed.collect { case ("D", e) => e }.toMap)
+        "state from the stream (delete the labels directory and replay)"))
+
+  /** Commit a batch's label-state manifest, AFTER the bucket data. The
+    * ingest's own replay only ever re-publishes an IDENTICAL body, but the
+    * residue repair ([[exciseDocsFromClusterState]]) REWRITES the frontier
+    * manifest with a different one — hence the atomic overwrite of
+    * [[Manifests.publish]].
+    */
+  private def commitLabels(spark: SparkSession, labelsDir: String,
+                           batchId: Long, man: LabelManifest): Unit =
+    Manifests.write(spark.sessionState.newHadoopConf(), labelsDir,
+      batchId, LABEL_FORMAT,
+      man.labels.toSeq.sorted.map { case (b, o) =>
+        Manifests.Entry("L", b.toString, o.toString) } ++
+      man.docs.toSeq.sorted.map { case (b, o) =>
+        Manifests.Entry("D", b.toString, o.toString) })
+
+  private def labelManifest(entries: Seq[Manifests.Entry])
+      : LabelManifest = {
+    def rel(tag: String) = entries.filter(_.tag == tag)
+      .map(e => e.key.toLong -> e.value.toLong).toMap
+    LabelManifest(rel("L"), rel("D"))
   }
+
+  /** The newest COMMITTED label manifest strictly below `batchId`. */
+  private def latestLabelCommit(spark: SparkSession, labelsDir: String,
+                                batchId: Long): Option[(Long, LabelManifest)] =
+    Manifests.latest(spark.sessionState.newHadoopConf(),
+      labelsDir, batchId, LABEL_FORMAT)
+      .map { case (b, entries) => (b, labelManifest(entries)) }
 
   private def labelBucketPaths(labelsDir: String,
                                manifest: Map[Long, Long]): Seq[String] =
@@ -897,7 +827,7 @@ object Curation {
   def labelStateAt(spark: SparkSession, labelsDir: String,
                    batchId: Long): DataFrame =
     readLabelState(spark, labelsDir,
-      latestLabelManifest(spark, labelsDir,
+      latestLabelCommit(spark, labelsDir,
           if (batchId == Long.MaxValue) batchId else batchId + 1)
         .map(_._2.labels).getOrElse(Map.empty))
 
@@ -934,7 +864,7 @@ object Curation {
                                                     docIds: DataFrame,
                                                     below: Long = Long.MaxValue)
       : Unit = {
-    val manOpt = latestLabelManifest(spark, labelsDir, below)
+    val manOpt = latestLabelCommit(spark, labelsDir, below)
     if (manOpt.isEmpty) return
     val (frontier, man) = manOpt.get
     val ids = docIds.select("doc_id").distinct().persist()
@@ -983,13 +913,7 @@ object Curation {
       bucketSet(relab.select(bucketOf(col("cluster_id")).as("b")), "b")
     val carryPaths = labelBucketPaths(labelsDir,
       man.labels.filter(kv => touched.contains(kv._1)))
-    val gen = {
-      val existing = fs.listStatus(new org.apache.hadoop.fs.Path(labelsDir))
-        .toSeq.filter(s => s.isDirectory &&
-          s.getPath.getName.startsWith("batch="))
-        .map(_.getPath.getName.stripPrefix("batch=").toLong)
-      math.min(existing.min, 0L) - 1L
-    }
+    val gen = math.min(Manifests.batches(fs, labelsDir).min, 0L) - 1L
     val outL = readLabelPaths(spark, carryPaths)
       .join(oldRoots, Seq("cluster_id"), "left_anti")
       .select("doc_id", "cluster_id")
@@ -1016,7 +940,7 @@ object Curation {
     // 6. commit: the FRONTIER manifest atomically rewritten to own the
     // generation (touched-but-empty buckets drop — partitionBy writes no
     // directory for them)
-    writeLabelManifest(spark, labelsDir, frontier, LabelManifest(
+    commitLabels(spark, labelsDir, frontier, LabelManifest(
       (man.labels -- touched) ++ writtenL.map(_ -> gen),
       (man.docs -- touchedD) ++ writtenD.map(_ -> gen)))
     Seq(ids, compRows, oldRoots, members, relab, outL, docDelta, outD)
@@ -1391,19 +1315,15 @@ object Curation {
   def pruneLabelStates(spark: SparkSession, labelsDir: String,
                        keep: Int = 2): Unit = {
     require(keep >= 2, "keep >= 2: the newest state plus its replay anchor")
-    val base = new org.apache.hadoop.fs.Path(labelsDir)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(base)) return
-    val batches = fs.listStatus(base).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .map(_.getPath.getName.stripPrefix("batch=").toLong).sorted
-    val committed = batches.filter(b => fs.exists(
-      new org.apache.hadoop.fs.Path(s"$labelsDir/batch=$b/$LABEL_MANIFEST")))
+    val fs = new org.apache.hadoop.fs.Path(labelsDir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val batches = Manifests.batches(fs, labelsDir)
+    val committed = Manifests.committed(fs, labelsDir)
     if (committed.isEmpty) return
     val retained = committed.takeRight(keep)
     val live = retained.toSet ++
       retained.flatMap { b =>
-        val m = readLabelManifest(fs, labelsDir, b)
+        val m = labelManifest(Manifests.read(fs, labelsDir, b, LABEL_FORMAT))
         m.labels.values ++ m.docs.values
       }
     // never touch dirs AT or ABOVE the committed frontier: a manifest-less

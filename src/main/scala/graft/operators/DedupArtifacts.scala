@@ -27,7 +27,10 @@ import graft.sources.Tables
   */
 object DedupArtifacts {
 
-  private def artifactRoot: String =
+  /** Artifact root for catalog queries (driver/bench sessions). Lives under
+    * the build's target dir (gitignored) unless overridden.
+    */
+  private[operators] def artifactRoot: String =
     sys.env.getOrElse("GRAFT_ARTIFACT_DIR", "/root/repo/target/graft-artifacts")
 
   private val ARTIFACT_VERSION = 1

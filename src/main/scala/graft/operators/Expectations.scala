@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.sources.Tables
+import graft.store.Manifests
 
 /** Declarative data-quality expectations (the Deequ/dbt-test capability,
   * re-expressed Spark-first): a constraint suite evaluated against a table
@@ -300,8 +301,13 @@ object Expectations {
     require(lines.headOption.contains(GEN_HEADER),
       s"unknown keyed-audit gen marker format in $p: " +
         s"'${lines.headOption.getOrElse("")}' — migration needed")
-    val Array(g, c) = lines(1).split(" ")
-    Some((g.toLong, c.toLong))
+    val pointer = lines.drop(1)
+    pointer.map(_.split(" ").toSeq.map(_.toLongOption)) match {
+      case Seq(Seq(Some(g), Some(c))) => Some((g, c))
+      case _ => throw new IllegalArgumentException(s"malformed keyed-audit " +
+        s"gen marker $p: want one '<gen> <covered>' line after the header, " +
+        s"got ${pointer.mkString("[", "; ", "]")} — migration needed")
+    }
   }
 
   /** The batch ids a reader (or the compactor) may consume: without a
@@ -584,9 +590,8 @@ object Expectations {
     *  3. atomically publish `_GEN (gen, covered)` — the ONE commit
     *     point. Overwrite must be a true atomic swap (the round-13
     *     release-manifest lesson): a delete-then-rename window with NO
-    *     pointer would hide every consolidated generation from readers —
-    *     on file:// use nio ATOMIC_MOVE, elsewhere FileContext
-    *     rename(OVERWRITE) with the object-store fallback,
+    *     pointer would hide every consolidated generation from readers
+    *     ([[Manifests.publish]]),
     *  4. retire everything the pointer no longer names (stale leftovers
     *     from a crash here are invisible by the pointer rule and swept
     *     by the next pass).
@@ -604,34 +609,9 @@ object Expectations {
     fs.delete(genDir, true) // only ever a crashed unnamed attempt
     require(fs.rename(staging, genDir),
       s"could not move staged generation into $genDir")
-    val gp = new org.apache.hadoop.fs.Path(s"$store/$GEN_MARKER")
-    val gtmp = new org.apache.hadoop.fs.Path(s"$store/$GEN_MARKER.tmp")
-    val os = fs.create(gtmp, true)
-    try os.write(s"$GEN_HEADER\n$gen $covered\n".getBytes("UTF-8"))
-    finally os.close()
-    Seq(gp, gtmp).foreach(f => fs.delete(
-      new org.apache.hadoop.fs.Path(f.getParent, s".${f.getName}.crc"),
-      false))
-    val qp = fs.makeQualified(gp)
-    val conf = spark.sessionState.newHadoopConf()
-    if (qp.toUri.getScheme == "file")
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(fs.makeQualified(gtmp).toUri.getPath),
-        java.nio.file.Paths.get(qp.toUri.getPath),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    else
-      try
-        org.apache.hadoop.fs.FileContext.getFileContext(qp.toUri, conf)
-          .rename(fs.makeQualified(gtmp), qp,
-            org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      catch {
-        case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-          // object stores: no AbstractFileSystem binding — non-atomic
-          // fallback, documented loss (same caveat as writeManifest)
-          fs.delete(qp, false)
-          require(fs.rename(fs.makeQualified(gtmp), qp),
-            s"could not publish $gp after delete — pointer is missing")
-      }
+    Manifests.publish(spark.sessionState.newHadoopConf(),
+      new org.apache.hadoop.fs.Path(s"$store/$GEN_MARKER"),
+      s"$GEN_HEADER\n$gen $covered\n".getBytes("UTF-8"))
     allDirs.filter(b => b != gen && !(b >= 0 && b > covered))
       .foreach(b => fs.delete(
         new org.apache.hadoop.fs.Path(s"$store/batch=$b"), true))

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.store.Manifests
+
 /** Incremental release-export maintenance — the stream==batch twin of the
   * q132 composed release relation ([[Curation.releaseExport]]), the one
   * composed family that still rebuilt from scratch per call. A production
@@ -67,8 +69,9 @@ import org.apache.spark.sql.types.StructType
 object ReleaseStream {
 
   private val N_BUCKETS = 32L
-  private val MANIFEST = "_MANIFEST"
   private val HEADER = "GRAFT_RELEASE_MANIFEST v1"
+  private val FORMAT =
+    Manifests.Format("release state", Some(HEADER), Set("B"), (_, _) => ())
   private val PER_LANG = 20
   private val CONTAM_T = 100L
   private val CAP: Int = Prep.SOURCE_CAP
@@ -294,7 +297,7 @@ object ReleaseStream {
       : ReadPaths = {
     val spark = batch.sparkSession
     graft.functions.GraftFunctions.register(spark)
-    val prior = latestManifest(spark, root, batchId)
+    val prior = latestCommit(spark, root, batchId)
       .map(_._2).getOrElse(Map.empty[String, Seq[Long]])
     // the ingest gate: divert failing rows (NULL fails — the strict
     // q145/q146 semantics) to the bucketed quar store BEFORE the fold
@@ -376,7 +379,7 @@ object ReleaseStream {
       m + (k -> (m.getOrElse(k, Seq.empty[Long]) :+ batchId))
     }
     if (d.isEmpty) { // no clean rows: fold state unchanged, commit quar
-      writeManifest(spark, root, batchId, priorQ)
+      commit(spark, root, batchId, priorQ)
       d.unpersist()
       gatePersisted.foreach(_.unpersist())
       return ReadPaths(Nil, Nil, Nil, Nil)
@@ -544,7 +547,7 @@ object ReleaseStream {
           m2 + (k -> (m2.getOrElse(k, Seq.empty[Long]) :+ batchId))
         }
       } + ("tiny" -> Seq(batchId))
-    writeManifest(spark, root, batchId, man)
+    commit(spark, root, batchId, man)
     Seq(d, bsh, bmin, exCombined, flips, priorEvals, newEvals, priorEvalsh,
       newEvalsh, newSet, dSh, adj, affected, docOut, shOut, exOut, srcOut,
       capn, deltaSources, overDelta).foreach(_.unpersist())
@@ -571,7 +574,7 @@ object ReleaseStream {
   def releaseStateAt(spark: SparkSession, root: String,
                      batchId: Long): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    val manOpt = latestManifest(spark, root,
+    val manOpt = latestCommit(spark, root,
       if (batchId == Long.MaxValue) batchId else batchId + 1)
     if (manOpt.isEmpty) {
       // Never-committed root => legitimately empty state. But committed
@@ -579,7 +582,7 @@ object ReleaseStream {
       // compacted/pruned away — silently returning empty would make a
       // churn against that as-of report every document as 'absent' (a
       // plausible-looking wrong answer), so fail fast instead.
-      require(latestManifest(spark, root, Long.MaxValue).isEmpty,
+      require(latestCommit(spark, root, Long.MaxValue).isEmpty,
         s"release state $root has no committed manifest at or below batch " +
           s"$batchId, but later manifests exist — that history was " +
           "compacted or pruned away; read churn windows before compacting, " +
@@ -702,7 +705,7 @@ object ReleaseStream {
     */
   def keyedGatedReleaseState(spark: SparkSession, root: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    val manOpt = latestManifest(spark, root, Long.MaxValue)
+    val manOpt = latestCommit(spark, root, Long.MaxValue)
     if (manOpt.isEmpty) return emptyDf(spark, OUT_SCHEMA)
     val man = manOpt.get._2
     val quar = readOr(spark, manPaths(root, man, "quar"), QUAR_SCHEMA)
@@ -1245,14 +1248,12 @@ object ReleaseStream {
     */
   def compactReleaseState(spark: SparkSession, root: String,
                           below: Long = Long.MaxValue): Unit = {
-    val manOpt = latestManifest(spark, root, below)
+    val manOpt = latestCommit(spark, root, below)
     if (manOpt.isEmpty) return
     val (frontier, man) = manOpt.get
-    val base = new org.apache.hadoop.fs.Path(root)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    val batchIds = fs.listStatus(base).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .map(_.getPath.getName.stripPrefix("batch=").toLong)
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val batchIds = Manifests.batches(fs, root)
     val gen = math.min(batchIds.min, 0L) - 1L
     def live(store: String): Seq[String] = man.collect {
       case (k, owners) if k.startsWith(s"$store/") =>
@@ -1303,7 +1304,7 @@ object ReleaseStream {
       newMan += ("tiny" -> Seq(gen))
     }
     // THE PIVOT: rewrite the frontier manifest to own everything at `gen`
-    writeManifest(spark, root, frontier, newMan)
+    commit(spark, root, frontier, newMan)
     // delete-only prune of everything the new manifest no longer names:
     // prior batch data dirs, older generations, and the frontier's own
     // now-unreferenced store dirs (its manifest stays)
@@ -1353,17 +1354,14 @@ object ReleaseStream {
     if (!fs.exists(base))
       return Seq(("manifest", "error", s"state root $root does not exist"))
         .toDF("check", "severity", "detail")
-    val batchIds = fs.listStatus(base).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .map(_.getPath.getName.stripPrefix("batch=").toLong).sorted
-    val withMan = batchIds.filter(b =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$root/batch=$b/$MANIFEST")))
+    val batchIds = Manifests.batches(fs, root)
+    val withMan = Manifests.committed(fs, root)
     if (withMan.isEmpty)
       findings += (("manifest", "error", "no committed manifest under " + root))
     else {
       val frontier = withMan.max
       val man =
-        try Some(readManifest(fs, root, frontier))
+        try Some(owners(Manifests.read(fs, root, frontier, FORMAT)))
         catch { case e: IllegalArgumentException =>
           findings += (("manifest", "error", e.getMessage)); None
         }
@@ -1526,7 +1524,7 @@ object ReleaseStream {
     graft.functions.GraftFunctions.register(spark)
     def report(rows: (String, String, String)*): DataFrame =
       rows.toSeq.toDF("check", "severity", "detail")
-    val manOpt = latestManifest(spark, root, below)
+    val manOpt = latestCommit(spark, root, below)
     if (manOpt.isEmpty)
       return report(("refold", "info", s"no committed state under $root"))
     val (frontier, man) = manOpt.get
@@ -1756,11 +1754,9 @@ object ReleaseStream {
 
     // ---- 8. publish everything under one fresh negative generation,
     // then the frontier manifest, atomically, LAST
-    val base = new org.apache.hadoop.fs.Path(root)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    val gen = math.min(fs.listStatus(base).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .map(_.getPath.getName.stripPrefix("batch=").toLong).min, 0L) - 1L
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val gen = math.min(Manifests.batches(fs, root).min, 0L) - 1L
     docOut.repartition(col("dbkt")).write.mode("overwrite")
       .partitionBy("dbkt").parquet(s"$root/batch=$gen/doc")
     val docWritten = bucketVals(docOut.select(col("dbkt").as("b")))
@@ -1816,7 +1812,7 @@ object ReleaseStream {
       newMan = retarget(newMan, "sh", shBkts, shWritten)
     }
     newMan += ("tiny" -> Seq(gen))
-    writeManifest(spark, root, frontier, newMan)
+    commit(spark, root, frontier, newMan)
     // deliberately NO prune: the replaced leaves stay referenced by the
     // OLDER manifests, so as-of reads below the frontier keep working
     // (they show the PRE-repair state — the repair rewrites the present,
@@ -1859,7 +1855,7 @@ object ReleaseStream {
                                       batchKeys: DataFrame, batchId: Long,
                                       archive: DataFrame): Long = {
     graft.functions.GraftFunctions.register(spark)
-    val manOpt = latestManifest(spark, root, batchId)
+    val manOpt = latestCommit(spark, root, batchId)
     if (manOpt.isEmpty) return 0L
     val (frontier, man) = manOpt.get
     if (!man.contains("tiny")) return 0L
@@ -1924,111 +1920,17 @@ object ReleaseStream {
       .select(col("doc_id") +: others.map(c => col(s"__r.$c").as(c)): _*)
   }
 
-  /** Publish a manifest ATOMICALLY, including over an existing one. The
-    * overwrite case is load-bearing for [[compactReleaseState]]: its pivot
-    * REWRITES the frontier manifest with a different body, and the
-    * previous delete-then-rename protocol had a window with NO frontier
-    * manifest at all — a crash there made [[latestManifest]] silently
-    * resolve the prior batch (its data dirs still exist until prune), so
-    * the next stream fold would build on regressed state and drop the
-    * frontier batch's documents with no error. The swap must leave the
-    * path holding either the complete old or the complete new manifest at
-    * every instant: on `file://` that is `java.nio.Files.move` with
-    * `ATOMIC_MOVE` (the POSIX rename(2) overwrite); elsewhere it is
-    * `FileContext.rename(OVERWRITE)`, which HDFS implements as one atomic
-    * namenode op. (The generic `AbstractFileSystem` default for OVERWRITE
-    * is itself delete-then-rename — verified against hadoop-client 3.4.2,
-    * where `RawLocalFs` overrides only the 2-arg `renameInternal` — which
-    * is why the local path goes through nio and not FileContext.)
-    */
-  private def writeManifest(spark: SparkSession, root: String, batchId: Long,
-                            man: Map[String, Seq[Long]]): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(s"$root/batch=$batchId/$MANIFEST")
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"$root/batch=$batchId/$MANIFEST.tmp")
-    val fs = p.getFileSystem(conf)
-    fs.mkdirs(p.getParent) // an empty batch writes no data directory
-    val body = HEADER + "\n" +
+  private def commit(spark: SparkSession, root: String, batchId: Long,
+                     man: Map[String, Seq[Long]]): Unit =
+    Manifests.write(spark.sessionState.newHadoopConf(), root, batchId, FORMAT,
       man.toSeq.sortBy(_._1).map { case (k, owners) =>
-        s"B $k ${owners.mkString(",")}\n"
-      }.mkString +
-      s"END ${man.size}\n"
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-    // The checksummed local FileSystem writes `.<name>.crc` sidecars, but
-    // FileContext.rename below goes through the RAW filesystem and moves
-    // only the data file — drop both sidecars first or a post-rename read
-    // through the checksummed fs fails on the stale crc. (Deleting p's crc
-    // BEFORE the swap is safe: a missing sidecar just skips verification.)
-    Seq(p, tmp).foreach(f => fs.delete(
-      new org.apache.hadoop.fs.Path(f.getParent, s".${f.getName}.crc"),
-      false))
-    val qp = fs.makeQualified(p)
-    if (qp.toUri.getScheme == "file")
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(fs.makeQualified(tmp).toUri.getPath),
-        java.nio.file.Paths.get(qp.toUri.getPath),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    else
-      try
-        org.apache.hadoop.fs.FileContext.getFileContext(qp.toUri, conf)
-          .rename(fs.makeQualified(tmp), qp,
-            org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      catch {
-        case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-          // Object-store connectors (s3a, gs, abfs) register a FileSystem
-          // but no AbstractFileSystem, so FileContext cannot bind there.
-          // Fall back to delete+rename through the FileSystem API — NOT
-          // atomic (a crash between the two leaves no frontier manifest
-          // and latestManifest resolves the prior batch), which is the
-          // pre-round-14 behavior on exactly the stores that never offered
-          // an atomic rename anyway; HDFS and file:// keep the atomic swap.
-          fs.delete(qp, false)
-          if (!fs.rename(fs.makeQualified(tmp), qp))
-            sys.error(s"manifest publication failed: rename($tmp -> $qp) " +
-              "returned false after delete — frontier manifest is missing")
-      }
-  }
+        Manifests.Entry("B", k, owners.mkString(",")) })
 
-  private def latestManifest(spark: SparkSession, root: String,
-                             batchId: Long)
-      : Option[(Long, Map[String, Seq[Long]])] = {
-    val base = new org.apache.hadoop.fs.Path(root)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(base)) return None
-    require(fs.getFileStatus(base).isDirectory,
-      s"release state path $root exists but is not a directory")
-    fs.listStatus(base).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .map(_.getPath.getName.stripPrefix("batch=").toLong)
-      .filter(b => b < batchId &&
-        fs.exists(new org.apache.hadoop.fs.Path(
-          s"$root/batch=$b/$MANIFEST")))
-      .sorted.lastOption
-      .map(b => (b, readManifest(fs, root, b)))
-  }
+  private def owners(entries: Seq[Manifests.Entry]): Map[String, Seq[Long]] =
+    entries.map(e => e.key -> e.value.split(",").map(_.toLong).toSeq).toMap
 
-  private def readManifest(fs: org.apache.hadoop.fs.FileSystem,
-                           root: String, batchId: Long)
-      : Map[String, Seq[Long]] = {
-    val path = s"$root/batch=$batchId/$MANIFEST"
-    val in = fs.open(new org.apache.hadoop.fs.Path(path))
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val lines = text.linesIterator.filter(_.nonEmpty).toSeq
-    require(lines.nonEmpty && lines.head == HEADER,
-      s"manifest $path has no '$HEADER' header — unknown or future format," +
-        " rebuild the release state")
-    require(lines.last.startsWith("END "),
-      s"manifest $path is truncated (no END terminator)")
-    require(lines.size - 2 == lines.last.stripPrefix("END ").trim.toInt,
-      s"manifest $path entry count disagrees with its END terminator")
-    lines.drop(1).dropRight(1).map { l =>
-      val Array(tag, k, owners) = l.trim.split(" ")
-      require(tag == "B", s"manifest $path has unknown entry tag '$tag'")
-      k -> owners.split(",").map(_.toLong).toSeq
-    }.toMap
-  }
+  private def latestCommit(spark: SparkSession, root: String, below: Long)
+      : Option[(Long, Map[String, Seq[Long]])] =
+    Manifests.latest(spark.sessionState.newHadoopConf(), root, below, FORMAT)
+      .map { case (b, entries) => (b, owners(entries)) }
 }

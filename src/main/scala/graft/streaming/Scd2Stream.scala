@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.cdc.Envelope
+import graft.store.Manifests
 
 /** Streaming SCD2 maintenance — the q123 history relation kept current by
   * an incremental Structured Streaming fold instead of a per-call batch
@@ -41,11 +42,12 @@ import graft.cdc.Envelope
 object Scd2Stream {
 
   private val N_BUCKETS = 32L
-  private val MANIFEST = "_MANIFEST"
   // format-version header from day one: a future layout migration fails
   // with an explicit message instead of a parse error (the round-12
   // label-manifest lesson)
   private val HEADER = "GRAFT_SCD2_MANIFEST v1"
+  private val FORMAT =
+    Manifests.Format("SCD2 state", Some(HEADER), Set("B"), (_, _) => ())
   private val COLS = Seq("code", "libram", "valid_from_lsn",
     "valid_to_lsn", "is_current")
 
@@ -102,13 +104,12 @@ object Scd2Stream {
     val spark = batch.sparkSession
     val ev = Envelope.scd2Events(Envelope.parse(batch)).persist()
     try {
-      val priorMan = latestManifest(spark, scd2Dir, batchId)
-        .map(_._2).getOrElse(Map.empty[Long, Long])
+      val priorMan = latestOwners(spark, scd2Dir, batchId)
       // ≤32 bucket ids — bounded driver state, like the label-state fold
       val touched = ev.select(bucketOf(col("code")).as("b")).distinct()
         .collect().map(_.getLong(0)).toSet
       if (touched.isEmpty) { // empty batch: state unchanged, commit as-is
-        writeManifest(spark, scd2Dir, batchId, priorMan)
+        commit(spark, scd2Dir, batchId, priorMan)
         return Seq.empty
       }
       val readPaths = bucketPaths(scd2Dir,
@@ -140,7 +141,7 @@ object Scd2Stream {
       val written = out.select("kbkt").distinct()
         .collect().map(_.getLong(0)).toSet
       out.unpersist(); flagged.unpersist()
-      writeManifest(spark, scd2Dir, batchId,
+      commit(spark, scd2Dir, batchId,
         (priorMan -- touched) ++ written.map(_ -> batchId))
       readPaths
     } finally { ev.unpersist(); () }
@@ -152,9 +153,8 @@ object Scd2Stream {
     * [[Envelope.scd2Lookup]]).
     */
   def scd2State(spark: SparkSession, scd2Dir: String): DataFrame = {
-    val man = latestManifest(spark, scd2Dir, Long.MaxValue)
-      .map(_._2).getOrElse(Map.empty[Long, Long])
-    readState(spark, bucketPaths(scd2Dir, man))
+    readState(spark,
+      bucketPaths(scd2Dir, latestOwners(spark, scd2Dir, Long.MaxValue)))
       .orderBy("code", "valid_from_lsn")
   }
 
@@ -175,18 +175,14 @@ object Scd2Stream {
   def pruneScd2States(spark: SparkSession, scd2Dir: String,
                       keep: Int = 2): Unit = {
     require(keep >= 2, "keep >= 2: the newest state plus its replay anchor")
-    val base = new org.apache.hadoop.fs.Path(scd2Dir)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(base)) return
-    val batches = fs.listStatus(base).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .map(_.getPath.getName.stripPrefix("batch=").toLong).sorted
-    val committed = batches.filter(b => fs.exists(
-      new org.apache.hadoop.fs.Path(s"$scd2Dir/batch=$b/$MANIFEST")))
+    val fs = new org.apache.hadoop.fs.Path(scd2Dir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val batches = Manifests.batches(fs, scd2Dir)
+    val committed = Manifests.committed(fs, scd2Dir)
     if (committed.isEmpty) return
     val retained = committed.takeRight(keep)
-    val live = retained.toSet ++
-      retained.flatMap(b => readManifest(fs, scd2Dir, b).values)
+    val live = retained.toSet ++ retained.flatMap(b =>
+      owners(Manifests.read(fs, scd2Dir, b, FORMAT)).values)
     batches.filter(b => !live.contains(b) && b < committed.max).foreach(b =>
       fs.delete(new org.apache.hadoop.fs.Path(s"$scd2Dir/batch=$b"), true))
   }
@@ -201,59 +197,17 @@ object Scd2Stream {
         "id AS valid_from_lsn", "id AS valid_to_lsn", "id AS is_current")
     else spark.read.parquet(paths: _*).select(COLS.map(col): _*)
 
-  private def writeManifest(spark: SparkSession, scd2Dir: String,
-                            batchId: Long, man: Map[Long, Long]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(
-      s"$scd2Dir/batch=$batchId/$MANIFEST")
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"$scd2Dir/batch=$batchId/$MANIFEST.tmp")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.mkdirs(p.getParent) // an empty batch writes no data directory
-    val body = HEADER + "\n" +
-      man.toSeq.sorted.map { case (b, o) => s"B $b $o\n" }.mkString +
-      s"END ${man.size}\n"
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-    if (fs.exists(p)) fs.delete(p, false) // replayed batch: identical body
-    require(fs.rename(tmp, p), s"could not publish manifest $p")
-  }
+  private def commit(spark: SparkSession, scd2Dir: String, batchId: Long,
+                     man: Map[Long, Long]): Unit =
+    Manifests.write(spark.sessionState.newHadoopConf(), scd2Dir, batchId,
+      FORMAT, man.toSeq.sorted.map { case (b, o) =>
+        Manifests.Entry("B", b.toString, o.toString) })
 
-  private def latestManifest(spark: SparkSession, scd2Dir: String,
-                             batchId: Long): Option[(Long, Map[Long, Long])] = {
-    val base = new org.apache.hadoop.fs.Path(scd2Dir)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(base)) return None
-    require(fs.getFileStatus(base).isDirectory,
-      s"SCD2 state path $scd2Dir exists but is not a directory")
-    fs.listStatus(base).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .map(_.getPath.getName.stripPrefix("batch=").toLong)
-      .filter(b => b < batchId &&
-        fs.exists(new org.apache.hadoop.fs.Path(
-          s"$scd2Dir/batch=$b/$MANIFEST")))
-      .sorted.lastOption
-      .map(b => (b, readManifest(fs, scd2Dir, b)))
-  }
+  private def owners(entries: Seq[Manifests.Entry]): Map[Long, Long] =
+    entries.map(e => e.key.toLong -> e.value.toLong).toMap
 
-  private def readManifest(fs: org.apache.hadoop.fs.FileSystem,
-                           scd2Dir: String, batchId: Long): Map[Long, Long] = {
-    val path = s"$scd2Dir/batch=$batchId/$MANIFEST"
-    val in = fs.open(new org.apache.hadoop.fs.Path(path))
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val lines = text.linesIterator.filter(_.nonEmpty).toSeq
-    require(lines.nonEmpty && lines.head == HEADER,
-      s"manifest $path has no '$HEADER' header — unknown or future format," +
-        " rebuild the SCD2 state")
-    require(lines.last.startsWith("END "),
-      s"manifest $path is truncated (no END terminator)")
-    require(lines.size - 2 == lines.last.stripPrefix("END ").trim.toInt,
-      s"manifest $path entry count disagrees with its END terminator")
-    lines.drop(1).dropRight(1).map { l =>
-      val Array(tag, b, owner) = l.trim.split(" ")
-      require(tag == "B", s"manifest $path has unknown entry tag '$tag'")
-      b.toLong -> owner.toLong
-    }.toMap
-  }
+  private def latestOwners(spark: SparkSession, scd2Dir: String,
+                          below: Long): Map[Long, Long] =
+    Manifests.latest(spark.sessionState.newHadoopConf(), scd2Dir, below,
+      FORMAT).map(m => owners(m._2)).getOrElse(Map.empty)
 }

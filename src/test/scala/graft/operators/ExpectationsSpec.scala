@@ -355,14 +355,19 @@ class ExpectationsSpec extends AnyFunSuite {
       .createTempDirectory("graft-kaudit-gen").toString
     Expectations.keyedAuditIngestBatch(Seq(1L, 2L).toDF("id"), 0L, root,
       Seq.empty, uq, Seq.empty)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$root/key_id/_GEN"), "GARBAGE v9\n-1 0\n")
-    val e = intercept[IllegalArgumentException] {
-      Expectations.keyedAuditFromStore(spark, "t", root, Seq.empty, uq,
-        Seq.empty).collect()
+    // unknown header; header only; a one-field pointer line
+    for (gen <- Seq("GARBAGE v9\n-1 0\n", "GRAFT_KAUDIT_GEN v1\n",
+        "GRAFT_KAUDIT_GEN v1\n-1\n")) {
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"$root/key_id/_GEN"), gen)
+      val e = intercept[IllegalArgumentException] {
+        Expectations.keyedAuditFromStore(spark, "t", root, Seq.empty, uq,
+          Seq.empty).collect()
+      }
+      assert(e.getMessage.contains("migration") &&
+        e.getMessage.contains(s"$root/key_id/_GEN"),
+        s"torn/unknown pointer must fail fast naming the cause: ${e.getMessage}")
     }
-    assert(e.getMessage.contains("migration"),
-      s"torn/unknown pointer must fail fast naming the cause: ${e.getMessage}")
   }
 
   test("q141: the streaming corpus gate equals the batch q139 gate row " +

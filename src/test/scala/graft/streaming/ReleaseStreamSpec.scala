@@ -390,6 +390,14 @@ class ReleaseStreamSpec extends AnyFunSuite {
       ReleaseStream.releaseState(spark, root).collect()
     }
     assert(e2.getMessage.contains("truncated"))
+    // wrong field count on an entry line -> names the file and the line
+    rewrite(body.linesIterator.toSeq.patch(1, Seq("B doc/0"), 1)
+      .mkString("\n") + "\n")
+    val e3 = intercept[IllegalArgumentException] {
+      ReleaseStream.releaseState(spark, root).collect()
+    }
+    assert(e3.getMessage.contains(s"$root/batch=0/_MANIFEST") &&
+      e3.getMessage.contains("'B doc/0'"), e3.getMessage)
   }
 
   test("gated ingest: failing rows divert BEFORE the fold hashes them — " +
