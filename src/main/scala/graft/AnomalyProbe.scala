@@ -27,7 +27,8 @@ object AnomalyProbe {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PROBE_OUT", "/tmp/anomaly_probe")
     val spark = Sessions.localFromEnv(defaultCpus = "8", logLevel = "ERROR")
-    val root = ReleaseStream.ensureReleaseState(spark, sfDir)
+    val root = ReleaseStream.ensureScenarioState(spark, sfDir,
+      ReleaseStream.Scenarios.Base)
     val churn = ReleaseStream.releaseChurn(spark, root, prevBatch = 1L)
 
     def cells(rows: Seq[(String, String, Long, Long)]): Map[(String, String), (Long, Long)] =

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 import graft.store.Manifests
+import graft.operators.ReleaseStream.Scenarios
 
 /** The composed training-data curation pipeline: quality scoring ->
   * quality gate -> exact near-dup removal -> curated corpus. This is the
@@ -1672,30 +1673,21 @@ object Curation {
   }
 
   /** The deterministic RE-CRAWLED corpus multiset for the q159/q160
-    * family, tagged with `rc` (0 = the base corpus, 1 = the re-crawl
-    * wave): every base document, plus IDENTICAL re-crawl copies of the
+    * family: every base document, plus IDENTICAL re-crawl copies of the
     * `doc_id % 7 == 3` docs (cross-batch duplicate keys — the Unique
     * gate's case), plus `doc_id % 11 == 5` docs re-keyed at
     * `doc_id + 1000000` (late crawl docs no embedding references — the
-    * RefIn gate's case). Cross-engine reproducible by construction
-    * (the shiftedEmbeddings planting convention).
+    * RefIn gate's case). The two re-crawl waves are the shared scenario
+    * waves ([[ReleaseStream.Scenarios]]), so q160's fold ingests exactly
+    * this multiset.
     */
-  private[graft] def recrawledCorpusTagged(spark: SparkSession,
-                                           sfDir: String): DataFrame = {
+  private[graft] def recrawledCorpus(spark: SparkSession,
+                                     sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
       .select("doc_id", "text", "lang", "source", "n_chars")
-    docs.withColumn("rc", lit(0L))
-      .unionByName(docs.filter(pmod(col("doc_id"), lit(7L)) === 3)
-        .withColumn("rc", lit(1L)))
-      .unionByName(docs.filter(pmod(col("doc_id"), lit(11L)) === 5)
-        .withColumn("doc_id", col("doc_id") + lit(1000000L))
-        .withColumn("rc", lit(1L)))
+    docs.unionByName(Scenarios.Copies7(docs))
+      .unionByName(Scenarios.Late11(docs))
   }
-
-  /** [[recrawledCorpusTagged]] as the plain physical-row multiset. */
-  private[graft] def recrawledCorpus(spark: SparkSession,
-                                     sfDir: String): DataFrame =
-    recrawledCorpusTagged(spark, sfDir).drop("rc")
 
   /** q159: the diverted release export under the COMPLETE q152 rule
     * suite — [[divertedReleaseExport]] extended with the keyed classes,
@@ -2390,7 +2382,7 @@ object Curation {
     // oracle shared VERBATIM with q154 — stream==batch is the contract.
     "q155_streaming_diverted_release" -> ((s, d) =>
       ReleaseStream.releaseState(s,
-        ReleaseStream.ensureGatedReleaseState(s, d))),
+        ReleaseStream.ensureScenarioState(s, d, Scenarios.Gated))),
 
     // Q165: the FINAL-VERDICT REFOLD — the q155 gated fold hit by a
     // corrupting re-crawl wave (doc_id % 13 == 4 re-arrives with NULL
@@ -2403,7 +2395,7 @@ object Curation {
     // cascade equivalence.
     "q165_refolded_release" -> ((s, d) =>
       ReleaseStream.releaseState(s,
-        ReleaseStream.ensureRefoldedReleaseState(s, d))),
+        ReleaseStream.ensureScenarioState(s, d, Scenarios.Refolded))),
 
     // Q166: q165 driven END TO END by the coded policies — the gated
     // ingest tees its own crawl archive (`archiveDir`) and repairs on a
@@ -2414,7 +2406,8 @@ object Curation {
     // statement over the final corpus + the late wave.
     "q166_policy_refolded_release" -> ((s, d) =>
       ReleaseStream.releaseState(s,
-        ReleaseStream.ensurePolicyRefoldedReleaseState(s, d))),
+        ReleaseStream.ensureScenarioState(s, d,
+          Scenarios.PolicyRefolded))),
 
     // Q167: RE-CRAWL UPDATE SEMANTICS — the gated ingest with
     // `updateKeys`: a re-arrived doc's whole first-version cascade
@@ -2428,7 +2421,7 @@ object Curation {
     // corpus.
     "q167_updated_release" -> ((s, d) =>
       ReleaseStream.releaseState(s,
-        ReleaseStream.ensureUpdatedReleaseState(s, d))),
+        ReleaseStream.ensureScenarioState(s, d, Scenarios.Updated))),
 
     // Q168: the SELF-MAINTAINING ingest — every coded policy composed
     // on one root (archive tee, compact-every-K retention,
@@ -2440,7 +2433,8 @@ object Curation {
     // q154's statement over the final corpus.
     "q168_self_maintaining_release" -> ((s, d) =>
       ReleaseStream.releaseState(s,
-        ReleaseStream.ensureSelfMaintainingReleaseState(s, d))),
+        ReleaseStream.ensureScenarioState(s, d,
+          Scenarios.SelfMaintaining))),
 
     // Q171: ARCHIVE RETENTION — the crawl archive was round 17's new
     // unbounded-growth store (one dir per batch, forever); the
@@ -2451,7 +2445,7 @@ object Curation {
     // statement VERBATIM (retention must not move a single output row).
     "q171_archived_release" -> ((s, d) =>
       ReleaseStream.releaseState(s,
-        ReleaseStream.ensureArchivedReleaseState(s, d))),
+        ReleaseStream.ensureScenarioState(s, d, Scenarios.Archived))),
 
     // Q169: UPDATE CHURN — "what did the re-crawl change in the
     // release?": the q135 churn diff across the q167 update wave. Both
@@ -2469,8 +2463,10 @@ object Curation {
     // noise.
     "q169_update_churn" -> ((s, d) =>
       ReleaseStream.releaseChurnFrom(
-        s.read.parquet(ReleaseStream.ensureUpdatedReleaseExport(s, d)),
-        s.read.parquet(ReleaseStream.ensureGatedReleaseExport(s, d)))),
+        s.read.parquet(
+          ReleaseStream.ensureScenarioExport(s, d, Scenarios.Updated)),
+        s.read.parquet(
+          ReleaseStream.ensureScenarioExport(s, d, Scenarios.Gated)))),
 
     // Q170: the update wave's transition matrix — q136's rollup over
     // the q169 churn relation (per (prev_stage → stage) edge, docs
@@ -2479,8 +2475,10 @@ object Curation {
     // published-export inputs as q169 (the q136 routing).
     "q170_update_churn_stats" -> ((s, d) =>
       ReleaseStream.releaseChurnStats(ReleaseStream.releaseChurnFrom(
-        s.read.parquet(ReleaseStream.ensureUpdatedReleaseExport(s, d)),
-        s.read.parquet(ReleaseStream.ensureGatedReleaseExport(s, d))))),
+        s.read.parquet(
+          ReleaseStream.ensureScenarioExport(s, d, Scenarios.Updated)),
+        s.read.parquet(
+          ReleaseStream.ensureScenarioExport(s, d, Scenarios.Gated))))),
 
     // Q159: the diverted release under the COMPLETE q152 rule suite
     // (scalar + unique:doc_id + ref:doc_id->embeddings.vec_id) over the
@@ -2504,7 +2502,7 @@ object Curation {
     // VERBATIM with q159 — stream==batch is the contract.
     "q160_streaming_keyed_diverted_release" -> ((s, d) =>
       ReleaseStream.keyedGatedReleaseState(s,
-        ReleaseStream.ensureKeyedGatedReleaseState(s, d))),
+        ReleaseStream.ensureScenarioState(s, d, Scenarios.KeyedGated))),
 
     // Q158: the release export gated by the DRIFT rule alone (see
     // [[Expectations.corpusDriftGate]] / [[gatedReleaseExport]]) — the
@@ -2549,7 +2547,8 @@ object Curation {
     // oracle — q132's SQL verbatim — proves the fold converged to the
     // batch semantics at every scale.
     "q134_release_incremental" -> ((s, d) =>
-      ReleaseStream.releaseState(s, ReleaseStream.ensureReleaseState(s, d))),
+      ReleaseStream.releaseState(s,
+        ReleaseStream.ensureScenarioState(s, d, Scenarios.Base))),
 
     // Q135: release churn — the docs whose stage or mixture weight moved
     // when the LAST residue batch landed on the incrementally-maintained

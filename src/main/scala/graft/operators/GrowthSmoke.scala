@@ -186,8 +186,8 @@ object GrowthSmoke {
     // inside the ingest itself — no manual compaction call anywhere in
     // this loop; the batch-5 dirs_on_disk drop is the policy firing
     (1 to 6).foreach { b =>
-      val (paths, tRel) = timed(ReleaseStream.releaseIngestWithPolicy(
-        relDelta(b), b.toLong, relDir, compactEvery = 5))
+      val (paths, tRel) = timed(ReleaseStream.releaseIngestBatch(
+        relDelta(b), b.toLong, relDir, IngestPolicy(compactEvery = 5)))
       println(f"[growth-release] batch=$b%2d ex_dirs_read=${paths.ex.size}%3d " +
         f"sh_dirs_read=${paths.sh.size}%3d doc_dirs_read=${paths.doc.size}%3d " +
         f"src_dirs_read=${paths.src.size}%3d dirs_on_disk=${relDirsOnDisk()}%4d " +

@@ -7,6 +7,92 @@ import org.apache.spark.sql.types.StructType
 
 import graft.store.Manifests
 
+/** How the release ingest ([[ReleaseStream.releaseIngestBatch]], and
+  * [[ReleaseStream.streamingReleaseIngest]] per micro-batch) gates its
+  * input and maintains itself. The default is the plain ungated fold.
+  * Each cadence K fires on every batch with `batchId > 0 &&
+  * batchId % K == 0` (0 disables), BEFORE that batch's own fold and
+  * bounded strictly below its own id: a replayed policy batch re-runs
+  * its maintenance against the frontier its first attempt saw (a no-op,
+  * readout-preserving) and re-folds deterministically on top —
+  * spec-pinned by replaying the policy batch itself.
+  *
+  * @param compactEvery every K-th batch runs
+  *   [[ReleaseStream.compactReleaseState]], so the per-bucket owner lists
+  *   (and with them each fold's read fan-out) stay bounded at ~K without
+  *   a maintenance window. Compacting AFTER the fold would prune the
+  *   manifests a replay of the current batch still resolves (a crash
+  *   between foreachBatch returning and the checkpoint commit replays
+  *   batch N, which reads strictly below N); an UNBOUNDED
+  *   compact-then-fold would pivot a replayed policy batch's own
+  *   first-attempt manifest, deleting the replay anchor.
+  * @param gateChecks non-empty gates the ingest: a row failing a scalar
+  *   expectation (NULL fails) diverts to the bucketed `quar` store
+  *   before the fold hashes it, so it never enters the exact-hash
+  *   minima, the cluster index, the eval tournament or the cap ranks
+  *   (q150's precedence). The readout emits diverted rows as
+  *   `stage='quarantined'` with a doc_id-keyed split and zero mixture
+  *   weight — equal to [[Curation.divertedReleaseExport]] over
+  *   everything ingested.
+  * @param gateUnique the second-and-later COPIES of a doc_id divert. A
+  *   key is claimed once a copy folds (the fact store is the claim set,
+  *   probed by the batch keys' buckets); a diverted copy claims nothing,
+  *   so a later clean re-crawl of a dirty doc still folds. Within a
+  *   batch copies rank by (dirty, phash60(text)). Copies equally clean
+  *   but textually different resolve by arrival order across batches
+  *   (the fold cannot re-rank folded history) — the honest bound of
+  *   [[ReleaseStream.keyedGatedReleaseState]], the readout for such roots.
+  * @param gateRefs a row whose `col` has no match in the reference
+  *   stream's accumulated key store diverts (NULL fails). The store is
+  *   read at the batch's own frontier, so a replay re-reads the same
+  *   reference set; a reference arriving after its fact does not
+  *   retro-fold the diverted row (ingest-time verdicts stand).
+  * @param archiveDir tees every batch's input rows to
+  *   `archiveDir/batch=<id>` first (replay-overwritten): the crawl
+  *   archive the refold and the update excision read is maintained by
+  *   the ingest itself, not promised by a caller.
+  * @param refoldEvery every K-th batch runs the final-verdict repair
+  *   ([[ReleaseStream.refoldQuarResidue]]) against the archive. Between
+  *   firings fresh flips accumulate as residue (the deep fsck counts
+  *   it): K trades repair latency against repair frequency as
+  *   `compactEvery` trades read fan-out against write amplification.
+  * @param updateKeys re-crawl UPDATE semantics: a batch key already
+  *   holding fact rows has its earlier version's whole cascade footprint
+  *   excised before the fold ([[ReleaseStream.exciseRearrivals]]), so
+  *   the latest version REPLACES in-line. The excision reads the stale
+  *   texts from the archive; `gateUnique`'s claims make later copies
+  *   DIVERT instead, so the two exclude each other.
+  * @param archiveEvery every K-th batch consolidates the archive's
+  *   per-batch dirs, which the tee otherwise grows by one per batch
+  *   forever. Row-preserving: repairs and excisions keep reading every
+  *   archived version, the as-of cut moving from dir names to the rows'
+  *   own `ver`.
+  */
+final case class IngestPolicy(compactEvery: Int = 0,
+                              gateChecks: Seq[Expectations.Check] = Nil,
+                              gateUnique: Boolean = false,
+                              gateRefs: Seq[Expectations.RefStream] = Nil,
+                              archiveDir: Option[String] = None,
+                              refoldEvery: Int = 0,
+                              updateKeys: Boolean = false,
+                              archiveEvery: Int = 0) {
+  require(compactEvery >= 0, "compactEvery: 0 disables, else every K batches")
+  require(refoldEvery >= 0, "refoldEvery: 0 disables, else every K batches")
+  require(archiveEvery >= 0, "archiveEvery: 0 disables, else every K batches")
+  require(refoldEvery == 0 || archiveDir.isDefined,
+    "refoldEvery needs archiveDir: the repair reads residue texts from " +
+      "the ingest-maintained crawl archive")
+  require(archiveEvery == 0 || archiveDir.isDefined,
+    "archiveEvery compacts the crawl archive — it needs archiveDir")
+  require(!updateKeys || archiveDir.isDefined,
+    "updateKeys needs archiveDir: the excision reads a re-arrived " +
+      "doc's stale version texts from the ingest-maintained crawl archive")
+  require(!(updateKeys && gateUnique),
+    "updateKeys (re-crawl updates: latest version REPLACES) and " +
+      "gateUnique (first-writer-wins key claims: later copies DIVERT) " +
+      "are mutually exclusive key policies for one ingest")
+}
+
 /** Incremental release-export maintenance — the stream==batch twin of the
   * q132 composed release relation ([[Curation.releaseExport]]), the one
   * composed family that still rebuilt from scratch per call. A production
@@ -101,162 +187,21 @@ object ReleaseStream {
                                       doc: Seq[String], src: Seq[String])
 
   /** The long-running ingest: document batches (`doc_id, source, lang,
-    * text`) → incrementally maintained release state under `root`.
-    *
-    * `compactEvery` > 0 turns the SCALING.md retention rationale into
-    * CODE: every K-th batch runs [[compactReleaseState]] automatically,
-    * so the per-bucket owner lists (and with them each fold's read
-    * fan-out) stay bounded at ~K without a maintenance window ever
-    * calling compaction by hand. The policy fires BEFORE the batch's own
-    * fold, pivoting only state STRICTLY BELOW the current batch id:
-    * compacting after the fold would prune the manifests a replay of the
-    * CURRENT batch still resolves (a crash between foreachBatch
-    * returning and the checkpoint commit replays batch N, which reads
-    * strictly below N), and an UNBOUNDED compact-then-fold has the same
-    * hazard one step later — a replayed policy batch's own first-attempt
-    * manifest is the newest, so pivoting it would delete the replay
-    * anchor. Bounding the pivot at the batch's own id closes both: a
-    * replayed batch re-compacts the same frontier its first attempt
-    * compacted (readout-preserving, so the re-fold is content-identical)
-    * — spec-pinned by replaying the policy batch itself.
-    */
-  /** `gateChecks` non-empty GATES the ingest (round-16 rung): each
-    * micro-batch routes through the scalar expectations FIRST — a
-    * failing row is diverted to the bucketed `quar` store before the
-    * fold ever hashes it (never entering the exact-hash minima, the
-    * cluster index, the eval tournament or the cap ranks — the
-    * precedence q150's doc states), and only the clean rows fold. The
-    * readout then emits the diverted rows as `stage='quarantined'` with
-    * a doc_id-keyed split and zero mixture weight, equal to the batch
-    * [[Curation.divertedReleaseExport]] over everything ingested
-    * (stream==batch spec-pinned with planted dirty rows + replay).
-    *
-    * `gateUnique`/`gateRefs` extend the gate to the KEYED rule classes
-    * (round-17 rung — the q152 complete-route semantics at the ingest):
-    *
-    *  - `gateUnique`: the second-and-later COPIES of a duplicated
-    *    doc_id divert. Cross-batch, a key is CLAIMED once a copy folds
-    *    (the fact store is the claim set — probed by the batch keys'
-    *    buckets, the `ex`-store idiom; a diverted copy claims nothing,
-    *    so a later clean re-crawl of a dirty doc still folds — the
-    *    cleanest-copy-folds rule). Within a batch, copies rank by
-    *    (dirty, phash60(text)) and only the best folds. Copies of one
-    *    key that are equally clean but textually different resolve by
-    *    arrival order across batches (the fold cannot re-rank folded
-    *    history) — the stream==batch contract covers copies that are
-    *    identical or differ in dirtiness, the honest bound documented
-    *    at [[keyedGatedReleaseState]].
-    *  - `gateRefs`: a row whose `col` has no match in the reference
-    *    stream's accumulated key store diverts (NULL fails). The store
-    *    is read at the fact batch's own frontier (below batchId+1), so
-    *    a replayed batch re-reads the same reference set; a reference
-    *    arriving AFTER its fact does not retro-fold the diverted row
-    *    (ingest-time verdicts stand — the fold's general LWW posture,
-    *    spec-pinned).
-    *
-    * Both are decided BEFORE the fold hashes anything, so a diverted
-    * copy never perturbs exact minima, clusters, eval or caps. Read a
-    * keyed-gated root with [[keyedGatedReleaseState]] (per-copy
-    * accounting), not [[releaseState]].
-    */
-  /** `archiveDir`/`refoldEvery` (round-17 second wave) make the refold a
-    * CODED POLICY: with `archiveDir` set, every micro-batch TEEs its
-    * input rows to `archiveDir/batch=<id>` (the crawl archive as an
-    * ingest-owned, replay-overwritten store — the coverage contract
-    * [[refoldQuarResidue]] requires is now maintained by the ingest
-    * itself, not promised by a caller); with `refoldEvery` K > 0, every
-    * K-th batch runs the final-verdict repair BEFORE its own fold,
-    * bounded strictly below its own id — the [[compactReleaseState]]
-    * replay rule: a replayed policy batch re-repairs the same frontier
-    * its first attempt repaired (a no-op) and re-folds deterministically
-    * on top. Between policy firings, fresh flips accumulate as residue
-    * (the deep fsck surfaces the count) — K trades repair latency
-    * against repair frequency exactly like `compactEvery` trades read
-    * fan-out against write amplification. `updateKeys` (round-17 third
-    * wave) switches the ingest to RE-CRAWL UPDATE semantics: a batch
-    * key already holding fact rows has its earlier version's whole
-    * cascade footprint excised BEFORE the fold ([[exciseRearrivals]]),
-    * so the latest version REPLACES in-line — mutually exclusive with
-    * `gateUnique`, whose claims make later copies DIVERT instead.
+    * text`) → incrementally maintained release state under `root`, each
+    * micro-batch run through [[releaseIngestBatch]] under `policy`.
     */
   def streamingReleaseIngest(docs: DataFrame, root: String,
-                             checkpoint: String, compactEvery: Int = 0,
-                             gateChecks: Seq[Expectations.Check] = Nil,
-                             gateUnique: Boolean = false,
-                             gateRefs: Seq[Expectations.RefStream] = Nil,
-                             archiveDir: Option[String] = None,
-                             refoldEvery: Int = 0,
-                             updateKeys: Boolean = false,
-                             archiveEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(compactEvery >= 0, "compactEvery: 0 disables, else every K batches")
+                             checkpoint: String,
+                             policy: IngestPolicy = IngestPolicy())
+      : org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        releaseIngestWithPolicy(batch, batchId, root, compactEvery,
-          gateChecks, gateUnique, gateRefs, archiveDir, refoldEvery,
-          updateKeys, archiveEvery)
+        releaseIngestBatch(batch, batchId, root, policy)
         ()
       }
       .start()
-  }
-
-  /** [[releaseIngestBatch]] under the compact-every-K retention policy
-    * and the refold-every-K repair policy (factored out so the growth
-    * smoke and replay specs drive the POLICIES themselves, not
-    * hand-placed maintenance calls).
-    */
-  private[graft] def releaseIngestWithPolicy(batch: DataFrame, batchId: Long,
-                                             root: String,
-                                             compactEvery: Int,
-                                             gateChecks: Seq[Expectations.Check] = Nil,
-                                             gateUnique: Boolean = false,
-                                             gateRefs: Seq[Expectations.RefStream] = Nil,
-                                             archiveDir: Option[String] = None,
-                                             refoldEvery: Int = 0,
-                                             updateKeys: Boolean = false,
-                                             archiveEvery: Int = 0)
-      : ReadPaths = {
-    require(refoldEvery == 0 || archiveDir.isDefined,
-      "refoldEvery needs archiveDir: the repair reads residue texts from " +
-        "the ingest-maintained crawl archive")
-    require(archiveEvery == 0 || archiveDir.isDefined,
-      "archiveEvery compacts the crawl archive — it needs archiveDir")
-    require(!updateKeys || archiveDir.isDefined,
-      "updateKeys needs archiveDir: the excision reads a re-arrived " +
-        "doc's stale version texts from the ingest-maintained crawl archive")
-    require(!(updateKeys && gateUnique),
-      "updateKeys (re-crawl updates: latest version REPLACES) and " +
-        "gateUnique (first-writer-wins key claims: later copies DIVERT) " +
-        "are mutually exclusive key policies for one ingest")
-    val spark = batch.sparkSession
-    // the archive tee, FIRST (deterministic overwrite keyed by the
-    // checkpointed batchId — the store convention; a replayed batch
-    // rewrites its own dir byte-for-byte)
-    archiveDir.foreach { ad =>
-      batch.withColumn("ver", lit(batchId))
-        .write.mode("overwrite").parquet(s"$ad/batch=$batchId")
-    }
-    // archive retention: the tee otherwise accumulates one dir per
-    // batch forever (the small-files problem the store compactors exist
-    // for, re-created on the archive). Row-preserving consolidation —
-    // repairs and excisions keep reading every archived VERSION, the
-    // as-of cut moves from directory names to the rows' own `ver`.
-    if (archiveEvery > 0 && batchId > 0 && batchId % archiveEvery == 0)
-      Curation.compactFlatBatchStore(spark, archiveDir.get,
-        upToBatch = batchId)
-    if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-      compactReleaseState(spark, root, below = batchId)
-    if (refoldEvery > 0 && batchId > 0 && batchId % refoldEvery == 0)
-      refoldQuarResidue(spark, root,
-        readArchive(spark, archiveDir.get, below = batchId),
-        below = batchId)
-    if (updateKeys)
-      exciseRearrivals(spark, root, batch.select("doc_id"), batchId,
-        readArchive(spark, archiveDir.get, below = batchId))
-    releaseIngestBatch(batch, batchId, root, gateChecks, gateUnique, gateRefs)
-  }
 
   /** The ingest-maintained crawl archive below a batch cutoff —
     * `(doc_id, ver, text, ...)` rows of every batch the stream
@@ -283,19 +228,41 @@ object ReleaseStream {
       .filter(col("ver") < below)
   }
 
-  /** One micro-batch of the fold (the foreachBatch body, factored out so
-    * replay/equality specs and the q134 artifact build drive it
-    * directly). No arrival-order assumption: a later batch carrying a
-    * SMALLER doc_id than a stored hash keeper flips that keeper to
-    * `exact` — the general rule, spec-pinned with an out-of-order batch.
+  /** One micro-batch of the ingest (the foreachBatch body, factored out
+    * so replay/equality specs, the scenario builder and the growth smoke
+    * drive it — and the policies — directly): the `policy`'s archive tee
+    * and due maintenance first, then the fold. No arrival-order
+    * assumption: a later batch carrying a SMALLER doc_id than a stored
+    * hash keeper flips that keeper to `exact` — the general rule,
+    * spec-pinned with an out-of-order batch.
     */
   private[graft] def releaseIngestBatch(batch: DataFrame, batchId: Long,
                                         root: String,
-                                        gateChecks: Seq[Expectations.Check] = Nil,
-                                        gateUnique: Boolean = false,
-                                        gateRefs: Seq[Expectations.RefStream] = Nil)
+                                        policy: IngestPolicy = IngestPolicy())
       : ReadPaths = {
+    import policy.{gateChecks, gateRefs, gateUnique}
     val spark = batch.sparkSession
+    def due(every: Int): Boolean =
+      every > 0 && batchId > 0 && batchId % every == 0
+    // the archive tee, FIRST (deterministic overwrite keyed by the
+    // checkpointed batchId — the store convention; a replayed batch
+    // rewrites its own dir byte-for-byte)
+    policy.archiveDir.foreach { ad =>
+      batch.withColumn("ver", lit(batchId))
+        .write.mode("overwrite").parquet(s"$ad/batch=$batchId")
+    }
+    if (due(policy.archiveEvery))
+      Curation.compactFlatBatchStore(spark, policy.archiveDir.get,
+        upToBatch = batchId)
+    if (due(policy.compactEvery))
+      compactReleaseState(spark, root, below = batchId)
+    if (due(policy.refoldEvery))
+      refoldQuarResidue(spark, root,
+        readArchive(spark, policy.archiveDir.get, below = batchId),
+        below = batchId)
+    if (policy.updateKeys)
+      exciseRearrivals(spark, root, batch.select("doc_id"), batchId,
+        readArchive(spark, policy.archiveDir.get, below = batchId))
     graft.functions.GraftFunctions.register(spark)
     val prior = latestCommit(spark, root, batchId)
       .map(_._2).getOrElse(Map.empty[String, Seq[Long]])
@@ -767,294 +734,158 @@ object ReleaseStream {
         Dedup.hashSplitOf(coalesce(col("cluster_id"), col("doc_id"))))
   }
 
-  /** Build-once release-state artifact for the q134 catalog entry: the
-    * corpus folded in as three doc_id-residue batches (interleaved ids —
-    * every batch is an out-of-order arrival, so the general flip rules
-    * are exercised at every scale), content-keyed on the corpus text.
-    * What q134 then measures per call is the production export job: the
-    * READOUT off incrementally-maintained state — while its oracle
-    * (q132's SQL, verbatim) proves the fold converged to the batch
-    * semantics at every scale.
+  /** One batch's share of a scenario corpus: the rows matching `rows`,
+    * with `edits` (column -> new value) applied in order. A re-crawl
+    * wave nulls or changes text, or re-keys docs; the oracles plant the
+    * same waves in SQL, so every scenario is cross-engine reproducible.
     */
-  private[graft] def ensureReleaseState(spark: SparkSession,
-                                        sfDir: String): String =
-    DedupArtifacts.cachedDir(s"$sfDir|relstream") {
-      val docs = graft.sources.Tables.documents(spark, sfDir)
-      val key = DedupArtifacts.corpusKey(docs.select("doc_id", "text"),
-        "relstream") +
-        s"|cap=$CAP|pl=$PER_LANG|ct=$CONTAM_T|t=$THRESHOLD|nb=3|v=2|lay=1f"
-      DedupArtifacts.ensureTree(key) { dir =>
-        (0L until 3L).foreach { b =>
-          releaseIngestBatch(docs.filter(pmod(col("doc_id"), lit(3L)) === b),
-            b, dir)
-        }
+  private[graft] final case class Wave(rows: Column,
+                                       edits: Seq[(String, Column)] = Nil) {
+    def apply(docs: DataFrame): DataFrame =
+      edits.foldLeft(docs.filter(rows)) { case (d, (c, v)) =>
+        d.withColumn(c, v)
       }
-    }
+  }
 
-  /** Build-once GATED release-state artifact for the q155 catalog entry:
-    * the same three doc_id-residue batches as [[ensureReleaseState]],
-    * folded through the INGEST GATE (`gateChecks` = the q139 document
-    * rules) — failing rows divert to the quar store per micro-batch and
-    * only the clean rows fold. The readout's oracle is q154's SQL: the
-    * stream==batch contract for the diverted semantics.
+  /** A release-state artifact: the documents folded batch by batch (each
+    * batch the union of its waves) under `policy(tree dir)`, built once
+    * per content key — the corpus key of `keyCorpus` plus `keySuffix`.
+    * `suffix` is a literal, bumped by hand when the scenario's output
+    * can change (ScenarioKeySpec pins every suffix). Optional extras:
+    * `refWaves(b)` of the embeddings stream lands in the keyed-audit
+    * reference store before fact batch b (the paired-ingest convention);
+    * `refoldAtEnd` repairs the quarantine residue against the whole
+    * ingested input; `compactAtEnd` runs the retention window once the
+    * stream has quiesced.
     */
-  private[graft] def ensureGatedReleaseState(spark: SparkSession,
-                                             sfDir: String): String =
-    DedupArtifacts.cachedDir(s"$sfDir|relstreamgated") {
+  private[graft] final case class Scenario(
+      tag: String, suffix: String, batches: Seq[Seq[Wave]],
+      policy: String => IngestPolicy = _ => IngestPolicy(),
+      keyCorpus: (SparkSession, String) => DataFrame =
+        graft.sources.Tables.documents,
+      refWaves: Seq[Wave] = Nil,
+      refoldAtEnd: Boolean = false,
+      compactAtEnd: Boolean = false) {
+    /** The readout constants, then the scenario's own literal. */
+    def keySuffix: String =
+      s"|cap=$CAP|pl=$PER_LANG|ct=$CONTAM_T|t=$THRESHOLD" + suffix
+  }
+
+  private def refRoot(dir: String): String = s"$dir/refembs"
+
+  /** The catalog's release-state scenarios and the waves they share. */
+  private[graft] object Scenarios {
+    private def residue(key: String, m: Long, r: Long): Column =
+      pmod(col(key), lit(m)) === r
+    /** Interleaved `key`-residue thirds: every batch is an out-of-order
+      * arrival, so the general flip rules run at every scale.
+      */
+    private def thirds(key: String): Seq[Wave] =
+      (0L until 3L).map(b => Wave(residue(key, 3L, b)))
+    private val Thirds = thirds("doc_id").map(Seq(_))
+    /** A corrupting re-crawl: previously-clean docs re-arrive dirty. */
+    val NullMod13 = Wave(residue("doc_id", 13L, 4L),
+      Seq("text" -> lit(null).cast("string")))
+    /** A clean update: changed text, `n_chars` grown to match, so both
+      * gate rules keep holding for docs that were clean.
+      */
+    val Rev2Mod9 = Wave(residue("doc_id", 9L, 2L),
+      Seq("text" -> concat(col("text"), lit(" rev2")),
+        "n_chars" -> (col("n_chars") + lit(5L))))
+    /** Late crawl docs under fresh keys (no embedding references them). */
+    val Late11 = Wave(residue("doc_id", 11L, 5L),
+      Seq("doc_id" -> (col("doc_id") + lit(1000000L))))
+    /** Identical re-crawl copies: cross-batch duplicate keys. */
+    val Copies7 = Wave(residue("doc_id", 7L, 3L))
+
+    private def gated = IngestPolicy(gateChecks = Expectations.corpusDocChecks)
+    private def archived(dir: String) =
+      gated.copy(archiveDir = Some(s"$dir/archive"))
+
+    /** q134: the ungated fold; q135-q137 read its exports. */
+    val Base = Scenario("relstream", "|nb=3|v=2|lay=1f", Thirds)
+    /** q155: the fold through the q139 document rules (oracle: q154). */
+    val Gated = Scenario("relstreamgated", "|nb=3|gate=docv1|v=2|lay=1f",
+      Thirds, _ => gated)
+    /** q165: q155 hit by the corrupting wave, then the final-verdict
+      * refold against the crawl archive (every batch input with its id).
+      */
+    val Refolded = Scenario("relstreamrefold",
+      "|nb=3|gate=docv1|recrawl=nullmod13|v=1|lay=1f",
+      Thirds :+ Seq(NullMod13), _ => gated, refoldAtEnd = true)
+    /** q166: q165 driven by the coded policies — the ingest tees its
+      * archive and the refold cadence repairs the wave's residue before
+      * the late re-keyed wave folds on top.
+      */
+    val PolicyRefolded = Scenario("relstreamrefoldpol",
+      "|nb=5|gate=docv1|recrawl=nullmod13+late11|refold=2|v=1|lay=1f",
+      Thirds :+ Seq(NullMod13) :+ Seq(Late11),
+      dir => archived(dir).copy(refoldEvery = 2))
+    /** q167: re-crawl update semantics, excised in-line. */
+    val Updated = Scenario("relstreamupd",
+      "|nb=4|gate=docv1|recrawl=rev2mod9|upd=1|v=1|lay=1f",
+      Thirds :+ Seq(Rev2Mod9), dir => archived(dir).copy(updateKeys = true))
+    /** q168: every maintenance policy composed on one root. The update
+      * excision retires the corrupting wave in-line (so the refold
+      * cadence stays a live no-op), and the clean update wave excises
+      * against the ledger the batch-4 compaction just consolidated.
+      */
+    val SelfMaintaining = Scenario("relstreamself",
+      "|nb=5|gate=docv1|null13|rev2mod9|upd=1|ce=2|re=2|v=1|lay=1f",
+      Thirds :+ Seq(NullMod13) :+ Seq(Rev2Mod9),
+      dir => archived(dir).copy(compactEvery = 2, refoldEvery = 2,
+        updateKeys = true))
+    /** q171: q168 with archive retention on; the oracle is q168's. */
+    val Archived = SelfMaintaining.copy(tag = "relstreamselfarc",
+      suffix = "|nb=5|gate=docv1|null13|rev2mod9|upd=1|ce=2|re=2|ae=2|v=1|lay=1f",
+      policy = dir => SelfMaintaining.policy(dir).copy(archiveEvery = 2))
+    /** q160: the re-crawled corpus through the complete q152 gate —
+      * scalar rules, `unique:doc_id` and `ref:doc_id->embeddings.vec_id`
+      * against the embeddings stream folded alongside — then compacted,
+      * so the catalog measures the post-compaction readout.
+      */
+    val KeyedGated = Scenario("relstreamkeyed",
+      "|nb=4|gate=docv1+uniq+refemb|v=3|lay=1f",
+      Thirds :+ Seq(Copies7, Late11),
+      dir => gated.copy(gateUnique = true, gateRefs = Seq(
+        Expectations.RefStream("ref:doc_id->embeddings.vec_id", "doc_id",
+          Expectations.keyStoreDir(refRoot(dir), Seq("vec_id"))))),
+      keyCorpus = Curation.recrawledCorpus, refWaves = thirds("vec_id"),
+      compactAtEnd = true)
+
+    val all: Seq[Scenario] = Seq(Base, Gated, Refolded, PolicyRefolded,
+      Updated, SelfMaintaining, Archived, KeyedGated)
+  }
+
+  /** Build-once state tree of `sc` — what its catalog entry reads per
+    * call is the production export job, the READOUT off incrementally
+    * maintained state, while the oracle proves the fold converged to the
+    * batch semantics at every scale.
+    */
+  private[graft] def ensureScenarioState(spark: SparkSession, sfDir: String,
+                                         sc: Scenario): String =
+    DedupArtifacts.cachedDir(s"$sfDir|${sc.tag}") {
       val docs = graft.sources.Tables.documents(spark, sfDir)
-      val key = DedupArtifacts.corpusKey(docs.select("doc_id", "text"),
-        "relstreamgated") +
-        s"|cap=$CAP|pl=$PER_LANG|ct=$CONTAM_T|t=$THRESHOLD|nb=3" +
-        "|gate=docv1|v=2|lay=1f"
-      DedupArtifacts.ensureTree(key) { dir =>
-        (0L until 3L).foreach { b =>
-          releaseIngestBatch(docs.filter(pmod(col("doc_id"), lit(3L)) === b),
-            b, dir, Expectations.corpusDocChecks)
-        }
-      }
-    }
-
-  /** Build-once REFOLDED release-state artifact for the q165 catalog
-    * entry: the q155 gated fold (three doc_id-residue batches through
-    * the q139 document rules), then a CORRUPTING re-crawl wave — batch
-    * 3 re-arrives every `doc_id % 13 == 4` doc with NULL text, flipping
-    * the previously-clean ones dirty — then the FINAL-VERDICT REFOLD
-    * ([[refoldQuarResidue]]) against the crawl archive (all four batch
-    * inputs with their batch ids). What q165 measures per call is the
-    * production readout off repaired state; its oracle — q154's
-    * statement over the FINAL corpus — proves the repair converged to
-    * the batch semantics at every scale.
-    */
-  private[graft] def ensureRefoldedReleaseState(spark: SparkSession,
-                                                sfDir: String): String =
-    DedupArtifacts.cachedDir(s"$sfDir|relstreamrefold") {
-      val docs = graft.sources.Tables.documents(spark, sfDir)
-      val key = DedupArtifacts.corpusKey(docs.select("doc_id", "text"),
-        "relstreamrefold") +
-        s"|cap=$CAP|pl=$PER_LANG|ct=$CONTAM_T|t=$THRESHOLD|nb=3" +
-        "|gate=docv1|recrawl=nullmod13|v=1|lay=1f"
-      DedupArtifacts.ensureTree(key) { dir =>
-        (0L until 3L).foreach { b =>
-          releaseIngestBatch(docs.filter(pmod(col("doc_id"), lit(3L)) === b),
-            b, dir, Expectations.corpusDocChecks)
-        }
-        val recrawl = docs.withColumn("text", lit(null).cast("string"))
-          .filter(pmod(col("doc_id"), lit(13L)) === 4)
-        releaseIngestBatch(recrawl, 3L, dir, Expectations.corpusDocChecks)
-        val archive = docs
-          .withColumn("ver", pmod(col("doc_id"), lit(3L)))
-          .select("doc_id", "ver", "text")
-          .unionByName(recrawl.withColumn("ver", lit(3L))
-            .select("doc_id", "ver", "text"))
-        refoldQuarResidue(spark, dir, archive)
-        ()
-      }
-    }
-
-  /** Build-once POLICY-REFOLDED release-state artifact for the q166
-    * catalog entry: the q165 scenario driven END TO END by the coded
-    * policies — the gated ingest with `archiveDir` (the stream tees its
-    * own crawl archive) and `refoldEvery = 2`, so the batch-3
-    * corrupting re-crawl's residue is repaired by the POLICY firing
-    * before batch 4, and batch 4 (the `doc_id % 11 == 5` late re-keyed
-    * wave) folds on top of repaired state. No maintenance call appears
-    * anywhere — the ingest owns its archive and its repair cadence.
-    */
-  private[graft] def ensurePolicyRefoldedReleaseState(spark: SparkSession,
-                                                      sfDir: String): String =
-    DedupArtifacts.cachedDir(s"$sfDir|relstreamrefoldpol") {
-      val docs = graft.sources.Tables.documents(spark, sfDir)
-      val key = DedupArtifacts.corpusKey(docs.select("doc_id", "text"),
-        "relstreamrefoldpol") +
-        s"|cap=$CAP|pl=$PER_LANG|ct=$CONTAM_T|t=$THRESHOLD|nb=5" +
-        "|gate=docv1|recrawl=nullmod13+late11|refold=2|v=1|lay=1f"
-      DedupArtifacts.ensureTree(key) { dir =>
-        val arch = s"$dir/archive"
-        def step(b: Long, rows: DataFrame): Unit = {
-          releaseIngestWithPolicy(rows, b, dir, compactEvery = 0,
-            gateChecks = Expectations.corpusDocChecks,
-            archiveDir = Some(arch), refoldEvery = 2)
-          ()
-        }
-        (0L until 3L).foreach { b =>
-          step(b, docs.filter(pmod(col("doc_id"), lit(3L)) === b))
-        }
-        step(3L, docs.withColumn("text", lit(null).cast("string"))
-          .filter(pmod(col("doc_id"), lit(13L)) === 4))
-        step(4L, docs.filter(pmod(col("doc_id"), lit(11L)) === 5)
-          .withColumn("doc_id", col("doc_id") + lit(1000000L)))
-      }
-    }
-
-  /** Build-once UPDATED release-state artifact for the q167 catalog
-    * entry: the corpus in three doc_id-residue batches through the
-    * gated ingest with `updateKeys` (re-crawl update semantics:
-    * [[exciseRearrivals]]), then a fourth batch RE-CRAWLING every
-    * `doc_id % 9 == 2` doc with CHANGED text (`text || ' rev2'`,
-    * `n_chars` grown to match — both gate rules keep holding for docs
-    * that were clean, while docs already over the 64-token rule stay
-    * dirty with their NEW token count). The readout must equal the
-    * batch cascade over the LATEST version of every doc — stale claims
-    * retired, postings deduplicated, eval seats re-shingled, caps
-    * re-counted — with no repair cadence: the excision runs in-line at
-    * the re-arrival batch.
-    */
-  private[graft] def ensureUpdatedReleaseState(spark: SparkSession,
-                                               sfDir: String): String =
-    DedupArtifacts.cachedDir(s"$sfDir|relstreamupd") {
-      val docs = graft.sources.Tables.documents(spark, sfDir)
-      val key = DedupArtifacts.corpusKey(docs.select("doc_id", "text"),
-        "relstreamupd") +
-        s"|cap=$CAP|pl=$PER_LANG|ct=$CONTAM_T|t=$THRESHOLD|nb=4" +
-        "|gate=docv1|recrawl=rev2mod9|upd=1|v=1|lay=1f"
-      DedupArtifacts.ensureTree(key) { dir =>
-        val arch = s"$dir/archive"
-        def step(b: Long, rows: DataFrame): Unit = {
-          releaseIngestWithPolicy(rows, b, dir, compactEvery = 0,
-            gateChecks = Expectations.corpusDocChecks,
-            archiveDir = Some(arch), updateKeys = true)
-          ()
-        }
-        (0L until 3L).foreach { b =>
-          step(b, docs.filter(pmod(col("doc_id"), lit(3L)) === b))
-        }
-        step(3L, docs.filter(pmod(col("doc_id"), lit(9L)) === 2)
-          .withColumn("text", concat(col("text"), lit(" rev2")))
-          .withColumn("n_chars", col("n_chars") + lit(5L)))
-      }
-    }
-
-  /** Build-once SELF-MAINTAINING release-state artifact for the q168
-    * catalog entry: every maintenance policy the ingest owns, composed
-    * on one root — the archive tee, `compactEvery = 2` (retention),
-    * `refoldEvery = 2` (final-verdict repair cadence — a LIVE NO-OP
-    * here, because `updateKeys` retires re-arrival state in-line before
-    * residue can accumulate; composing them proves harmlessness) and
-    * `updateKeys` (re-crawl update semantics). The corpus folds in
-    * three thirds, then a CORRUPTING re-crawl (batch 3: `doc_id % 13 ==
-    * 4` re-arrives with NULL text — the dirty-update path: prior state
-    * excised in-line, the new version diverts), then a CLEAN update
-    * wave (batch 4: `doc_id % 9 == 2` re-arrives with `text || '
-    * rev2'`) whose excision reads the ledger AFTER the batch-4
-    * compaction consolidated it — the policy-composition coverage the
-    * separate artifacts cannot exercise. Docs in both waves end at
-    * their batch-4 version (clean, updated). Oracle = q154's statement
-    * over the final corpus.
-    */
-  private[graft] def ensureSelfMaintainingReleaseState(spark: SparkSession,
-                                                       sfDir: String): String =
-    DedupArtifacts.cachedDir(s"$sfDir|relstreamself") {
-      val docs = graft.sources.Tables.documents(spark, sfDir)
-      val key = DedupArtifacts.corpusKey(docs.select("doc_id", "text"),
-        "relstreamself") +
-        s"|cap=$CAP|pl=$PER_LANG|ct=$CONTAM_T|t=$THRESHOLD|nb=5" +
-        "|gate=docv1|null13|rev2mod9|upd=1|ce=2|re=2|v=1|lay=1f"
-      DedupArtifacts.ensureTree(key) { dir =>
-        val arch = s"$dir/archive"
-        def step(b: Long, rows: DataFrame): Unit = {
-          releaseIngestWithPolicy(rows, b, dir, compactEvery = 2,
-            gateChecks = Expectations.corpusDocChecks,
-            archiveDir = Some(arch), refoldEvery = 2, updateKeys = true)
-          ()
-        }
-        (0L until 3L).foreach { b =>
-          step(b, docs.filter(pmod(col("doc_id"), lit(3L)) === b))
-        }
-        step(3L, docs.withColumn("text", lit(null).cast("string"))
-          .filter(pmod(col("doc_id"), lit(13L)) === 4))
-        step(4L, docs.filter(pmod(col("doc_id"), lit(9L)) === 2)
-          .withColumn("text", concat(col("text"), lit(" rev2")))
-          .withColumn("n_chars", col("n_chars") + lit(5L)))
-      }
-    }
-
-  /** Build-once ARCHIVED-RETENTION release-state artifact for the q171
-    * catalog entry: the q168 self-maintaining scenario with the LAST
-    * unbounded-growth store closed — `archiveEvery = 2` consolidates
-    * the crawl archive's per-batch dirs through the index compactor's
-    * marker protocol, and the batch-4 repairs (refold cadence + the
-    * update excision) read their stale-version texts off the
-    * CONSOLIDATED archive with the as-of cut on the rows' own `ver`.
-    * Oracle = q168's statement VERBATIM: retention must not move a
-    * single output row.
-    */
-  private[graft] def ensureArchivedReleaseState(spark: SparkSession,
-                                                sfDir: String): String =
-    DedupArtifacts.cachedDir(s"$sfDir|relstreamselfarc") {
-      val docs = graft.sources.Tables.documents(spark, sfDir)
-      val key = DedupArtifacts.corpusKey(docs.select("doc_id", "text"),
-        "relstreamselfarc") +
-        s"|cap=$CAP|pl=$PER_LANG|ct=$CONTAM_T|t=$THRESHOLD|nb=5" +
-        "|gate=docv1|null13|rev2mod9|upd=1|ce=2|re=2|ae=2|v=1|lay=1f"
-      DedupArtifacts.ensureTree(key) { dir =>
-        val arch = s"$dir/archive"
-        def step(b: Long, rows: DataFrame): Unit = {
-          releaseIngestWithPolicy(rows, b, dir, compactEvery = 2,
-            gateChecks = Expectations.corpusDocChecks,
-            archiveDir = Some(arch), refoldEvery = 2, updateKeys = true,
-            archiveEvery = 2)
-          ()
-        }
-        (0L until 3L).foreach { b =>
-          step(b, docs.filter(pmod(col("doc_id"), lit(3L)) === b))
-        }
-        step(3L, docs.withColumn("text", lit(null).cast("string"))
-          .filter(pmod(col("doc_id"), lit(13L)) === 4))
-        step(4L, docs.filter(pmod(col("doc_id"), lit(9L)) === 2)
-          .withColumn("text", concat(col("text"), lit(" rev2")))
-          .withColumn("n_chars", col("n_chars") + lit(5L)))
-      }
-    }
-
-  /** Build-once KEYED-GATED release-state artifact for the q160 catalog
-    * entry: the RE-CRAWLED corpus ([[Curation.recrawledCorpus]] — the
-    * base docs in three doc_id-residue batches, then a fourth batch
-    * carrying the re-crawl copies and the embedding-less late docs)
-    * folded through the COMPLETE q152-semantics gate: the q139 scalar
-    * rules, `unique:doc_id` (the re-crawl copies divert — cross-batch
-    * duplicates are the catalog case itself), and
-    * `ref:doc_id->embeddings.vec_id` resolved against a keyed-audit
-    * reference ingest of the embeddings stream folded ALONGSIDE
-    * (reference batch b lands before fact batch b — the paired-ingest
-    * convention). The readout's oracle is
-    * [[Curation.keyedDivertedReleaseExport]]'s SQL: stream==batch for
-    * the per-copy diverted semantics.
-    */
-  private[graft] def ensureKeyedGatedReleaseState(spark: SparkSession,
-                                                  sfDir: String): String =
-    DedupArtifacts.cachedDir(s"$sfDir|relstreamkeyed") {
-      val corpus = Curation.recrawledCorpusTagged(spark, sfDir)
-      val embs = graft.sources.Tables.embeddings(spark, sfDir)
       val key = DedupArtifacts.corpusKey(
-        corpus.select("doc_id", "text"), "relstreamkeyed") +
-        s"|cap=$CAP|pl=$PER_LANG|ct=$CONTAM_T|t=$THRESHOLD|nb=4" +
-        "|gate=docv1+uniq+refemb|v=3|lay=1f"
+        sc.keyCorpus(spark, sfDir).select("doc_id", "text"), sc.tag) +
+        sc.keySuffix
       DedupArtifacts.ensureTree(key) { dir =>
-        val refRoot = s"$dir/refembs"
-        val refs = Seq(Expectations.RefStream(
-          "ref:doc_id->embeddings.vec_id", "doc_id",
-          Expectations.keyStoreDir(refRoot, Seq("vec_id"))))
-        (0L until 3L).foreach { b =>
-          Expectations.keyedAuditIngestBatch(
-            embs.filter(pmod(col("vec_id"), lit(3L)) === b), b, refRoot,
-            Nil, Seq(Expectations.Unique("unique:vec_id", Seq("vec_id"))),
-            Nil)
-          releaseIngestBatch(
-            corpus.filter(col("rc") === 0L &&
-              pmod(col("doc_id"), lit(3L)) === b).drop("rc"),
-            b, dir, Expectations.corpusDocChecks, gateUnique = true,
-            gateRefs = refs)
+        val policy = sc.policy(dir)
+        val batches = sc.batches.map(_.map(_(docs)).reduce(_ unionByName _))
+        lazy val embs = graft.sources.Tables.embeddings(spark, sfDir)
+        batches.zipWithIndex.foreach { case (rows, b) =>
+          sc.refWaves.lift(b).foreach { w =>
+            Expectations.keyedAuditIngestBatch(w(embs), b, refRoot(dir), Nil,
+              Seq(Expectations.Unique("unique:vec_id", Seq("vec_id"))), Nil)
+          }
+          releaseIngestBatch(rows, b, dir, policy)
         }
-        releaseIngestBatch(corpus.filter(col("rc") === 1L).drop("rc"),
-          3L, dir, Expectations.corpusDocChecks, gateUnique = true,
-          gateRefs = refs)
-        // the coded maintenance posture: the stream quiesced at its
-        // committed frontier, the retention window ran — the catalog
-        // then measures the POST-COMPACTION readout (one generation per
-        // store; q134/q155 keep the uncompacted merge-on-read posture,
-        // so both maintenance states stay measured). Per-copy quar rows
-        // survive compaction by contract (spec-pinned).
-        compactReleaseState(spark, dir)
+        if (sc.refoldAtEnd)
+          refoldQuarResidue(spark, dir, batches.zipWithIndex.map {
+            case (rows, b) =>
+              rows.withColumn("ver", lit(b.toLong)).select("doc_id", "ver", "text")
+          }.reduce(_ unionByName _))
+        if (sc.compactAtEnd) compactReleaseState(spark, dir)
       }
     }
 
@@ -1069,32 +900,17 @@ object ReleaseStream {
                                          sfDir: String): String =
     ensureReleaseExportAt(spark, sfDir, Long.MaxValue)
 
-  /** Build-once MATERIALIZED current export off the GATED state artifact
-    * (q155's root) — the deliverable the gated pipeline publishes after
-    * its last batch. q169/q170's pre-update churn side reads this (round
-    * 18: the q135/q136 published-export routing applied to the update
-    * churn — both sides of a churn report exist on disk in production by
-    * the time the report runs; the gated root's LIVE readout machinery
-    * stays measured by q155). artifact == live is spec-pinned
-    * (ReleaseStreamSpec).
+  /** Build-once MATERIALIZED current export off a scenario's state tree
+    * — the deliverable its pipeline publishes after the last batch.
+    * q169/q170 diff the q167 export against the q155 one (the q135/q136
+    * published-export routing applied to the update churn; both roots'
+    * LIVE readouts stay measured by q155/q167). artifact == live is
+    * spec-pinned (ReleaseStreamSpec).
     */
-  private[graft] def ensureGatedReleaseExport(spark: SparkSession,
-                                              sfDir: String): String =
-    DedupArtifacts.cachedDir(s"$sfDir|relexportgated") {
-      val root = ensureGatedReleaseState(spark, sfDir)
-      DedupArtifacts.ensureDerived(spark,
-        s"relexport|$root|b=max|v=1")(releaseState(spark, root))
-    }
-
-  /** Build-once MATERIALIZED current export off the UPDATED state
-    * artifact (q167's root) — the post-update deliverable; q169/q170's
-    * current side reads this (the updated root's LIVE readout machinery
-    * stays measured by q167). artifact == live is spec-pinned.
-    */
-  private[graft] def ensureUpdatedReleaseExport(spark: SparkSession,
-                                                sfDir: String): String =
-    DedupArtifacts.cachedDir(s"$sfDir|relexportupd") {
-      val root = ensureUpdatedReleaseState(spark, sfDir)
+  private[graft] def ensureScenarioExport(spark: SparkSession, sfDir: String,
+                                          sc: Scenario): String =
+    DedupArtifacts.cachedDir(s"$sfDir|relexport|${sc.tag}") {
+      val root = ensureScenarioState(spark, sfDir, sc)
       DedupArtifacts.ensureDerived(spark,
         s"relexport|$root|b=max|v=1")(releaseState(spark, root))
     }
@@ -1110,7 +926,7 @@ object ReleaseStream {
                                            sfDir: String,
                                            batchId: Long): String =
     DedupArtifacts.cachedDir(s"$sfDir|relexport|$batchId") {
-      val root = ensureReleaseState(spark, sfDir)
+      val root = ensureScenarioState(spark, sfDir, Scenarios.Base)
       DedupArtifacts.ensureDerived(spark, s"relexport|$root|b=$batchId|v=1") {
         releaseStateAt(spark, root, batchId)
       }
@@ -1238,8 +1054,8 @@ object ReleaseStream {
     * become unavailable afterwards — read the churn window first, or
     * defer compaction by the retention policy (the standard
     * time-travel-vs-GC trade every manifested store makes).
-    */
-  /** `below` bounds which manifest the pivot may target: the retention
+    *
+    * `below` bounds which manifest the pivot may target: the retention
     * policy passes the CURRENT batch id so a replayed policy batch can
     * never pivot (and then prune the anchor of) its own first-attempt
     * manifest — it re-compacts the same frontier the first attempt
@@ -1509,10 +1325,10 @@ object ReleaseStream {
     *
     * Returns an fsck-style findings relation `(check, severity,
     * detail)` summarizing what moved.
-    */
-  /** `below` bounds every frontier resolution strictly below that batch
+    *
+    * `below` bounds every frontier resolution strictly below that batch
     * id — the [[compactReleaseState]] convention that lets the refold
-    * run as an in-stream POLICY ([[releaseIngestWithPolicy]]): a
+    * run as an in-stream POLICY ([[IngestPolicy]]'s `refoldEvery`): a
     * replayed policy batch re-resolves the same already-repaired
     * frontier its first attempt repaired (finding no residue, a no-op)
     * instead of repairing its own first attempt's fold output.

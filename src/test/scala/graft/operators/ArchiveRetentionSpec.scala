@@ -50,9 +50,9 @@ class ArchiveRetentionSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft-arcret").toString
     val arch = s"$root/archive"
     def step(b: Long, rows: Seq[(Long, String, String, String)]): Unit = {
-      ReleaseStream.releaseIngestWithPolicy(df(rows), b, root,
-        compactEvery = 0, gateChecks = checks,
-        archiveDir = Some(arch), updateKeys = true, archiveEvery = 2)
+      ReleaseStream.releaseIngestBatch(df(rows), b, root,
+        IngestPolicy(gateChecks = checks, archiveDir = Some(arch),
+          updateKeys = true, archiveEvery = 2))
       ()
     }
     step(0L, b0)
@@ -120,9 +120,9 @@ class ArchiveRetentionSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft-arcre").toString
     val arch = s"$root/archive"
     def step(b: Long, rows: Seq[(Long, String, String, String)]): Unit = {
-      ReleaseStream.releaseIngestWithPolicy(df(rows), b, root,
-        compactEvery = 0, gateChecks = checks,
-        archiveDir = Some(arch), updateKeys = true, archiveEvery = 2)
+      ReleaseStream.releaseIngestBatch(df(rows), b, root,
+        IngestPolicy(gateChecks = checks, archiveDir = Some(arch),
+          updateKeys = true, archiveEvery = 2))
       ()
     }
     step(0L, b0)

@@ -90,8 +90,10 @@ class RefoldSpec extends AnyFunSuite {
   }
 
   private def ingestBoth(root: String): Unit = {
-    ReleaseStream.releaseIngestBatch(df(b0), 0L, root, checks)
-    ReleaseStream.releaseIngestBatch(df(b1), 1L, root, checks)
+    ReleaseStream.releaseIngestBatch(df(b0), 0L, root,
+      IngestPolicy(gateChecks = checks))
+    ReleaseStream.releaseIngestBatch(df(b1), 1L, root,
+      IngestPolicy(gateChecks = checks))
   }
 
   test("refold: the repaired state == the diverted batch twin over final " +
@@ -155,7 +157,8 @@ class RefoldSpec extends AnyFunSuite {
     // excised doc 10's text
     val b2 = Seq((50L, "s2", "de", textD + " z1"),
       (60L, "s1", "en", "t u v w x y z"))
-    ReleaseStream.releaseIngestBatch(df(b2), 2L, root, checks)
+    ReleaseStream.releaseIngestBatch(df(b2), 2L, root,
+      IngestPolicy(gateChecks = checks))
     val got = rowsOf(ReleaseStream.releaseState(spark, root))
     assert(got === finalTwin(finalRows ++ b2),
       "post-repair folds must keep equaling the final-verdict twin — " +
@@ -202,9 +205,9 @@ class RefoldSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft-refoldpol").toString
     val arch = s"$root/archive"
     def step(b: Long, rows: Seq[(Long, String, String, String)]): Unit = {
-      ReleaseStream.releaseIngestWithPolicy(df(rows), b, root,
-        compactEvery = 0, gateChecks = checks,
-        archiveDir = Some(arch), refoldEvery = 2)
+      ReleaseStream.releaseIngestBatch(df(rows), b, root,
+        IngestPolicy(gateChecks = checks, archiveDir = Some(arch),
+          refoldEvery = 2))
       ()
     }
     step(0L, b0)
@@ -246,9 +249,11 @@ class RefoldSpec extends AnyFunSuite {
     // dirty-then-clean: the LWW readout already handles it — no residue
     val root = Files.createTempDirectory("graft-refoldclean").toString
     ReleaseStream.releaseIngestBatch(
-      df(Seq((7L, "s1", "xx", "p q r"))), 0L, root, checks)
+      df(Seq((7L, "s1", "xx", "p q r"))), 0L, root,
+      IngestPolicy(gateChecks = checks))
     ReleaseStream.releaseIngestBatch(
-      df(Seq((7L, "s1", "en", "p q r"))), 1L, root, checks)
+      df(Seq((7L, "s1", "en", "p q r"))), 1L, root,
+      IngestPolicy(gateChecks = checks))
     val f2 = ReleaseStream.refoldQuarResidue(spark, root,
       Seq((7L, 0L, "p q r"), (7L, 1L, "p q r"))
         .toDF("doc_id", "ver", "text"))

@@ -89,9 +89,9 @@ class UpdateFoldSpec extends AnyFunSuite {
 
   private def step(root: String, b: Long,
                    rows: Seq[(Long, String, String, String)]): Unit = {
-    ReleaseStream.releaseIngestWithPolicy(df(rows), b, root,
-      compactEvery = 0, gateChecks = checks,
-      archiveDir = Some(s"$root/archive"), updateKeys = true)
+    ReleaseStream.releaseIngestBatch(df(rows), b, root,
+      IngestPolicy(gateChecks = checks,
+        archiveDir = Some(s"$root/archive"), updateKeys = true))
     ()
   }
 
@@ -165,10 +165,10 @@ class UpdateFoldSpec extends AnyFunSuite {
     "no-op, and the state equals the latest-version twin") {
     val root = Files.createTempDirectory("graft-updcomp").toString
     def pstep(b: Long, rows: Seq[(Long, String, String, String)]): Unit = {
-      ReleaseStream.releaseIngestWithPolicy(df(rows), b, root,
-        compactEvery = 2, gateChecks = checks,
-        archiveDir = Some(s"$root/archive"), refoldEvery = 2,
-        updateKeys = true)
+      ReleaseStream.releaseIngestBatch(df(rows), b, root,
+        IngestPolicy(compactEvery = 2, gateChecks = checks,
+          archiveDir = Some(s"$root/archive"), refoldEvery = 2,
+          updateKeys = true))
       ()
     }
     pstep(0L, b0)
@@ -200,8 +200,8 @@ class UpdateFoldSpec extends AnyFunSuite {
     val q = ReleaseStream.streamingReleaseIngest(
       in.toDF().toDF("doc_id", "source", "lang", "text"), root,
       Files.createTempDirectory("graft-updmemck").toString,
-      gateChecks = checks, archiveDir = Some(s"$root/archive"),
-      updateKeys = true, archiveEvery = 2)
+      IngestPolicy(gateChecks = checks, archiveDir = Some(s"$root/archive"),
+        updateKeys = true, archiveEvery = 2))
     // batch 2 (the update wave) fires the archive consolidation AND the
     // in-line excision inside the same foreachBatch invocation
     val late = Seq((60L, "s1", "en", "t u v w x y z"))
@@ -220,18 +220,32 @@ class UpdateFoldSpec extends AnyFunSuite {
     "DIVERT are mutually exclusive key policies)") {
     val root = Files.createTempDirectory("graft-updref").toString
     val e1 = intercept[IllegalArgumentException] {
-      ReleaseStream.releaseIngestWithPolicy(df(b0), 0L, root,
-        compactEvery = 0, gateChecks = checks, updateKeys = true)
+      IngestPolicy(gateChecks = checks, updateKeys = true)
     }
     assert(e1.getMessage.contains("updateKeys needs archiveDir"),
       s"got: ${e1.getMessage}")
     val e2 = intercept[IllegalArgumentException] {
-      ReleaseStream.releaseIngestWithPolicy(df(b0), 0L, root,
-        compactEvery = 0, gateChecks = checks,
+      IngestPolicy(gateChecks = checks,
         archiveDir = Some(s"$root/archive"), gateUnique = true,
         updateKeys = true)
     }
     assert(e2.getMessage.contains("mutually exclusive"),
       s"got: ${e2.getMessage}")
+    // the other policy refusals, all at construction (no Spark job): the
+    // two archive-reading cadences without an archive, and negative
+    // cadences, which used to disable a policy silently
+    val refusals = Seq(
+      (() => IngestPolicy(refoldEvery = 2), "refoldEvery needs archiveDir"),
+      (() => IngestPolicy(archiveEvery = 2),
+        "archiveEvery compacts the crawl archive"),
+      (() => IngestPolicy(compactEvery = -1), "compactEvery: 0 disables"),
+      (() => IngestPolicy(archiveDir = Some(s"$root/archive"),
+        refoldEvery = -2), "refoldEvery: 0 disables"),
+      (() => IngestPolicy(archiveDir = Some(s"$root/archive"),
+        archiveEvery = -2), "archiveEvery: 0 disables"))
+    refusals.foreach { case (build, msg) =>
+      val e = intercept[IllegalArgumentException](build())
+      assert(e.getMessage.contains(msg), s"want '$msg', got: ${e.getMessage}")
+    }
   }
 }

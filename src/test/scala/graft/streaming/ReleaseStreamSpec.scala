@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.operators.{Curation, Dedup, ReleaseStream}
+import graft.operators.{Curation, Dedup, IngestPolicy, ReleaseStream}
 import graft.sources.Tables
 
 /** The incremental release fold's contract: after ANY prefix of document
@@ -200,8 +200,8 @@ class ReleaseStreamSpec extends AnyFunSuite {
     // five batches, compactEvery=2: the policy compacts before folding
     // batches 2 and 4 — no manual compaction call anywhere
     (0L until 5L).foreach(b =>
-      ReleaseStream.releaseIngestWithPolicy(part(b), b, root,
-        compactEvery = 2))
+      ReleaseStream.releaseIngestBatch(part(b), b, root,
+        IngestPolicy(compactEvery = 2)))
     // bounded retention: after the batch-4 pivot only the pivoted
     // frontier (3), its generation dir, and batch 4 itself remain
     assert(batchDirs().filter(_ >= 0) === Set(3L, 4L) &&
@@ -213,8 +213,8 @@ class ReleaseStreamSpec extends AnyFunSuite {
     // replay the POLICY batch (4): compaction is bounded strictly below
     // the batch's own id, so it re-pivots frontier 3 — never batch 4's
     // own first-attempt manifest — and the re-fold converges
-    ReleaseStream.releaseIngestWithPolicy(part(4L), 4L, root,
-      compactEvery = 2)
+    ReleaseStream.releaseIngestBatch(part(4L), 4L, root,
+      IngestPolicy(compactEvery = 2))
     assert(rowsOf(ReleaseStream.releaseState(spark, root)) === full,
       "replaying the policy batch must be idempotent")
     corpus.unpersist()
@@ -222,7 +222,8 @@ class ReleaseStreamSpec extends AnyFunSuite {
 
   test("the materialized export artifacts == the live readouts, and the " +
     "routed churn + transition matrix == their diff (the q135/q136 routing)") {
-    val root = ReleaseStream.ensureReleaseState(spark, D)
+    val root = ReleaseStream.ensureScenarioState(spark, D,
+      ReleaseStream.Scenarios.Base)
     val cur = spark.read.parquet(ReleaseStream.ensureReleaseExport(spark, D))
     assert(rowsOf(cur) === rowsOf(ReleaseStream.releaseState(spark, root)),
       "the build-once current export must be a pure cache of the live readout")
@@ -261,14 +262,18 @@ class ReleaseStreamSpec extends AnyFunSuite {
 
   test("the gated and updated published exports == their live readouts " +
     "(the q169/q170 routed inputs; round-18 q135-convention routing)") {
-    val gRoot = ReleaseStream.ensureGatedReleaseState(spark, D)
+    val gRoot = ReleaseStream.ensureScenarioState(spark, D,
+      ReleaseStream.Scenarios.Gated)
     val gCur = spark.read.parquet(
-      ReleaseStream.ensureGatedReleaseExport(spark, D))
+      ReleaseStream.ensureScenarioExport(spark, D,
+        ReleaseStream.Scenarios.Gated))
     assert(rowsOf(gCur) === rowsOf(ReleaseStream.releaseState(spark, gRoot)),
       "the gated export must be a pure cache of the gated live readout")
-    val uRoot = ReleaseStream.ensureUpdatedReleaseState(spark, D)
+    val uRoot = ReleaseStream.ensureScenarioState(spark, D,
+      ReleaseStream.Scenarios.Updated)
     val uCur = spark.read.parquet(
-      ReleaseStream.ensureUpdatedReleaseExport(spark, D))
+      ReleaseStream.ensureScenarioExport(spark, D,
+        ReleaseStream.Scenarios.Updated))
     assert(rowsOf(uCur) === rowsOf(ReleaseStream.releaseState(spark, uRoot)),
       "the updated export must be a pure cache of the updated live readout")
   }
@@ -422,10 +427,12 @@ class ReleaseStreamSpec extends AnyFunSuite {
     def gatedTwin(rows: Seq[(Long, String, String, String)]) =
       rowsOf(Curation.divertedReleaseExport(df(rows), checks, emptyPairs))
     val root = Files.createTempDirectory("graft-relgated").toString
-    ReleaseStream.releaseIngestBatch(df(b0), 0L, root, checks)
+    ReleaseStream.releaseIngestBatch(df(b0), 0L, root,
+      IngestPolicy(gateChecks = checks))
     assert(rowsOf(ReleaseStream.releaseState(spark, root)) === gatedTwin(b0),
       "an all-dirty first batch commits a quarantine-only readable state")
-    ReleaseStream.releaseIngestBatch(df(b1), 1L, root, checks)
+    ReleaseStream.releaseIngestBatch(df(b1), 1L, root,
+      IngestPolicy(gateChecks = checks))
     val full = rowsOf(ReleaseStream.releaseState(spark, root))
     assert(full === gatedTwin(b0 ++ b1),
       "gated state == the diverted batch twin over everything ingested")
@@ -444,7 +451,8 @@ class ReleaseStreamSpec extends AnyFunSuite {
       .find(_._1 == 5L).get._4 === "exact",
       "the ungated fold must show the hazard the gate prevents")
     // replay: re-running the last gated batch reproduces the state
-    ReleaseStream.releaseIngestBatch(df(b1), 1L, root, checks)
+    ReleaseStream.releaseIngestBatch(df(b1), 1L, root,
+      IngestPolicy(gateChecks = checks))
     assert(rowsOf(ReleaseStream.releaseState(spark, root)) === full,
       "gated replay is idempotent")
     // compaction consolidates the quar store with everything else
@@ -465,10 +473,12 @@ class ReleaseStreamSpec extends AnyFunSuite {
     // batch 0: doc 5 clean, doc 6 dirty; batch 1 flips both; doc 9
     // arrives TWICE in batch 1 — one clean copy, one dirty (the tie)
     ReleaseStream.releaseIngestBatch(df(Seq(
-      (5L, "s1", "en", "a b"), (6L, "s1", "xx", "c d"))), 0L, root, checks)
+      (5L, "s1", "en", "a b"), (6L, "s1", "xx", "c d"))), 0L, root,
+      IngestPolicy(gateChecks = checks))
     ReleaseStream.releaseIngestBatch(df(Seq(
       (5L, "s1", "xx", "a b"), (6L, "s1", "en", "c d"),
-      (9L, "s2", "en", "e f"), (9L, "s2", "xx", "e f"))), 1L, root, checks)
+      (9L, "s2", "en", "e f"), (9L, "s2", "xx", "e f"))), 1L, root,
+      IngestPolicy(gateChecks = checks))
     val out = ReleaseStream.releaseState(spark, root).collect()
       .map(r => r.getLong(0) -> r.getString(3))
     assert(out.length === out.map(_._1).distinct.length,
@@ -522,8 +532,8 @@ class ReleaseStreamSpec extends AnyFunSuite {
     val b0 = Seq((5L, "s1", "xx", "a b c"), (7L, "s1", "en", "d e f"),
       (77L, "s1", "en", "late ref doc"), (88L, "s1", "en", "never again")) ++
       (10L to 24L).map(i => (i, "s3", "en", s"filler text $i"))
-    ReleaseStream.releaseIngestBatch(df(b0), 0L, root, checks,
-      gateUnique = true, gateRefs = refs)
+    ReleaseStream.releaseIngestBatch(df(b0), 0L, root,
+      IngestPolicy(gateChecks = checks, gateUnique = true, gateRefs = refs))
     refBatch(Seq(77L, 88L), 1L)
     // batch 1: doc 5's CLEAN copy (key unclaimed -> folds: the cleanest
     // copy wins); TWO more identical clean copies of doc 7 (one
@@ -532,8 +542,8 @@ class ReleaseStreamSpec extends AnyFunSuite {
     // re-arrive — its batch-0 verdict stands (the late-reference bound)
     val b1 = Seq((5L, "s1", "en", "a b c"), (7L, "s1", "en", "d e f"),
       (7L, "s1", "en", "d e f"), (77L, "s1", "en", "late ref doc"))
-    ReleaseStream.releaseIngestBatch(df(b1), 1L, root, checks,
-      gateUnique = true, gateRefs = refs)
+    ReleaseStream.releaseIngestBatch(df(b1), 1L, root,
+      IngestPolicy(gateChecks = checks, gateUnique = true, gateRefs = refs))
     val out = bagOf(ReleaseStream.keyedGatedReleaseState(spark, root))
     // per-copy accounting: every physical row ingested is one output row
     assert(out.size === b0.size + b1.size, "rows in == rows out")
@@ -563,8 +573,8 @@ class ReleaseStreamSpec extends AnyFunSuite {
       stages(77L).size === 2,
       "doc 77: the pre-reference copy diverted, the re-arrival folded")
     // replay: re-running the last batch reproduces the state byte-for-byte
-    ReleaseStream.releaseIngestBatch(df(b1), 1L, root, checks,
-      gateUnique = true, gateRefs = refs)
+    ReleaseStream.releaseIngestBatch(df(b1), 1L, root,
+      IngestPolicy(gateChecks = checks, gateUnique = true, gateRefs = refs))
     assert(bagOf(ReleaseStream.keyedGatedReleaseState(spark, root)) === out,
       "keyed-gated replay is idempotent")
     // per-copy roots: a doc in both stores is the NORMAL diverted-later-
@@ -593,7 +603,7 @@ class ReleaseStreamSpec extends AnyFunSuite {
     val in = MemoryStream[(Long, String, String, String)](spark)
     val q = ReleaseStream.streamingReleaseIngest(
       in.toDF().toDF("doc_id", "source", "lang", "text"), root, ckpt(),
-      gateChecks = checks, gateUnique = true)
+      IngestPolicy(gateChecks = checks, gateUnique = true))
     try {
       in.addData((1L to 12L).map(i => (i, "s1", "en", s"text $i")))
       q.processAllAvailable()
