@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 import graft.store.Manifests
@@ -300,11 +300,9 @@ object Curation {
             s.getPath.getName.stripPrefix("batch=").toLong < upToBatch)
         if (batches.size > 1) {
           val tmp = new org.apache.hadoop.fs.Path(base, COMPACT_TMP)
-          spark.read.option("basePath", base.toString)
+          writeBucketedBatch(spark.read.option("basePath", base.toString)
             .parquet(batches.map(_.getPath.toString): _*)
-            .drop("batch")
-            .repartition(col(bkCol))
-            .write.mode("overwrite").partitionBy(bkCol).parquet(tmp.toString)
+            .drop("batch"), tmp.toString, bkCol)
           val marker = new org.apache.hadoop.fs.Path(base, COMPACT_MARKER)
           val out = fs.create(marker, true)
           try out.write(s"$upToBatch\n".getBytes("UTF-8")) finally out.close()
@@ -409,12 +407,10 @@ object Curation {
           val upTo = batches.map(
             _.getPath.getName.stripPrefix("batch=").toLong).max + 1L
           val tmp = new org.apache.hadoop.fs.Path(base, COMPACT_TMP)
-          spark.read.option("basePath", base.toString)
+          writeBucketedBatch(spark.read.option("basePath", base.toString)
             .parquet(batches.map(_.getPath.toString): _*)
             .drop("batch")
-            .join(ids, Seq("doc_id"), "left_anti")
-            .repartition(col(bkCol))
-            .write.mode("overwrite").partitionBy(bkCol).parquet(tmp.toString)
+            .join(ids, Seq("doc_id"), "left_anti"), tmp.toString, bkCol)
           val marker = new org.apache.hadoop.fs.Path(base, COMPACT_MARKER)
           val out = fs.create(marker, true)
           try out.write(s"$upTo\n".getBytes("UTF-8")) finally out.close()
@@ -452,22 +448,51 @@ object Curation {
       .select(cols: _*)
   }
 
-  private[operators] def writeBucketedBatch(df: DataFrame, dir: String,
-                                            batchId: Long,
-                                            bkCol: String): Unit =
-    // repartition ON the bucket column: one file per bucket dir per batch
-    // (the keyed-audit store lesson, guide §6) — without it every shuffle
-    // task writes its slice of every bucket and each pruned probe pays a
-    // per-file open cost up to #shuffle-partitions times the data
-    df.repartition(col(bkCol)).write.mode("overwrite").partitionBy(bkCol)
-      .parquet(s"$dir/batch=$batchId")
-
-  /** Collect a bucket-id column to a driver Set — bounded by IDX_BUCKETS
-    * values by construction, the same ≤page-of-longs driver state as a
-    * broadcast threshold, never data-sized.
+  /** The one bucketed-store writer: overwrite `path` with `df` partitioned
+    * by `bkCol`, and return the buckets written — the `bkCol=K`
+    * directories under `path`, read by one filesystem listing instead of
+    * a Spark job. A `partitionBy` overwrite clears `path` first and
+    * creates no directory for an empty bucket, so the listing is exactly
+    * the distinct bucket values of `df`'s rows (empty for an empty frame).
+    *
+    * Repartitions ON the bucket column: one file per bucket dir per batch
+    * (the keyed-audit store lesson) — without it every shuffle
+    * task writes its slice of every bucket and each pruned probe pays a
+    * per-file open cost up to #shuffle-partitions times the data.
     */
-  private[operators] def bucketSet(df: DataFrame, c: String): Set[Long] =
-    df.select(col(c)).distinct().collect().map(_.getLong(0)).toSet
+  private[operators] def writeBucketedBatch(df: DataFrame, path: String,
+                                            bkCol: String): Set[Long] = {
+    df.repartition(col(bkCol)).write.mode("overwrite").partitionBy(bkCol)
+      .parquet(path)
+    listedBuckets(df.sparkSession, path, bkCol)
+  }
+
+  /** The `bkCol=K` directories directly under `path`, as bucket ids;
+    * files (`_SUCCESS`, `.crc` sidecars) and other directories are not
+    * buckets. A `bkCol=` directory whose value is not a number fails.
+    */
+  private[operators] def listedBuckets(spark: SparkSession, path: String,
+                                       bkCol: String): Set[Long] = {
+    val dir = new org.apache.hadoop.fs.Path(path)
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    val prefix = s"$bkCol="
+    if (!fs.exists(dir)) Set.empty
+    else fs.listStatus(dir).iterator
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
+      .map { s =>
+        s.getPath.getName.stripPrefix(prefix).toLongOption.getOrElse(
+          throw new IllegalStateException(s"bucket directory ${s.getPath} " +
+            s"is not a numeric $bkCol value"))
+      }.toSet
+  }
+
+  /** The distinct values of a bucket-id expression over `df`, collected
+    * to the driver — bounded by IDX_BUCKETS values by construction, the
+    * same ≤page-of-longs driver state as a broadcast threshold, never
+    * data-sized.
+    */
+  private[operators] def bucketSet(df: DataFrame, bucket: Column): Set[Long] =
+    df.select(bucket).distinct().collect().map(_.getLong(0)).toSet
 
   /** Streaming NEAR-dup ingest — the q64 incremental contract driven by
     * Structured Streaming: each micro-batch of `(doc_id, text)` docs is
@@ -528,22 +553,22 @@ object Curation {
         carrySig = false)
       .withColumn("bb", bucketOf(col("bh"))).persist()
     val bandPaths = prunedBatchPaths(spark, s"$indexDir/bands", batchId,
-      "bb", bucketSet(deltaB, "bb"))
+      "bb", bucketSet(deltaB, col("bb")))
     val idxBands = readIndexPaths(spark, s"$indexDir/bands", bandPaths,
       deltaB.drop("bb"))
     val cand = Dedup.nearDupCandidates(
       idxBands.unionByName(deltaB.drop("bb")), deltaB.drop("bb")).persist()
     val dbkts = bucketSet(
-      cand.select(explode(array(col("d1"), col("d2"))).as("id"))
-        .select(bucketOf(col("id")).as("dbkt")), "dbkt")
+      cand.select(explode(array(col("d1"), col("d2"))).as("id")),
+      bucketOf(col("id")))
     val docPaths = prunedBatchPaths(spark, s"$indexDir/docs", batchId,
       "dbkt", dbkts)
     val idxDocs = readIndexPaths(spark, s"$indexDir/docs", docPaths, delta)
     Dedup.nearDupVerify(cand, idxDocs.unionByName(delta), thresholdX1e3)
       .write.mode("overwrite").parquet(s"$pairsDir/batch=$batchId")
     writeBucketedBatch(delta.withColumn("dbkt", bucketOf(col("doc_id"))),
-      s"$indexDir/docs", batchId, "dbkt")
-    writeBucketedBatch(deltaB, s"$indexDir/bands", batchId, "bb")
+      s"$indexDir/docs/batch=$batchId", "dbkt")
+    writeBucketedBatch(deltaB, s"$indexDir/bands/batch=$batchId", "bb")
     cand.unpersist(); deltaB.unpersist(); delta.unpersist()
     (bandPaths, docPaths)
   }
@@ -660,12 +685,12 @@ object Curation {
     // endpoint -> component-bucket resolution through the DOC-RESIDUE
     // mirror: enumerate only the docmap buckets the endpoints hash into
     // (delta-sized read), never the corpus-linear label relation
-    val epDbkts = bucketSet(eps.select(bucketOf(col("doc_id")).as("b")), "b")
+    val epDbkts = bucketSet(eps, bucketOf(col("doc_id")))
     val docmapPaths = docmapBucketPaths(labelsDir,
       priorMan.docs.filter(kv => epDbkts.contains(kv._1)))
     val epCbkts = bucketSet(
-      readDocMapPaths(spark, docmapPaths).join(broadcast(eps), "doc_id")
-        .select("cbkt"), "cbkt")
+      readDocMapPaths(spark, docmapPaths).join(broadcast(eps), "doc_id"),
+      col("cbkt"))
     // pruned prior read #1: exactly the label buckets holding the
     // endpoints' components (a component's rows all share its root's
     // residue, and an endpoint's cbkt IS its component's residue)
@@ -678,9 +703,8 @@ object Curation {
       .join(broadcast(oldRoots), Seq("cluster_id")).select("doc_id", "cluster_id")
       .persist()
     val folded = Dedup.foldClusterLabels(changedOld, deltaPairs).persist()
-    val touched = bucketSet(changedOld
-        .select(bucketOf(col("cluster_id")).as("b")), "b") ++
-      bucketSet(folded.select(bucketOf(col("cluster_id")).as("b")), "b")
+    val touched = bucketSet(changedOld, bucketOf(col("cluster_id"))) ++
+      bucketSet(folded, bucketOf(col("cluster_id")))
     // a touched bucket can end up EMPTY (a merge moves a whole component
     // to another residue); partitionBy writes no directory for it, so the
     // manifest must carry only the buckets that actually hold rows —
@@ -694,16 +718,12 @@ object Curation {
       // named, so this is a separate — still bucket-pruned — path set)
       carryPaths = labelBucketPaths(labelsDir,
         priorMan.labels.filter(kv => touched.contains(kv._1)))
-      val out = readLabelPaths(spark, carryPaths)
+      written = writeBucketedBatch(readLabelPaths(spark, carryPaths)
         .join(broadcast(oldRoots), Seq("cluster_id"), "left_anti")
         .select("doc_id", "cluster_id")
         .unionByName(folded.select("doc_id", "cluster_id"))
-        .withColumn("cbkt", bucketOf(col("cluster_id")))
-        .persist()
-      out.repartition(col("cbkt")).write.mode("overwrite")
-        .partitionBy("cbkt").parquet(s"$labelsDir/batch=$batchId")
-      written = bucketSet(out.select("cbkt"), "cbkt")
-      out.unpersist()
+        .withColumn("cbkt", bucketOf(col("cluster_id"))),
+        s"$labelsDir/batch=$batchId", "cbkt")
     }
     // docmap maintenance: every re-labeled doc (folded covers the touched
     // components' docs plus the delta's new docs) gets its new cbkt; a
@@ -712,21 +732,16 @@ object Curation {
     // label data (same batch dir), BEFORE the manifest commit.
     val docDelta = folded
       .select(col("doc_id"), bucketOf(col("cluster_id")).as("cbkt")).persist()
-    val touchedD = bucketSet(
-      docDelta.select(bucketOf(col("doc_id")).as("b")), "b")
+    val touchedD = bucketSet(docDelta, bucketOf(col("doc_id")))
     var writtenD = Set.empty[Long]
     if (touchedD.nonEmpty) {
       val dPaths = docmapBucketPaths(labelsDir,
         priorMan.docs.filter(kv => touchedD.contains(kv._1)))
-      val outD = readDocMapPaths(spark, dPaths)
+      writtenD = writeBucketedBatch(readDocMapPaths(spark, dPaths)
         .join(broadcast(docDelta.select("doc_id")), Seq("doc_id"), "left_anti")
         .unionByName(docDelta)
-        .withColumn("dbkt", bucketOf(col("doc_id")))
-        .persist()
-      outD.repartition(col("dbkt")).write.mode("overwrite")
-        .partitionBy("dbkt").parquet(s"$labelsDir/batch=$batchId/docmap")
-      writtenD = bucketSet(outD.select("dbkt"), "dbkt")
-      outD.unpersist()
+        .withColumn("dbkt", bucketOf(col("doc_id"))),
+        s"$labelsDir/batch=$batchId/docmap", "dbkt")
     }
     commitLabels(spark, labelsDir, batchId, LabelManifest(
       (priorMan.labels -- touched) ++ written.map(_ -> batchId),
@@ -870,11 +885,11 @@ object Curation {
     val (frontier, man) = manOpt.get
     val ids = docIds.select("doc_id").distinct().persist()
     // 1. resolve the excised docs' components through the docmap mirror
-    val rDbkts = bucketSet(ids.select(bucketOf(col("doc_id")).as("b")), "b")
+    val rDbkts = bucketSet(ids, bucketOf(col("doc_id")))
     val dmPaths = docmapBucketPaths(labelsDir,
       man.docs.filter(kv => rDbkts.contains(kv._1)))
     val rCbkts = bucketSet(readDocMapPaths(spark, dmPaths)
-      .join(ids, Seq("doc_id"), "left_semi").select("cbkt"), "cbkt")
+      .join(ids, Seq("doc_id"), "left_semi"), col("cbkt"))
     val compPaths = labelBucketPaths(labelsDir,
       man.labels.filter(kv => rCbkts.contains(kv._1)))
     val compRows = readLabelPaths(spark, compPaths).persist()
@@ -910,41 +925,35 @@ object Curation {
       .persist()
     // 4. rewrite the touched label buckets (old roots' residues plus the
     // new roots'); untouched buckets carry forward by reference
-    val touched = rCbkts ++
-      bucketSet(relab.select(bucketOf(col("cluster_id")).as("b")), "b")
+    val touched = rCbkts ++ bucketSet(relab, bucketOf(col("cluster_id")))
     val carryPaths = labelBucketPaths(labelsDir,
       man.labels.filter(kv => touched.contains(kv._1)))
     val gen = math.min(Manifests.batches(fs, labelsDir).min, 0L) - 1L
-    val outL = readLabelPaths(spark, carryPaths)
+    val writtenL = writeBucketedBatch(readLabelPaths(spark, carryPaths)
       .join(oldRoots, Seq("cluster_id"), "left_anti")
       .select("doc_id", "cluster_id")
       .unionByName(relab.select("doc_id", "cluster_id"))
-      .withColumn("cbkt", bucketOf(col("cluster_id"))).persist()
-    outL.repartition(col("cbkt")).write.mode("overwrite")
-      .partitionBy("cbkt").parquet(s"$labelsDir/batch=$gen")
-    val writtenL = bucketSet(outL.select("cbkt"), "cbkt")
+      .withColumn("cbkt", bucketOf(col("cluster_id"))),
+      s"$labelsDir/batch=$gen", "cbkt")
     // 5. docmap: every member either re-labels (new cbkt) or drops
     // (excised, or now a singleton); rewrite exactly their dbkt buckets
     val docDelta = relab
       .select(col("doc_id"), bucketOf(col("cluster_id")).as("cbkt")).persist()
-    val touchedD = bucketSet(
-      members.select(bucketOf(col("doc_id")).as("b")), "b")
+    val touchedD = bucketSet(members, bucketOf(col("doc_id")))
     val dPaths = docmapBucketPaths(labelsDir,
       man.docs.filter(kv => touchedD.contains(kv._1)))
-    val outD = readDocMapPaths(spark, dPaths)
+    val writtenD = writeBucketedBatch(readDocMapPaths(spark, dPaths)
       .join(members.select("doc_id"), Seq("doc_id"), "left_anti")
       .unionByName(docDelta)
-      .withColumn("dbkt", bucketOf(col("doc_id"))).persist()
-    outD.repartition(col("dbkt")).write.mode("overwrite")
-      .partitionBy("dbkt").parquet(s"$labelsDir/batch=$gen/docmap")
-    val writtenD = bucketSet(outD.select("dbkt"), "dbkt")
+      .withColumn("dbkt", bucketOf(col("doc_id"))),
+      s"$labelsDir/batch=$gen/docmap", "dbkt")
     // 6. commit: the FRONTIER manifest atomically rewritten to own the
     // generation (touched-but-empty buckets drop — partitionBy writes no
     // directory for them)
     commitLabels(spark, labelsDir, frontier, LabelManifest(
       (man.labels -- touched) ++ writtenL.map(_ -> gen),
       (man.docs -- touchedD) ++ writtenD.map(_ -> gen)))
-    Seq(ids, compRows, oldRoots, members, relab, outL, docDelta, outD)
+    Seq(ids, compRows, oldRoots, members, relab, docDelta)
       .foreach(_.unpersist())
   }
 
@@ -1369,7 +1378,7 @@ object Curation {
         array_contains(col("pref"), col("shingle")).as("is_pref"))
       .withColumn("sbkt", bucketOf(col("shingle"))).persist()
     val postPaths = prunedBatchPaths(spark, s"$indexDir/post", batchId,
-      "sbkt", bucketSet(deltaPost, "sbkt"))
+      "sbkt", bucketSet(deltaPost, col("sbkt")))
     val idxPost = readIndexPaths(spark, s"$indexDir/post", postPaths,
       deltaPost.drop("sbkt"))
     val allPost = idxPost.unionByName(deltaPost.drop("sbkt"))
@@ -1383,8 +1392,8 @@ object Curation {
       .union(half(allPost.filter(col("is_pref")), deltaPost.drop("sbkt")))
       .distinct().persist()
     val dbkts = bucketSet(
-      cand.select(explode(array(col("d1"), col("d2"))).as("id"))
-        .select(bucketOf(col("id")).as("dbkt")), "dbkt")
+      cand.select(explode(array(col("d1"), col("d2"))).as("id")),
+      bucketOf(col("id")))
     val docPaths = prunedBatchPaths(spark, s"$indexDir/docs", batchId,
       "dbkt", dbkts)
     val idxDocs = readIndexPaths(spark, s"$indexDir/docs", docPaths, delta)
@@ -1392,8 +1401,8 @@ object Curation {
         contMinX1e3, 800)
       .write.mode("overwrite").parquet(s"$pairsDir/batch=$batchId")
     writeBucketedBatch(delta.withColumn("dbkt", bucketOf(col("doc_id"))),
-      s"$indexDir/docs", batchId, "dbkt")
-    writeBucketedBatch(deltaPost, s"$indexDir/post", batchId, "sbkt")
+      s"$indexDir/docs/batch=$batchId", "dbkt")
+    writeBucketedBatch(deltaPost, s"$indexDir/post/batch=$batchId", "sbkt")
     cand.unpersist(); deltaPost.unpersist(); delta.unpersist()
     (postPaths, docPaths)
   }

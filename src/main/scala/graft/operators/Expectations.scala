@@ -2035,12 +2035,17 @@ object Expectations {
     * epoch, batch 2 (the replayable frontier) stays per-batch. The
     * oracle re-derives the unrolled timeline and aggregates it by the
     * same mapping: lossless-at-epoch-granularity IS the contract.
+    *
+    * Keyed on the source tree's content-keyed directory NAME, not its
+    * path, so the tree is shared by every artifact root (v=2; v=1 keyed
+    * on the absolute path and rebuilt under each root).
     */
   private[graft] def ensureRolledAuditState(spark: SparkSession,
                                             sfDir: String): String =
     DedupArtifacts.cachedDir(s"kauditroll|$sfDir") {
       val src = ensureKeyedAuditState(spark, sfDir)
-      DedupArtifacts.ensureTree(s"kauditroll|$src|e=2|r=1|v=1") { stage =>
+      val srcKey = new org.apache.hadoop.fs.Path(src).getName
+      DedupArtifacts.ensureTree(s"kauditroll|$srcKey|e=2|r=1|v=2") { stage =>
         val conf = spark.sessionState.newHadoopConf()
         val fs = new org.apache.hadoop.fs.Path(src).getFileSystem(conf)
         Seq("docs", "embs").foreach { sub =>

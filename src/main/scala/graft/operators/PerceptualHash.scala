@@ -286,7 +286,7 @@ object PerceptualHash {
       .withColumn("pb", pmod(col("band") * 256 + col("bv"),
         lit(Curation.IDX_BUCKETS))).persist()
     val idxB = Curation.readPrunedIndex(spark, s"$indexDir/pbands", batchId,
-      "pb", Curation.bucketSet(deltaB, "pb"), deltaB.drop("pb"))
+      "pb", Curation.bucketSet(deltaB, col("pb")), deltaB.drop("pb"))
     idxB.unionByName(deltaB.drop("pb")).as("a")
       .join(deltaB.as("b"),
         col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
@@ -297,7 +297,7 @@ object PerceptualHash {
       .distinct()
       .filter(col("hamming") <= maxHamming)
       .write.mode("overwrite").parquet(s"$pairsDir/batch=$batchId")
-    Curation.writeBucketedBatch(deltaB, s"$indexDir/pbands", batchId, "pb")
+    Curation.writeBucketedBatch(deltaB, s"$indexDir/pbands/batch=$batchId", "pb")
     deltaB.unpersist(); delta.unpersist()
     ()
   }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.store.Manifests
+import graft.operators.Curation.{bucketSet, writeBucketedBatch}
 
 /** How the release ingest ([[ReleaseStream.releaseIngestBatch]], and
   * [[ReleaseStream.streamingReleaseIngest]] per micro-batch) gates its
@@ -294,7 +295,7 @@ object ReleaseStream {
           if (!gateUnique) flagged0.withColumn("__dup", lit(0L))
           else {
             val bkeys = flagged0.select("doc_id").distinct()
-            val touchedD = bucketVals(bkeys.select(bkt(col("doc_id")).as("b")))
+            val touchedD = bucketSet(bkeys, bkt(col("doc_id")))
             val claimed = readOr(spark,
                 storePaths(root, prior, "doc", touchedD), DOC_SCHEMA)
               .select("doc_id")
@@ -310,24 +311,17 @@ object ReleaseStream {
           }
         val fl = flagged.persist()
         gatePersisted = Some(fl)
-        val qOut = fl.filter(col("__dirty") === 1L || col("__dup") === 1L)
-          .select(col("doc_id"),
-            coalesce(col("source"), lit("")).as("source"),
-            Curation.nTokensWs.as("n_tokens"))
-          .withColumn("ver", lit(batchId))
-          .withColumn("qbkt", bkt(col("doc_id"))).persist()
-        // repartition ON the bucket column first: one file per bucket dir
-        // per batch — without it every shuffle task writes its slice of
-        // every bucket and each leaf dir holds up to #shuffle-partitions
-        // tiny files, so every later probe/readout pays a per-file open
-        // cost ~32x the data (the keyed-audit/q141 store lesson, guide
-        // §6; measured on the doc store: 31 files per leaf). Applied to
-        // all five release stores round 18; `lay=1f` in the artifact
-        // keys forces old-layout trees to miss.
-        qOut.repartition(col("qbkt")).write.mode("overwrite")
-          .partitionBy("qbkt").parquet(s"$root/batch=$batchId/quar")
-        val w = bucketVals(qOut.select(col("qbkt").as("b")))
-        qOut.unpersist()
+        // the shared writer keeps one file per bucket dir per batch on
+        // every release store (before it: 31 files per doc-store leaf);
+        // `lay=1f` in the artifact keys forces old-layout trees to miss
+        val w = writeBucketedBatch(
+          fl.filter(col("__dirty") === 1L || col("__dup") === 1L)
+            .select(col("doc_id"),
+              coalesce(col("source"), lit("")).as("source"),
+              Curation.nTokensWs.as("n_tokens"))
+            .withColumn("ver", lit(batchId))
+            .withColumn("qbkt", bkt(col("doc_id"))),
+          s"$root/batch=$batchId/quar", "qbkt")
         (fl.filter(col("__dirty") === 0L && col("__dup") === 0L), w)
       }
     val d = rows.select(col("doc_id"),
@@ -359,7 +353,7 @@ object ReleaseStream {
 
     // ---- exact stage: batch minima per text hash vs stored running minima
     val bmin = d.groupBy("h").agg(min(col("doc_id")).as("bdoc")).persist()
-    val touchedX = bucketVals(bmin.select(bkt(xxhash64(col("h"))).as("b")))
+    val touchedX = bucketSet(bmin, bkt(xxhash64(col("h"))))
     val exPaths = storePaths(root, prior, "ex", touchedX)
     val pmin = readOr(spark, exPaths, EX_SCHEMA)
       .join(bmin.select("h"), Seq("h"), "left_semi")
@@ -411,7 +405,7 @@ object ReleaseStream {
 
     // ---- old-doc nhit adjustments: probe the shingle index BEFORE this
     // batch's shingles are appended, so exactly the prior docs are hit
-    val touchedG = bucketVals(dSh.select(bkt(col("shingle")).as("b")))
+    val touchedG = bucketSet(dSh, bkt(col("shingle")))
     val shPaths = storePaths(root, prior, "sh", touchedG)
     val adj = readOr(spark, shPaths, "shingle BIGINT, doc_id BIGINT")
       .join(broadcast(dSh), Seq("shingle"))
@@ -420,7 +414,7 @@ object ReleaseStream {
       .persist()
     val affected = adj.select("doc_id").unionByName(flips)
       .distinct().persist()
-    val touchedDAff = bucketVals(affected.select(bkt(col("doc_id")).as("b")))
+    val touchedDAff = bucketSet(affected, bkt(col("doc_id")))
     val docPaths = storePaths(root, prior, "doc", touchedDAff)
     val updatedOld = latestRows(readOr(spark, docPaths, DOC_SCHEMA))
       .join(broadcast(affected), Seq("doc_id"), "left_semi")
@@ -443,18 +437,15 @@ object ReleaseStream {
       .join(nhitNew, Seq("doc_id"), "left")
       .na.fill(0L, Seq("n_shingles", "nhit"))
       .withColumn("ver", lit(batchId))
-    val docOut = updatedOld.unionByName(newRows)
-      .withColumn("dbkt", bkt(col("doc_id"))).persist()
-    docOut.repartition(col("dbkt")).write.mode("overwrite")
-      .partitionBy("dbkt").parquet(s"$root/batch=$batchId/doc")
-    val docWritten = bucketVals(docOut.select(col("dbkt").as("b")))
+    val docWritten = writeBucketedBatch(updatedOld.unionByName(newRows)
+      .withColumn("dbkt", bkt(col("doc_id"))), s"$root/batch=$batchId/doc",
+      "dbkt")
 
     // ---- append-only stores: the batch's shingle postings, hash minima,
     // and source-priority mirror rows
-    val shOut = bsh.withColumn("gbkt", bkt(col("shingle"))).persist()
-    shOut.repartition(col("gbkt")).write.mode("overwrite")
-      .partitionBy("gbkt").parquet(s"$root/batch=$batchId/sh")
-    val shWritten = bucketVals(shOut.select(col("gbkt").as("b")))
+    val shWritten = writeBucketedBatch(
+      bsh.withColumn("gbkt", bkt(col("shingle"))),
+      s"$root/batch=$batchId/sh", "gbkt")
     // CLAIM LEDGER (round-17): one (h, doc_id, ver) row per folded doc
     // VERSION, not per-batch minima. The minima compression was lossy in
     // exactly the way [[refoldQuarResidue]] cannot afford: a same-batch
@@ -463,17 +454,13 @@ object ReleaseStream {
     // pmin above still reads min-over-claims (identical value); the
     // ledger costs ~40 bytes per folded doc-version — the price of
     // final-verdict repairability.
-    val exOut = d.select(col("h"), col("doc_id"))
+    val exWritten = writeBucketedBatch(d.select(col("h"), col("doc_id"))
       .withColumn("ver", lit(batchId))
-      .withColumn("xbkt", bkt(xxhash64(col("h")))).persist()
-    exOut.repartition(col("xbkt")).write.mode("overwrite")
-      .partitionBy("xbkt").parquet(s"$root/batch=$batchId/ex")
-    val exWritten = bucketVals(exOut.select(col("xbkt").as("b")))
-    val srcOut = d.select("source", "doc_id", "hcap")
-      .withColumn("sbkt", bkt(Sketches.phash60(col("source")))).persist()
-    srcOut.repartition(col("sbkt")).write.mode("overwrite")
-      .partitionBy("sbkt").parquet(s"$root/batch=$batchId/src")
-    val srcWritten = bucketVals(srcOut.select(col("sbkt").as("b")))
+      .withColumn("xbkt", bkt(xxhash64(col("h")))),
+      s"$root/batch=$batchId/ex", "xbkt")
+    val srcWritten = writeBucketedBatch(d.select("source", "doc_id", "hcap")
+      .withColumn("sbkt", bkt(Sketches.phash60(col("source")))),
+      s"$root/batch=$batchId/src", "sbkt")
 
     // ---- per-source cap: only sources present in the batch can re-rank;
     // the re-rank reads only their src-mirror buckets
@@ -484,8 +471,7 @@ object ReleaseStream {
     val deltaSources = d.select("source").distinct().persist()
     val overDelta = capn.join(deltaSources, Seq("source"), "left_semi")
       .filter(col("n") > CAP).select("source").persist()
-    val touchedS = bucketVals(
-      overDelta.select(bkt(Sketches.phash60(col("source"))).as("b")))
+    val touchedS = bucketSet(overDelta, bkt(Sketches.phash60(col("source"))))
     val srcPaths = storePaths(root, prior, "src", touchedS)
     val wCap = Window.partitionBy("source").orderBy(col("hcap"), col("doc_id"))
     val newKeep = readOr(spark, srcPaths, "source STRING, doc_id BIGINT," +
@@ -516,8 +502,8 @@ object ReleaseStream {
       } + ("tiny" -> Seq(batchId))
     commit(spark, root, batchId, man)
     Seq(d, bsh, bmin, exCombined, flips, priorEvals, newEvals, priorEvalsh,
-      newEvalsh, newSet, dSh, adj, affected, docOut, shOut, exOut, srcOut,
-      capn, deltaSources, overDelta).foreach(_.unpersist())
+      newEvalsh, newSet, dSh, adj, affected, capn, deltaSources, overDelta)
+      .foreach(_.unpersist())
     gatePersisted.foreach(_.unpersist())
     ReadPaths(exPaths, shPaths, docPaths, srcPaths)
   }
@@ -1077,15 +1063,10 @@ object ReleaseStream {
         owners.map(o => s"$root/batch=$o/$store/${PCOL(store)}=$b")
     }.flatten.toSeq
     def consolidate(store: String, df: DataFrame,
-                    pcolOf: Column): Map[String, Seq[Long]] = {
-      val out = df.withColumn(PCOL(store), pcolOf).persist()
-      out.repartition(col(PCOL(store)))
-        .write.mode("overwrite").partitionBy(PCOL(store))
-        .parquet(s"$root/batch=$gen/$store")
-      val written = bucketVals(out.select(col(PCOL(store)).as("b")))
-      out.unpersist()
-      written.map(b => s"$store/$b" -> Seq(gen)).toMap
-    }
+                    pcolOf: Column): Map[String, Seq[Long]] =
+      writeBucketedBatch(df.withColumn(PCOL(store), pcolOf),
+          s"$root/batch=$gen/$store", PCOL(store))
+        .map(b => s"$store/$b" -> Seq(gen)).toMap
     var newMan = Map.empty[String, Seq[Long]]
     newMan ++= consolidate("doc",
       latestRows(readOr(spark, live("doc"), DOC_SCHEMA)), bkt(col("doc_id")))
@@ -1353,7 +1334,7 @@ object ReleaseStream {
     // ---- 1. the residue set: quarantine-winning docs holding fact rows
     val quarLatest = latestRows(readOr(spark, quarPaths, QUAR_SCHEMA))
       .select(col("doc_id"), col("ver").as("qver")).persist()
-    val qDbkts = bucketVals(quarLatest.select(bkt(col("doc_id")).as("b")))
+    val qDbkts = bucketSet(quarLatest, bkt(col("doc_id")))
     val residue = latestRows(readOr(spark,
         storePaths(root, man, "doc", qDbkts), DOC_SCHEMA))
       .join(quarLatest, Seq("doc_id"))
@@ -1404,7 +1385,7 @@ object ReleaseStream {
                             exciseSh: Boolean): (Long, Long, Long, Long) = {
     val rIds = residue.select("doc_id").persist()
     val nResidue = rIds.count()
-    val rDbkts = bucketVals(rIds.select(bkt(col("doc_id")).as("b")))
+    val rDbkts = bucketSet(rIds, bkt(col("doc_id")))
 
     // ---- 2. residue docs' archived versions -> their claim buckets
     val arcR = arc.join(rIds, Seq("doc_id"), "left_semi")
@@ -1419,7 +1400,7 @@ object ReleaseStream {
     Curation.exciseFromIncrementalIndex(spark, s"$root/cidx", rIds, below)
 
     // ---- 4. claim ledger: excise residue claims, promote next keepers
-    val hBkts = bucketVals(arcR.select(bkt(xxhash64(col("h"))).as("b")))
+    val hBkts = bucketSet(arcR, bkt(xxhash64(col("h"))))
     val claims = readOr(spark, storePaths(root, man, "ex", hBkts), EX_SCHEMA)
       .persist()
     val removed = claims.join(rIds, Seq("doc_id"), "left_semi").persist()
@@ -1445,7 +1426,7 @@ object ReleaseStream {
     val candIds = candClaims.select("doc_id").distinct()
     val arcC = arc.join(candIds, Seq("doc_id"), "left_semi")
       .withColumn("h", sha2(col("text"), 256)).filter(col("h").isNotNull)
-    val cBkts = bucketVals(arcC.select(bkt(xxhash64(col("h"))).as("b")))
+    val cBkts = bucketSet(arcC, bkt(xxhash64(col("h"))))
     val operative = readOr(spark, storePaths(root, man, "ex", cBkts),
         EX_SCHEMA)
       .join(candIds, Seq("doc_id"), "left_semi")
@@ -1489,7 +1470,7 @@ object ReleaseStream {
         val arcA = arc.join(admitted, Seq("doc_id"), "left_semi")
           .withColumn("h", sha2(col("text"), 256))
           .filter(col("h").isNotNull).persist()
-        val aBkts = bucketVals(arcA.select(bkt(xxhash64(col("h"))).as("b")))
+        val aBkts = bucketSet(arcA, bkt(xxhash64(col("h"))))
         val opA = readOr(spark, storePaths(root, man, "ex", aBkts),
             EX_SCHEMA)
           .join(admitted, Seq("doc_id"), "left_semi")
@@ -1516,7 +1497,7 @@ object ReleaseStream {
         val dSh = newSet.except(oldSet).withColumn("dn", lit(1L))
           .unionByName(oldSet.except(newSet).withColumn("dn", lit(-1L)))
           .persist()
-        val touchedG = bucketVals(dSh.select(bkt(col("shingle")).as("b")))
+        val touchedG = bucketSet(dSh, bkt(col("shingle")))
         val adjusted = readOr(spark,
             storePaths(root, man, "sh", touchedG),
             "shingle BIGINT, doc_id BIGINT")
@@ -1537,8 +1518,7 @@ object ReleaseStream {
     val affSources = rSrc.select("source").persist()
     val overAff = newCapn.join(affSources, Seq("source"), "left_semi")
       .filter(col("n") > CAP).select("source").persist()
-    val sBkts = bucketVals(
-      affSources.select(bkt(Sketches.phash60(col("source"))).as("b")))
+    val sBkts = bucketSet(affSources, bkt(Sketches.phash60(col("source"))))
     val srcRows = readOr(spark, storePaths(root, man, "src", sBkts),
       "source STRING, doc_id BIGINT, hcap BIGINT")
     val keepSrc = srcRows.join(rIds, Seq("doc_id"), "left_anti").persist()
@@ -1552,9 +1532,8 @@ object ReleaseStream {
 
     // ---- 7. fact-store rewrite: delete residue, apply promotions +
     // nhit adjustments, PRESERVE ver
-    val updDbkts = rDbkts ++
-      bucketVals(promoted.select(bkt(col("doc_id")).as("b"))) ++
-      bucketVals(adj.select(bkt(col("doc_id")).as("b")))
+    val updDbkts = rDbkts ++ bucketSet(promoted, bkt(col("doc_id"))) ++
+      bucketSet(adj, bkt(col("doc_id")))
     val docOut = latestRows(readOr(spark,
         storePaths(root, man, "doc", updDbkts), DOC_SCHEMA))
       .join(rIds, Seq("doc_id"), "left_anti")
@@ -1566,26 +1545,21 @@ object ReleaseStream {
         col("n_shingles"),
         (col("nhit") + coalesce(col("dn"), lit(0L))).as("nhit"),
         col("ver"))
-      .withColumn("dbkt", bkt(col("doc_id"))).persist()
+      .withColumn("dbkt", bkt(col("doc_id")))
 
     // ---- 8. publish everything under one fresh negative generation,
     // then the frontier manifest, atomically, LAST
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sessionState.newHadoopConf())
     val gen = math.min(Manifests.batches(fs, root).min, 0L) - 1L
-    docOut.repartition(col("dbkt")).write.mode("overwrite")
-      .partitionBy("dbkt").parquet(s"$root/batch=$gen/doc")
-    val docWritten = bucketVals(docOut.select(col("dbkt").as("b")))
-    val exOut = remaining.withColumn("xbkt", bkt(xxhash64(col("h"))))
-      .persist()
-    exOut.repartition(col("xbkt")).write.mode("overwrite")
-      .partitionBy("xbkt").parquet(s"$root/batch=$gen/ex")
-    val exWritten = bucketVals(exOut.select(col("xbkt").as("b")))
-    val srcOut = keepSrc
-      .withColumn("sbkt", bkt(Sketches.phash60(col("source")))).persist()
-    srcOut.repartition(col("sbkt")).write.mode("overwrite")
-      .partitionBy("sbkt").parquet(s"$root/batch=$gen/src")
-    val srcWritten = bucketVals(srcOut.select(col("sbkt").as("b")))
+    val docWritten = writeBucketedBatch(docOut, s"$root/batch=$gen/doc",
+      "dbkt")
+    val exWritten = writeBucketedBatch(
+      remaining.withColumn("xbkt", bkt(xxhash64(col("h")))),
+      s"$root/batch=$gen/ex", "xbkt")
+    val srcWritten = writeBucketedBatch(
+      keepSrc.withColumn("sbkt", bkt(Sketches.phash60(col("source")))),
+      s"$root/batch=$gen/src", "sbkt")
     newEvals.write.mode("overwrite").parquet(s"$root/batch=$gen/tiny/evals")
     newEvalsh.write.mode("overwrite")
       .parquet(s"$root/batch=$gen/tiny/evalsh")
@@ -1598,17 +1572,15 @@ object ReleaseStream {
     val shExcise: Option[(Set[Long], Set[Long])] =
       if (!exciseSh) None
       else {
-        val shBkts = bucketVals(
-          Dedup.hashedShingles(arcR.select("doc_id", "text"))
-            .select(bkt(col("shingle")).as("b")))
-        val shOut = readOr(spark, storePaths(root, man, "sh", shBkts),
-            "shingle BIGINT, doc_id BIGINT")
-          .join(rIds, Seq("doc_id"), "left_anti")
-          .withColumn("gbkt", bkt(col("shingle"))).persist()
-        shOut.repartition(col("gbkt")).write.mode("overwrite")
-          .partitionBy("gbkt").parquet(s"$root/batch=$gen/sh")
-        val shWritten = bucketVals(shOut.select(col("gbkt").as("b")))
-        shOut.unpersist()
+        val shBkts = bucketSet(
+          Dedup.hashedShingles(arcR.select("doc_id", "text")),
+          bkt(col("shingle")))
+        val shWritten = writeBucketedBatch(
+          readOr(spark, storePaths(root, man, "sh", shBkts),
+              "shingle BIGINT, doc_id BIGINT")
+            .join(rIds, Seq("doc_id"), "left_anti")
+            .withColumn("gbkt", bkt(col("shingle"))),
+          s"$root/batch=$gen/sh", "gbkt")
         Some((shBkts, shWritten))
       }
     def retarget(m: Map[String, Seq[Long]], store: String,
@@ -1637,8 +1609,7 @@ object ReleaseStream {
 
     Seq(rIds, arcR, claims, removed, remaining,
       needKeeper, candClaims, promoted, evals, evalsh, rSrc, newCapn,
-      affSources, overAff, keepSrc, newCapkeep, docOut, exOut, srcOut)
-      .foreach(_.unpersist())
+      affSources, overAff, keepSrc, newCapkeep).foreach(_.unpersist())
     (nResidue, nPromoted, seatsLost, gen)
   }
 
@@ -1676,7 +1647,7 @@ object ReleaseStream {
     val (frontier, man) = manOpt.get
     if (!man.contains("tiny")) return 0L
     val bkeys = batchKeys.select("doc_id").distinct().persist()
-    val touched = bucketVals(bkeys.select(bkt(col("doc_id")).as("b")))
+    val touched = bucketSet(bkeys, bkt(col("doc_id")))
     val residue = latestRows(readOr(spark,
         storePaths(root, man, "doc", touched), DOC_SCHEMA))
       .join(bkeys, Seq("doc_id"), "left_semi").persist()
@@ -1693,9 +1664,6 @@ object ReleaseStream {
   }
 
   // ------------------------------------------------------------ plumbing --
-
-  private def bucketVals(df: DataFrame): Set[Long] =
-    df.distinct().collect().map(_.getLong(0)).toSet // ≤32: bounded driver state
 
   /** Every leaf directory a manifest names for one store. */
   private def manPaths(root: String, man: Map[String, Seq[Long]],

@@ -10,6 +10,8 @@ object TestSpark {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    // one compiled-class cache for every spec in the forked JVM
+    .config("spark.sql.codegen.cache.maxEntries", Sessions.CodegenCacheEntries)
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
     .getOrCreate()

@@ -116,27 +116,40 @@ class ArtifactSpec extends AnyFunSuite {
   test("ensureTree publishes atomically: a crashed build never publishes, " +
     "and the retry rebuilds from scratch (no partial content survives)") {
     val key = "tree-crash-spec|" + java.util.UUID.randomUUID().toString
-    val boom = intercept[RuntimeException] {
-      DedupArtifacts.ensureTree(key) { dir =>
+    // the random key makes a fresh tree in the shared artifact cache:
+    // remove it (and any staging dir) whatever the outcome
+    var staging: Option[String] = None
+    try {
+      val boom = intercept[RuntimeException] {
+        DedupArtifacts.ensureTree(key) { dir =>
+          staging = Some(dir)
+          java.nio.file.Files.writeString(
+            java.nio.file.Paths.get(dir, "partial.txt"), "half-written")
+          throw new RuntimeException("boom")
+        }
+      }
+      assert(boom.getMessage === "boom")
+      // the retry must get a CLEAN staging dir (the crashed attempt's
+      // partial content must not leak into the published tree) and
+      // publish atomically
+      val dir = DedupArtifacts.ensureTree(key) { d =>
+        assert(!new java.io.File(d, "partial.txt").exists(),
+          "the staging dir of a retry must start clean")
         java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(dir, "partial.txt"), "half-written")
-        throw new RuntimeException("boom")
+          java.nio.file.Paths.get(d, "good.txt"), "ok")
+      }
+      assert(new java.io.File(dir, "good.txt").exists(),
+        "the retried build's content must be published")
+      assert(new java.io.File(dir, "_GRAFT_INDEX_OK").exists(),
+        "the published tree carries its completeness marker")
+      assert(!new java.io.File(dir + ".tmp").exists(),
+        "the staging dir must be gone after publication")
+    } finally {
+      staging.foreach { s =>
+        org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(s))
+        org.apache.hadoop.fs.FileUtil.fullyDelete(
+          new java.io.File(s.stripSuffix(".tmp")))
       }
     }
-    assert(boom.getMessage === "boom")
-    // the retry must get a CLEAN staging dir (the crashed attempt's partial
-    // content must not leak into the published tree) and publish atomically
-    val dir = DedupArtifacts.ensureTree(key) { d =>
-      assert(!new java.io.File(d, "partial.txt").exists(),
-        "the staging dir of a retry must start clean")
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(d, "good.txt"), "ok")
-    }
-    assert(new java.io.File(dir, "good.txt").exists(),
-      "the retried build's content must be published")
-    assert(new java.io.File(dir, "_GRAFT_INDEX_OK").exists(),
-      "the published tree carries its completeness marker")
-    assert(!new java.io.File(dir + ".tmp").exists(),
-      "the staging dir must be gone after publication")
   }
 }
