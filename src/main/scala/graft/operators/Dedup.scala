@@ -1731,7 +1731,8 @@ object Dedup {
       val idxA = idx.filter(col("doc_id") % 2 === 0).persist()
       val idxB = idx.filter(col("doc_id") % 2 =!= 0)
       val labelsA = s.read.parquet(
-        DedupArtifacts.ensureDerived(s, s"$idxDir|evenlabels|t=800|v=1") {
+        DedupArtifacts.ensureDerived(s,
+          s"${DedupArtifacts.keyOf(idxDir)}|evenlabels|t=800|v=2") {
           val (l, _) = ccStarContract(
             incrementalNearDupPairs(idxA.limit(0), idxA, 800)
               .select("d1", "d2"))

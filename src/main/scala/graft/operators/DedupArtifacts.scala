@@ -80,6 +80,14 @@ object DedupArtifacts {
         ensureUncached(spark, sfDir, contMinX1e3, planted))
     }
 
+  /** The key part naming an artifact that another artifact derives from:
+    * its directory name (`curidx_<md5>`, `tree_<md5>`), itself a content
+    * key. Its absolute path changes with `GRAFT_ARTIFACT_DIR`, so a key
+    * on it would rebuild the derived artifact under every artifact root.
+    */
+  private[graft] def keyOf(artifactDir: String): String =
+    new org.apache.hadoop.fs.Path(artifactDir).getName
+
   /** Generic build-once derived-relation artifact (the curation-index
     * pattern for ANY deterministic relation): resolve — building on first
     * miss — a parquet directory holding `build`'s output, content-keyed by
@@ -191,7 +199,7 @@ object DedupArtifacts {
                                          thresholdX1e3: Int = 800,
                                          planted: Boolean = false): String = {
     val idxDir = ensureCurationIndex(spark, sfDir, planted = planted)
-    ensureDerived(spark, s"$idxDir|vpairs|t=$thresholdX1e3|v=1")(
+    ensureDerived(spark, s"${keyOf(idxDir)}|vpairs|t=$thresholdX1e3|v=2")(
       Dedup.verifiedPairsFromIndex(
         spark.read.parquet(idxDir).select("doc_id", "sig", "sh"),
         thresholdX1e3))
@@ -206,7 +214,8 @@ object DedupArtifacts {
                                             contMinX1e3: Int = 900,
                                             jacMaxX1e3: Int = 800): String = {
     val idxDir = ensureCurationIndex(spark, sfDir)
-    ensureDerived(spark, s"$idxDir|cpairs|c=$contMinX1e3|j=$jacMaxX1e3|v=1")(
+    ensureDerived(spark,
+      s"${keyOf(idxDir)}|cpairs|c=$contMinX1e3|j=$jacMaxX1e3|v=2")(
       Dedup.containmentPairsFromIndex(spark.read.parquet(idxDir),
         contMinX1e3, jacMaxX1e3))
   }

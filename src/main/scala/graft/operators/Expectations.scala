@@ -2044,8 +2044,8 @@ object Expectations {
                                             sfDir: String): String =
     DedupArtifacts.cachedDir(s"kauditroll|$sfDir") {
       val src = ensureKeyedAuditState(spark, sfDir)
-      val srcKey = new org.apache.hadoop.fs.Path(src).getName
-      DedupArtifacts.ensureTree(s"kauditroll|$srcKey|e=2|r=1|v=2") { stage =>
+      DedupArtifacts.ensureTree(
+        s"kauditroll|${DedupArtifacts.keyOf(src)}|e=2|r=1|v=2") { stage =>
         val conf = spark.sessionState.newHadoopConf()
         val fs = new org.apache.hadoop.fs.Path(src).getFileSystem(conf)
         Seq("docs", "embs").foreach { sub =>

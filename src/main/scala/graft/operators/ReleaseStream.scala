@@ -898,7 +898,8 @@ object ReleaseStream {
     DedupArtifacts.cachedDir(s"$sfDir|relexport|${sc.tag}") {
       val root = ensureScenarioState(spark, sfDir, sc)
       DedupArtifacts.ensureDerived(spark,
-        s"relexport|$root|b=max|v=1")(releaseState(spark, root))
+        s"relexport|${DedupArtifacts.keyOf(root)}|b=max|v=2")(
+        releaseState(spark, root))
     }
 
   /** [[ensureReleaseExport]] as of a batch cutoff — the export the
@@ -913,7 +914,8 @@ object ReleaseStream {
                                            batchId: Long): String =
     DedupArtifacts.cachedDir(s"$sfDir|relexport|$batchId") {
       val root = ensureScenarioState(spark, sfDir, Scenarios.Base)
-      DedupArtifacts.ensureDerived(spark, s"relexport|$root|b=$batchId|v=1") {
+      DedupArtifacts.ensureDerived(spark,
+        s"relexport|${DedupArtifacts.keyOf(root)}|b=$batchId|v=2") {
         releaseStateAt(spark, root, batchId)
       }
     }
