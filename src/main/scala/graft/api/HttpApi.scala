@@ -3,6 +3,8 @@ package graft.api
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.{ExecutorService, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 /** The reference's HTTP surface (S-7), served over [[CdcEngine]] with the
   * JDK's built-in `com.sun.net.httpserver` — no framework dependency.
@@ -26,18 +28,31 @@ import java.nio.charset.StandardCharsets.UTF_8
   */
 final class HttpApi(engine: CdcEngine, port: Int = 0) {
 
-  private val server: HttpServer = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+  private val server: HttpServer = HttpApi.newServer(port)
   server.createContext("/api/v1/sinners", new Routes)
-  server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))
 
   /** Bound port (useful when constructed with port=0 for tests). */
   def boundPort: Int = server.getAddress.getPort
 
+  /** The request handlers' pool; its threads are named
+    * `<HttpApi.ThreadPrefix><port>-<n>`. */
+  private val pool: ExecutorService = {
+    val n = new AtomicInteger
+    Executors.newFixedThreadPool(4, (r: Runnable) =>
+      new Thread(r, s"${HttpApi.ThreadPrefix}$boundPort-${n.incrementAndGet()}"))
+  }
+  server.setExecutor(pool)
+
   def start(): HttpApi = { server.start(); this }
 
   /** Graceful stop, bounded like the reference's 5 s shutdown window
-    * (main.go:60-68). */
-  def stop(): Unit = server.stop(1)
+    * (main.go:60-68). Ends the handler pool too, whose threads would
+    * otherwise keep the JVM alive. */
+  def stop(): Unit = {
+    server.stop(1)
+    pool.shutdown()
+    pool.awaitTermination(5, TimeUnit.SECONDS)
+  }
 
   private final class Routes extends HttpHandler {
     override def handle(ex: HttpExchange): Unit =
@@ -129,6 +144,27 @@ final class HttpApi(engine: CdcEngine, port: Int = 0) {
       ex.getResponseBody.write(b)
     }
   }
+}
+
+object HttpApi {
+
+  /** Name prefix of the handler threads. */
+  val ThreadPrefix = "graft-http-"
+
+  // The JDK server leaves Nagle's algorithm on unless this property is
+  // true. `sendResponseHeaders` flushes the headers before the body is
+  // written, so every response goes out as two writes, and the body
+  // waits for the client's delayed ACK of the headers: ~40 ms on each
+  // keep-alive request. `sun.net.httpserver.ServerConfig` reads the
+  // property once, in its static initializer, so it is set here, before
+  // the first `HttpServer.create`, and only when unset so that an
+  // explicit JVM flag still wins. `RedisStore` sets TCP_NODELAY on its
+  // own sockets for the same reason.
+  private val NoDelay = "sun.net.httpserver.nodelay"
+  if (System.getProperty(NoDelay) == null) System.setProperty(NoDelay, "true")
+
+  private def newServer(port: Int): HttpServer =
+    HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
 }
 
 /** Minimal JSON object reader for request bodies (arbitrary field order,

@@ -44,9 +44,10 @@ object Manifests {
     * POSIX rename(2) overwrite); elsewhere it is
     * `FileContext.rename(OVERWRITE)`, which HDFS implements as one atomic
     * namenode op. (The generic `AbstractFileSystem` default for OVERWRITE
-    * is itself delete-then-rename — verified against hadoop-client 3.4.2,
-    * where `RawLocalFs` overrides only the 2-arg `renameInternal` — which
-    * is why the local path goes through nio and not FileContext.)
+    * is itself delete-then-rename — verified against hadoop-client 3.4.2.
+    * The `file` binding, [[LocalAbstractFs]], overrides only the 2-arg
+    * `renameInternal` in its raw layer, as Hadoop's `RawLocalFs` does —
+    * which is why the local path goes through nio and not FileContext.)
     */
   def publish(conf: Configuration, path: Path, bytes: Array[Byte]): Unit = {
     val fs = path.getFileSystem(conf)

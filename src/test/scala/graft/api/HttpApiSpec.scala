@@ -1,8 +1,11 @@
 package graft.api
 
-import java.net.URI
+import java.io.{BufferedInputStream, ByteArrayOutputStream, IOException}
+import java.net.{InetSocketAddress, Socket, URI}
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.time.LocalDateTime
+import scala.jdk.CollectionConverters._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.store.InMemoryStore
@@ -87,5 +90,65 @@ class HttpApiSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("unknown route: 404") {
     assert(get("/nope").statusCode() == 404)
     assert(post("/read", "{}").statusCode() == 404)            // wrong method for route
+  }
+
+  /** Sends `GET path` `n` times, one after another, over one keep-alive
+    * socket written the way perfbench's client writes it (one flushed
+    * write per request, TCP_NODELAY on); returns each round trip in ms.
+    */
+  private def keepAliveGets(port: Int, path: String, n: Int): Seq[Double] = {
+    val sock = new Socket()
+    try {
+      sock.connect(new InetSocketAddress("127.0.0.1", port), 10000)
+      sock.setSoTimeout(10000)
+      sock.setTcpNoDelay(true)
+      val in = new BufferedInputStream(sock.getInputStream)
+      val out = sock.getOutputStream
+      def line(): String = {
+        val b = new ByteArrayOutputStream
+        var c = in.read()
+        while (c != '\n') {
+          if (c < 0) throw new IOException("connection closed")
+          if (c != '\r') b.write(c)
+          c = in.read()
+        }
+        b.toString(UTF_8)
+      }
+      val request = s"GET $path HTTP/1.1\r\nHost: 127.0.0.1:$port\r\n\r\n".getBytes(UTF_8)
+      (1 to n).map { _ =>
+        val t0 = System.nanoTime()
+        out.write(request)
+        out.flush()
+        assert(line().startsWith("HTTP/1.1 200"))
+        var length = 0
+        var h = line()
+        while (h.nonEmpty) {
+          if (h.toLowerCase.startsWith("content-length:")) length = h.drop(15).trim.toInt
+          h = line()
+        }
+        assert(in.readNBytes(length).length == length)
+        (System.nanoTime() - t0) / 1e6
+      }
+    } finally sock.close()
+  }
+
+  test("sequential keep-alive GETs are not held back by Nagle's algorithm") {
+    // With Nagle on at the server, each response body waits for the
+    // client's delayed ACK of the headers, about 40 ms a request.
+    engine.createOne(77, "Yi Sang", "A", None, None)
+    val ms = keepAliveGets(api.boundPort, "/api/v1/sinners/read/77", 50).sorted
+    assert(ms(ms.size / 2) < 20, s"median ${ms(ms.size / 2)} ms; all: ${ms.mkString(", ")}")
+  }
+
+  test("stop() ends the handler threads") {
+    val other = new HttpApi(new CdcEngine(new InMemoryStore, clock)).start()
+    val prefix = s"${HttpApi.ThreadPrefix}${other.boundPort}-"
+    def handlers() = Thread.getAllStackTraces.keySet.asScala.filter(_.getName.startsWith(prefix))
+    keepAliveGets(other.boundPort, "/api/v1/sinners/read", 1)
+    val started = handlers()
+    assert(started.nonEmpty)
+    other.stop()
+    started.foreach(_.join(1000))
+    assert(handlers().isEmpty)
   }
 }
