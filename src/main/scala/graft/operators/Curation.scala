@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.sources.Tables
 import graft.store.Manifests
 import graft.operators.ReleaseStream.Scenarios
@@ -444,9 +445,20 @@ object Curation {
                                         schemaLike: DataFrame): DataFrame = {
     val cols = schemaLike.columns.map(col).toSeq
     if (paths.isEmpty) schemaLike.limit(0)
-    else spark.read.option("basePath", dir).parquet(paths: _*)
-      .select(cols: _*)
+    else spark.read.schema(schemaLike.schema).option("basePath", dir)
+      .parquet(paths: _*).select(cols: _*)
   }
+
+  /** Read manifest-named leaf directories under their declared `schema`
+    * (an empty local relation when there are none, which the optimizer
+    * folds away). Spark infers a schema-less parquet read's schema with a
+    * job of its own per call; a declared one plans from the paths alone.
+    */
+  private[operators] def readLeaves(spark: SparkSession, paths: Seq[String],
+                                    schema: StructType): DataFrame =
+    if (paths.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else spark.read.schema(schema).parquet(paths: _*)
 
   /** The one bucketed-store writer: overwrite `path` with `df` partitioned
     * by `bkCol`, and return the buckets written — the `bkCol=K`
@@ -676,8 +688,8 @@ object Curation {
       : (Seq[String], Seq[String]) = {
     val spark = batch.sparkSession
     nearDupIngestBatch(batch, batchId, indexDir, pairsDir, thresholdX1e3)
-    val deltaPairs = spark.read.parquet(s"$pairsDir/batch=$batchId")
-      .select("d1", "d2").persist()
+    val deltaPairs = readLeaves(spark, Seq(s"$pairsDir/batch=$batchId"),
+        PAIR_SCHEMA).select("d1", "d2").persist()
     val priorMan = latestLabelCommit(spark, labelsDir, batchId)
       .map(_._2).getOrElse(LabelManifest(Map.empty, Map.empty))
     val eps = deltaPairs.select(col("d1").as("doc_id"))
@@ -811,17 +823,24 @@ object Curation {
     manifest.toSeq
       .map { case (b, owner) => s"$labelsDir/batch=$owner/docmap/dbkt=$b" }
 
+  /** The leaf schemas of the cluster-label state: the label buckets, the
+    * docmap mirror, and the per-batch verified pairs. StoreSchemaSpec
+    * pins them to what the writers write.
+    */
+  private[graft] val LABEL_SCHEMA =
+    StructType.fromDDL("doc_id BIGINT, cluster_id BIGINT")
+  private[graft] val DOCMAP_SCHEMA =
+    StructType.fromDDL("doc_id BIGINT, cbkt BIGINT")
+  private[graft] val PAIR_SCHEMA =
+    StructType.fromDDL("d1 BIGINT, d2 BIGINT, jaccard_x1e3 BIGINT")
+
   private def readLabelPaths(spark: SparkSession,
                              paths: Seq[String]): DataFrame =
-    if (paths.isEmpty)
-      spark.range(0).selectExpr("id AS doc_id", "id AS cluster_id")
-    else spark.read.parquet(paths: _*).select("doc_id", "cluster_id")
+    readLeaves(spark, paths, LABEL_SCHEMA)
 
   private def readDocMapPaths(spark: SparkSession,
                               paths: Seq[String]): DataFrame =
-    if (paths.isEmpty)
-      spark.range(0).selectExpr("id AS doc_id", "id AS cbkt")
-    else spark.read.parquet(paths: _*).select("doc_id", "cbkt")
+    readLeaves(spark, paths, DOCMAP_SCHEMA)
 
   /** Resolve a manifest to its label relation: one parquet read over the
     * referenced `batch=<owner>/cbkt=<b>` leaf directories.
@@ -914,8 +933,8 @@ object Curation {
     val edges =
       if (pairDirs.isEmpty)
         spark.range(0).selectExpr("id AS d1", "id AS d2")
-      else spark.read.option("basePath", pairsDir).parquet(pairDirs: _*)
-        .select("d1", "d2")
+      else spark.read.schema(PAIR_SCHEMA).option("basePath", pairsDir)
+        .parquet(pairDirs: _*).select("d1", "d2")
         .join(keep.withColumnRenamed("doc_id", "d1"), Seq("d1"), "left_semi")
         .join(keep.withColumnRenamed("doc_id", "d2"), Seq("d2"), "left_semi")
     // 3. re-quotient: pure CC over the surviving edges (q49's min-root

@@ -1581,36 +1581,20 @@ object Expectations {
     ()
   }
 
-  /** The long-running route-store ingest for one audited table.
-    * `compactEvery` > 0 codes the retention policy (the q156
-    * convention): every K-th batch consolidates the accumulated
-    * per-batch dirs below its own id via [[compactRouteStore]], so the
-    * readout enumerates ≤ K+1 dirs instead of one per batch ever
-    * ingested — same replay rule as every policy here (a replayed
-    * policy batch re-consolidates the same prefix its first attempt
-    * did).
+  /** One route-store micro-batch under a retention policy.
+    * `compactEvery` > 0 codes it (the q156 convention): every K-th batch
+    * consolidates the accumulated per-batch dirs below its own id via
+    * [[compactRouteStore]], so the readout enumerates ≤ K+1 dirs instead
+    * of one per batch ever ingested — same replay rule as every policy
+    * here (a replayed policy batch re-consolidates the same prefix its
+    * first attempt did).
     */
-  def streamingRouteIngest(docs: DataFrame, root: String,
-                           checkpoint: String, keyCol: String,
-                           checks: Seq[Check], refCols: Seq[String] = Nil,
-                           compactEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(compactEvery >= 0, "compactEvery: 0 disables, else every K batches")
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        routeIngestWithPolicy(batch, batchId, root, keyCol, checks,
-          refCols, compactEvery)
-      }
-      .start()
-  }
-
   private[graft] def routeIngestWithPolicy(batch: DataFrame, batchId: Long,
                                            root: String, keyCol: String,
                                            checks: Seq[Check],
                                            refCols: Seq[String],
                                            compactEvery: Int): Unit = {
+    require(compactEvery >= 0, "compactEvery: 0 disables, else every K batches")
     if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
       compactRouteStore(batch.sparkSession, root, below = batchId)
     routeIngestBatch(batch, batchId, root, keyCol, checks, refCols)

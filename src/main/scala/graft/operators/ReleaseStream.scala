@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import scala.collection.immutable.ListMap
+
 import graft.store.Manifests
 import graft.operators.Curation.{bucketSet, writeBucketedBatch}
 
@@ -164,20 +166,38 @@ object ReleaseStream {
   private val CAP: Int = Prep.SOURCE_CAP
   private val THRESHOLD = 800
 
-  private val DOC_SCHEMA = "doc_id BIGINT, source STRING, lang STRING," +
-    " n_tokens BIGINT, exact_rm BIGINT, n_shingles BIGINT, nhit BIGINT," +
-    " ver BIGINT"
   private val OUT_SCHEMA = "doc_id BIGINT, source STRING, n_tokens BIGINT," +
     " stage STRING, split STRING, n_copies BIGINT"
-  private val QUAR_SCHEMA = "doc_id BIGINT, source STRING," +
-    " n_tokens BIGINT, ver BIGINT"
-  private val EX_SCHEMA = "h STRING, doc_id BIGINT, ver BIGINT"
 
   /** Partition-column name per store (the manifest keys buckets as
     * `<store>/<bucket>`; paths are `batch=<owner>/<store>/<pcol>=<bucket>`).
     */
-  private val PCOL = Map("doc" -> "dbkt", "sh" -> "gbkt", "ex" -> "xbkt",
-    "src" -> "sbkt", "quar" -> "qbkt")
+  private[graft] val PCOL = Map("doc" -> "dbkt", "sh" -> "gbkt",
+    "ex" -> "xbkt", "src" -> "sbkt", "quar" -> "qbkt")
+
+  /** Each store's leaf schema, keyed like [[PCOL]]. Every read passes
+    * it, so a read plans from the manifest's leaf paths without a Spark
+    * job to infer it; StoreSchemaSpec pins it to what the writers write.
+    */
+  private[graft] val STORE_SCHEMA: Map[String, StructType] = Map(
+    "doc" -> ("doc_id BIGINT, source STRING, lang STRING, n_tokens BIGINT," +
+      " exact_rm BIGINT, n_shingles BIGINT, nhit BIGINT, ver BIGINT"),
+    "sh" -> "doc_id BIGINT, shingle BIGINT",
+    "ex" -> "h STRING, doc_id BIGINT, ver BIGINT",
+    "src" -> "source STRING, doc_id BIGINT, hcap BIGINT",
+    "quar" -> "doc_id BIGINT, source STRING, n_tokens BIGINT, ver BIGINT")
+    .map { case (k, ddl) => k -> StructType.fromDDL(ddl) }
+
+  /** The tiny relations (`batch=<owner>/tiny/<rel>`: one owner, rewritten
+    * whole per batch) and their schemas — the one list the fold, the
+    * readout, compaction, fsck and the refold go by.
+    */
+  private[graft] val TINY_SCHEMA: ListMap[String, StructType] = ListMap(
+    "evals" -> "lang STRING, doc_id BIGINT, hsmp BIGINT",
+    "evalsh" -> "doc_id BIGINT, shingle BIGINT",
+    "capn" -> "source STRING, n BIGINT",
+    "capkeep" -> "source STRING, doc_id BIGINT")
+    .map { case (k, ddl) => k -> StructType.fromDDL(ddl) }
 
   private def bkt(c: Column): Column = pmod(c, lit(N_BUCKETS))
 
@@ -296,8 +316,8 @@ object ReleaseStream {
           else {
             val bkeys = flagged0.select("doc_id").distinct()
             val touchedD = bucketSet(bkeys, bkt(col("doc_id")))
-            val claimed = readOr(spark,
-                storePaths(root, prior, "doc", touchedD), DOC_SCHEMA)
+            val claimed = readStore(spark,
+                storePaths(root, prior, "doc", touchedD), "doc")
               .select("doc_id")
               .join(bkeys, Seq("doc_id"), "left_semi").distinct()
               .withColumn("__cl", lit(1L))
@@ -355,7 +375,7 @@ object ReleaseStream {
     val bmin = d.groupBy("h").agg(min(col("doc_id")).as("bdoc")).persist()
     val touchedX = bucketSet(bmin, bkt(xxhash64(col("h"))))
     val exPaths = storePaths(root, prior, "ex", touchedX)
-    val pmin = readOr(spark, exPaths, EX_SCHEMA)
+    val pmin = readStore(spark, exPaths, "ex")
       .join(bmin.select("h"), Seq("h"), "left_semi")
       .groupBy("h").agg(min(col("doc_id")).as("pdoc"))
     val exCombined = bmin.join(pmin, Seq("h"), "left")
@@ -373,11 +393,9 @@ object ReleaseStream {
     // text is in hand), evictions always prior sample docs (their
     // shingles are in the tiny evalsh relation).
     val tinyOwner = prior.get("tiny").flatMap(_.headOption)
-    def tinyRead(rel: String, schema: String): DataFrame =
-      tinyOwner.map(o => spark.read.parquet(s"$root/batch=$o/tiny/$rel"))
-        .getOrElse(emptyDf(spark, schema))
-    val priorEvals =
-      tinyRead("evals", "lang STRING, doc_id BIGINT, hsmp BIGINT").persist()
+    def tinyRead(rel: String): DataFrame = Curation.readLeaves(spark,
+      tinyOwner.map(o => s"$root/batch=$o/tiny/$rel").toSeq, TINY_SCHEMA(rel))
+    val priorEvals = tinyRead("evals").persist()
     val wSmp = Window.partitionBy("lang").orderBy(col("hsmp"), col("doc_id"))
     val newEvals = priorEvals.unionByName(d.select("lang", "doc_id", "hsmp"))
       .withColumn("rnk", row_number().over(wSmp))
@@ -389,8 +407,7 @@ object ReleaseStream {
     val evalDrop = priorEvals
       .join(newEvals.select("doc_id"), Seq("doc_id"), "left_anti")
       .select("doc_id")
-    val priorEvalsh =
-      tinyRead("evalsh", "doc_id BIGINT, shingle BIGINT").persist()
+    val priorEvalsh = tinyRead("evalsh").persist()
     val newEvalsh = priorEvalsh.join(evalDrop, Seq("doc_id"), "left_anti")
       .unionByName(bsh.join(evalAdd, Seq("doc_id"), "left_semi")
         .select("doc_id", "shingle"))
@@ -407,7 +424,7 @@ object ReleaseStream {
     // batch's shingles are appended, so exactly the prior docs are hit
     val touchedG = bucketSet(dSh, bkt(col("shingle")))
     val shPaths = storePaths(root, prior, "sh", touchedG)
-    val adj = readOr(spark, shPaths, "shingle BIGINT, doc_id BIGINT")
+    val adj = readStore(spark, shPaths, "sh")
       .join(broadcast(dSh), Seq("shingle"))
       .groupBy("doc_id").agg(sum("dn").as("dn"))
       .filter(col("dn") =!= 0)
@@ -416,7 +433,7 @@ object ReleaseStream {
       .distinct().persist()
     val touchedDAff = bucketSet(affected, bkt(col("doc_id")))
     val docPaths = storePaths(root, prior, "doc", touchedDAff)
-    val updatedOld = latestRows(readOr(spark, docPaths, DOC_SCHEMA))
+    val updatedOld = latestRows(readStore(spark, docPaths, "doc"))
       .join(broadcast(affected), Seq("doc_id"), "left_semi")
       .join(broadcast(adj), Seq("doc_id"), "left")
       .join(broadcast(flips.withColumn("fl", lit(1L))), Seq("doc_id"), "left")
@@ -464,7 +481,7 @@ object ReleaseStream {
 
     // ---- per-source cap: only sources present in the batch can re-rank;
     // the re-rank reads only their src-mirror buckets
-    val priorCapn = tinyRead("capn", "source STRING, n BIGINT")
+    val priorCapn = tinyRead("capn")
     val capn = priorCapn
       .unionByName(d.groupBy("source").agg(count(lit(1)).as("n")))
       .groupBy("source").agg(sum("n").as("n")).persist()
@@ -474,13 +491,12 @@ object ReleaseStream {
     val touchedS = bucketSet(overDelta, bkt(Sketches.phash60(col("source"))))
     val srcPaths = storePaths(root, prior, "src", touchedS)
     val wCap = Window.partitionBy("source").orderBy(col("hcap"), col("doc_id"))
-    val newKeep = readOr(spark, srcPaths, "source STRING, doc_id BIGINT," +
-        " hcap BIGINT")
+    val newKeep = readStore(spark, srcPaths, "src")
       .unionByName(d.select("source", "doc_id", "hcap"))
       .join(broadcast(overDelta), Seq("source"))
       .withColumn("rnk", row_number().over(wCap))
       .filter(col("rnk") <= CAP).select("source", "doc_id")
-    val capkeep = tinyRead("capkeep", "source STRING, doc_id BIGINT")
+    val capkeep = tinyRead("capkeep")
       .join(broadcast(deltaSources), Seq("source"), "left_anti")
       .unionByName(newKeep)
 
@@ -555,7 +571,7 @@ object ReleaseStream {
     // store and skip all of this.
     val quarPaths = manPaths(root, man, "quar")
     val gated = quarPaths.nonEmpty
-    val quarAll = latestRows(readOr(spark, quarPaths, QUAR_SCHEMA))
+    val quarAll = latestRows(readStore(spark, quarPaths, "quar"))
     def quarOf(winners: Option[DataFrame]): DataFrame =
       winners.foldLeft(quarAll)((q, w) => q.join(w, Seq("doc_id"), "left_semi"))
         .select(col("doc_id"), col("source"), col("n_tokens"),
@@ -661,7 +677,7 @@ object ReleaseStream {
     val manOpt = latestCommit(spark, root, Long.MaxValue)
     if (manOpt.isEmpty) return emptyDf(spark, OUT_SCHEMA)
     val man = manOpt.get._2
-    val quar = readOr(spark, manPaths(root, man, "quar"), QUAR_SCHEMA)
+    val quar = readStore(spark, manPaths(root, man, "quar"), "quar")
       .select(col("doc_id"), col("source"), col("n_tokens"),
         lit("quarantined").as("stage"),
         Dedup.hashSplitOf(col("doc_id")).as("split"),
@@ -683,13 +699,12 @@ object ReleaseStream {
   private def stagedRelation(spark: SparkSession, root: String,
                              man: Map[String, Seq[Long]],
                              batchId: Long): DataFrame = {
-    val docs = latestRows(readOr(spark, manPaths(root, man, "doc"),
-      DOC_SCHEMA))
+    val docs = latestRows(readStore(spark, manPaths(root, man, "doc"), "doc"))
     val tinyO = man("tiny").head
-    val evals = spark.read.parquet(s"$root/batch=$tinyO/tiny/evals")
+    val evals = readTiny(spark, root, tinyO, "evals")
       .select(col("doc_id"), lit(1L).as("is_eval"))
-    val capn = spark.read.parquet(s"$root/batch=$tinyO/tiny/capn")
-    val capkeep = spark.read.parquet(s"$root/batch=$tinyO/tiny/capkeep")
+    val capn = readTiny(spark, root, tinyO, "capn")
+    val capkeep = readTiny(spark, root, tinyO, "capkeep")
       .select(col("doc_id"), lit(1L).as("cap_keep"))
     val labels = Curation.labelStateAt(spark, s"$root/clabels", batchId)
       .select("doc_id", "cluster_id")
@@ -1059,11 +1074,8 @@ object ReleaseStream {
       .getFileSystem(spark.sessionState.newHadoopConf())
     val batchIds = Manifests.batches(fs, root)
     val gen = math.min(batchIds.min, 0L) - 1L
-    def live(store: String): Seq[String] = man.collect {
-      case (k, owners) if k.startsWith(s"$store/") =>
-        val b = k.stripPrefix(s"$store/")
-        owners.map(o => s"$root/batch=$o/$store/${PCOL(store)}=$b")
-    }.flatten.toSeq
+    def live(store: String): DataFrame =
+      readStore(spark, manPaths(root, man, store), store)
     def consolidate(store: String, df: DataFrame,
                     pcolOf: Column): Map[String, Seq[Long]] =
       writeBucketedBatch(df.withColumn(PCOL(store), pcolOf),
@@ -1071,18 +1083,14 @@ object ReleaseStream {
         .map(b => s"$store/$b" -> Seq(gen)).toMap
     var newMan = Map.empty[String, Seq[Long]]
     newMan ++= consolidate("doc",
-      latestRows(readOr(spark, live("doc"), DOC_SCHEMA)), bkt(col("doc_id")))
+      latestRows(live("doc")), bkt(col("doc_id")))
     // the claim LEDGER consolidates verbatim — collapsing to min-per-h
     // would re-lose exactly the shadowed-copy claims the ledger exists
     // to retain (see [[refoldQuarResidue]]); the post-compaction repair
     // spec pins it
-    newMan ++= consolidate("ex", readOr(spark, live("ex"), EX_SCHEMA),
-      bkt(xxhash64(col("h"))))
-    newMan ++= consolidate("sh",
-      readOr(spark, live("sh"), "shingle BIGINT, doc_id BIGINT"),
-      bkt(col("shingle")))
-    newMan ++= consolidate("src",
-      readOr(spark, live("src"), "source STRING, doc_id BIGINT, hcap BIGINT"),
+    newMan ++= consolidate("ex", live("ex"), bkt(xxhash64(col("h"))))
+    newMan ++= consolidate("sh", live("sh"), bkt(col("shingle")))
+    newMan ++= consolidate("src", live("src"),
       bkt(Sketches.phash60(col("source"))))
     // the gated ingest's quarantine store: EVERY row survives — the
     // per-copy readout ([[keyedGatedReleaseState]]) owes one row per
@@ -1090,14 +1098,12 @@ object ReleaseStream {
     // LWW readout ([[releaseStateAt]]) applies its latest-row merge at
     // READ time either way, so keeping history costs only bytes there
     if (man.keys.exists(_.startsWith("quar/")))
-      newMan ++= consolidate("quar",
-        readOr(spark, live("quar"), QUAR_SCHEMA),
-        bkt(col("doc_id")))
+      newMan ++= consolidate("quar", live("quar"), bkt(col("doc_id")))
     // Only empty batches committed => no tiny store to carry forward; the
     // compacted manifest stays tiny-less and the readout guard handles it.
     man.get("tiny").map(_.head).foreach { tinyO =>
-      Seq("evals", "evalsh", "capn", "capkeep").foreach { rel =>
-        spark.read.parquet(s"$root/batch=$tinyO/tiny/$rel")
+      TINY_SCHEMA.keys.foreach { rel =>
+        readTiny(spark, root, tinyO, rel)
           .write.mode("overwrite").parquet(s"$root/batch=$gen/tiny/$rel")
       }
       newMan += ("tiny" -> Seq(gen))
@@ -1167,7 +1173,7 @@ object ReleaseStream {
       man.foreach { m =>
         m.foreach { case (k, owners) =>
           if (k == "tiny") {
-            Seq("evals", "evalsh", "capn", "capkeep").foreach { rel =>
+            TINY_SCHEMA.keys.foreach { rel =>
               val p = s"$root/batch=${owners.head}/tiny/$rel"
               if (!fs.exists(new org.apache.hadoop.fs.Path(p)))
                 findings += (("tiny", "error", s"missing tiny relation $p"))
@@ -1188,7 +1194,7 @@ object ReleaseStream {
             s"batch=$b is referenced by no live manifest (prune candidate)")))
         if (deep) {
           val docPaths = manPaths(root, m, "doc")
-          val dups = readOr(spark, docPaths, DOC_SCHEMA)
+          val dups = readStore(spark, docPaths, "doc")
             .groupBy("doc_id", "ver").count()
             .filter(col("count") > 1).count()
           if (dups > 0)
@@ -1206,9 +1212,9 @@ object ReleaseStream {
           // re-crawl flows make it matter.
           val quarPaths = manPaths(root, m, "quar")
           if (quarPaths.nonEmpty && !perCopyGate) {
-            val fv = latestRows(readOr(spark, docPaths, DOC_SCHEMA))
+            val fv = latestRows(readStore(spark, docPaths, "doc"))
               .select(col("doc_id"), col("ver").as("fver"))
-            val residue = latestRows(readOr(spark, quarPaths, QUAR_SCHEMA))
+            val residue = latestRows(readStore(spark, quarPaths, "quar"))
               .select(col("doc_id"), col("ver"))
               .join(fv, Seq("doc_id"))
               .filter(col("ver") >= col("fver")).count()
@@ -1334,11 +1340,11 @@ object ReleaseStream {
     val arc = archive.select(col("doc_id"), col("ver"), col("text"))
 
     // ---- 1. the residue set: quarantine-winning docs holding fact rows
-    val quarLatest = latestRows(readOr(spark, quarPaths, QUAR_SCHEMA))
+    val quarLatest = latestRows(readStore(spark, quarPaths, "quar"))
       .select(col("doc_id"), col("ver").as("qver")).persist()
     val qDbkts = bucketSet(quarLatest, bkt(col("doc_id")))
-    val residue = latestRows(readOr(spark,
-        storePaths(root, man, "doc", qDbkts), DOC_SCHEMA))
+    val residue = latestRows(readStore(spark,
+        storePaths(root, man, "doc", qDbkts), "doc"))
       .join(quarLatest, Seq("doc_id"))
       .filter(col("qver") >= col("ver"))
       .drop("qver").persist()
@@ -1403,7 +1409,7 @@ object ReleaseStream {
 
     // ---- 4. claim ledger: excise residue claims, promote next keepers
     val hBkts = bucketSet(arcR, bkt(xxhash64(col("h"))))
-    val claims = readOr(spark, storePaths(root, man, "ex", hBkts), EX_SCHEMA)
+    val claims = readStore(spark, storePaths(root, man, "ex", hBkts), "ex")
       .persist()
     val removed = claims.join(rIds, Seq("doc_id"), "left_semi").persist()
     val uncovered = rIds
@@ -1429,8 +1435,7 @@ object ReleaseStream {
     val arcC = arc.join(candIds, Seq("doc_id"), "left_semi")
       .withColumn("h", sha2(col("text"), 256)).filter(col("h").isNotNull)
     val cBkts = bucketSet(arcC, bkt(xxhash64(col("h"))))
-    val operative = readOr(spark, storePaths(root, man, "ex", cBkts),
-        EX_SCHEMA)
+    val operative = readStore(spark, storePaths(root, man, "ex", cBkts), "ex")
       .join(candIds, Seq("doc_id"), "left_semi")
       .withColumn("rn", row_number().over(Window.partitionBy("doc_id")
         .orderBy(col("ver").desc, col("h"))))
@@ -1443,8 +1448,7 @@ object ReleaseStream {
 
     // ---- 5. eval seats: re-run the tournament iff a seat was lost
     val tinyO = man("tiny").head
-    def tinyRead(rel: String): DataFrame =
-      spark.read.parquet(s"$root/batch=$tinyO/tiny/$rel")
+    def tinyRead(rel: String): DataFrame = readTiny(spark, root, tinyO, rel)
     val evals = tinyRead("evals").persist()
     val evalsh = tinyRead("evalsh").persist()
     val seatsLost = evals.join(rIds, Seq("doc_id"), "left_semi").count()
@@ -1453,8 +1457,8 @@ object ReleaseStream {
         (evals, evalsh,
           emptyDf(spark, "doc_id BIGINT, dn BIGINT"))
       else {
-        val survivors = latestRows(readOr(spark,
-            manPaths(root, man, "doc"), DOC_SCHEMA))
+        val survivors = latestRows(readStore(spark,
+            manPaths(root, man, "doc"), "doc"))
           .join(rIds, Seq("doc_id"), "left_anti")
         val ne = survivors.select(col("lang"), col("doc_id"),
             Sketches.phash60(col("doc_id")).as("hsmp"))
@@ -1473,8 +1477,7 @@ object ReleaseStream {
           .withColumn("h", sha2(col("text"), 256))
           .filter(col("h").isNotNull).persist()
         val aBkts = bucketSet(arcA, bkt(xxhash64(col("h"))))
-        val opA = readOr(spark, storePaths(root, man, "ex", aBkts),
-            EX_SCHEMA)
+        val opA = readStore(spark, storePaths(root, man, "ex", aBkts), "ex")
           .join(admitted, Seq("doc_id"), "left_semi")
           .withColumn("rn", row_number().over(Window.partitionBy("doc_id")
             .orderBy(col("ver").desc, col("h"))))
@@ -1500,9 +1503,8 @@ object ReleaseStream {
           .unionByName(oldSet.except(newSet).withColumn("dn", lit(-1L)))
           .persist()
         val touchedG = bucketSet(dSh, bkt(col("shingle")))
-        val adjusted = readOr(spark,
-            storePaths(root, man, "sh", touchedG),
-            "shingle BIGINT, doc_id BIGINT")
+        val adjusted = readStore(spark,
+            storePaths(root, man, "sh", touchedG), "sh")
           .join(broadcast(dSh), Seq("shingle"))
           .groupBy("doc_id").agg(sum("dn").as("dn"))
           .filter(col("dn") =!= 0)
@@ -1521,8 +1523,7 @@ object ReleaseStream {
     val overAff = newCapn.join(affSources, Seq("source"), "left_semi")
       .filter(col("n") > CAP).select("source").persist()
     val sBkts = bucketSet(affSources, bkt(Sketches.phash60(col("source"))))
-    val srcRows = readOr(spark, storePaths(root, man, "src", sBkts),
-      "source STRING, doc_id BIGINT, hcap BIGINT")
+    val srcRows = readStore(spark, storePaths(root, man, "src", sBkts), "src")
     val keepSrc = srcRows.join(rIds, Seq("doc_id"), "left_anti").persist()
     val newKeep = keepSrc.join(overAff, Seq("source"), "left_semi")
       .withColumn("rnk", row_number().over(Window.partitionBy("source")
@@ -1536,8 +1537,8 @@ object ReleaseStream {
     // nhit adjustments, PRESERVE ver
     val updDbkts = rDbkts ++ bucketSet(promoted, bkt(col("doc_id"))) ++
       bucketSet(adj, bkt(col("doc_id")))
-    val docOut = latestRows(readOr(spark,
-        storePaths(root, man, "doc", updDbkts), DOC_SCHEMA))
+    val docOut = latestRows(readStore(spark,
+        storePaths(root, man, "doc", updDbkts), "doc"))
       .join(rIds, Seq("doc_id"), "left_anti")
       .join(promoted.withColumn("pr", lit(1L)), Seq("doc_id"), "left")
       .join(adj, Seq("doc_id"), "left")
@@ -1578,8 +1579,7 @@ object ReleaseStream {
           Dedup.hashedShingles(arcR.select("doc_id", "text")),
           bkt(col("shingle")))
         val shWritten = writeBucketedBatch(
-          readOr(spark, storePaths(root, man, "sh", shBkts),
-              "shingle BIGINT, doc_id BIGINT")
+          readStore(spark, storePaths(root, man, "sh", shBkts), "sh")
             .join(rIds, Seq("doc_id"), "left_anti")
             .withColumn("gbkt", bkt(col("shingle"))),
           s"$root/batch=$gen/sh", "gbkt")
@@ -1650,8 +1650,8 @@ object ReleaseStream {
     if (!man.contains("tiny")) return 0L
     val bkeys = batchKeys.select("doc_id").distinct().persist()
     val touched = bucketSet(bkeys, bkt(col("doc_id")))
-    val residue = latestRows(readOr(spark,
-        storePaths(root, man, "doc", touched), DOC_SCHEMA))
+    val residue = latestRows(readStore(spark,
+        storePaths(root, man, "doc", touched), "doc"))
       .join(bkeys, Seq("doc_id"), "left_semi").persist()
     val n =
       if (residue.isEmpty) 0L
@@ -1682,10 +1682,16 @@ object ReleaseStream {
         .map(o => s"$root/batch=$o/$store/${PCOL(store)}=$b")
     }
 
-  private def readOr(spark: SparkSession, paths: Seq[String],
-                     schema: String): DataFrame =
-    if (paths.isEmpty) emptyDf(spark, schema)
-    else spark.read.parquet(paths: _*)
+  /** A store's leaves under its declared schema ([[STORE_SCHEMA]]). */
+  private def readStore(spark: SparkSession, paths: Seq[String],
+                        store: String): DataFrame =
+    Curation.readLeaves(spark, paths, STORE_SCHEMA(store))
+
+  /** One tiny relation of owner `o` under its declared schema. */
+  private def readTiny(spark: SparkSession, root: String, o: Long,
+                       rel: String): DataFrame =
+    Curation.readLeaves(spark, Seq(s"$root/batch=$o/tiny/$rel"),
+      TINY_SCHEMA(rel))
 
   private def emptyDf(spark: SparkSession, schema: String): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row],

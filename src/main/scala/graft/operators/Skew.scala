@@ -46,9 +46,6 @@ object Skew {
       .orderBy(col("n").desc, col(key))
       .limit(k)
 
-  def repartitionByKey(df: DataFrame, partitions: Int, key: String): DataFrame =
-    df.repartition(partitions, col(key))
-
   /** q62: the salted lineitem⋈orders join rolled up to a deterministic
     * per-priority summary. Salting is semantics-preserving — it changes the
     * shuffle layout (hot key scattered over `salt` reducers), never the

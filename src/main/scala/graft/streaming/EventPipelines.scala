@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Streaming analytics over the `events` shape (SURVEY.md s2.5 E-8):
-  * watermarked tumbling/sliding/session windows and streaming dedup. All
+  * watermarked tumbling and session windows and streaming dedup. All
   * are DataFrame => DataFrame plan fragments — the same code path serves
   * readStream (tests use MemoryStream) and batch DataFrames.
   *
@@ -23,14 +23,6 @@ object EventPipelines {
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
       .select(col("w.start").as("window_start"), col("event_type"),
         col("n"), col("sum_value"))
-
-  /** Sliding windows: 1 hour every 15 minutes. */
-  def slidingByType(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "1 hour", "15 minutes").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("w.start").as("window_start"), col("event_type"), col("n"))
 
   /** Exact dedup by event_id alone. Streaming: within the watermark
     * horizon — a redelivery with a re-stamped event time is still dropped;
