@@ -109,22 +109,34 @@ case class CosineSimilarity(left: Expression, right: Expression)
 /** Registration surface for the engine's native functions. */
 object GraftFunctions {
 
-  /** Idempotent per-session registration — usable on ANY session (the
-    * driver's included), no extensions config required.
+  /** The engine's native functions, as `SparkSessionExtensions` injects
+    * them and [[register]] installs them.
     */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      (children: Seq[Expression]) => CosineSimilarity(children.head, children(1)))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_phash60"),
-      new ExpressionInfo(classOf[PHash60].getName, "graft_phash60"),
-      (children: Seq[Expression]) => PHash60(children.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_bloom_might_contain"),
-      new ExpressionInfo(classOf[BloomMightContain].getName, "graft_bloom_might_contain"),
-      bloomExpr(_))
+  private[functions] val Builtins
+      : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+    Seq(
+      (FunctionIdentifier("graft_cosine"),
+        new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
+        (children: Seq[Expression]) => CosineSimilarity(children.head, children(1))),
+      (FunctionIdentifier("graft_phash60"),
+        new ExpressionInfo(classOf[PHash60].getName, "graft_phash60"),
+        (children: Seq[Expression]) => PHash60(children.head)),
+      (FunctionIdentifier("graft_bloom_might_contain"),
+        new ExpressionInfo(classOf[BloomMightContain].getName, "graft_bloom_might_contain"),
+        bloomExpr(_)))
+
+  /** Idempotent per-session registration — usable on ANY session (the
+    * driver's included), no extensions config required. A session that
+    * already holds every function is left as it is, so a registration
+    * from one thread never rewrites the registry under another thread's
+    * resolution (and logs no "replaced a previously registered function").
+    */
+  def register(spark: SparkSession): Unit = synchronized {
+    val registry = spark.sessionState.functionRegistry
+    if (!Builtins.forall { case (id, _, _) => registry.functionExists(id) })
+      Builtins.foreach { case (id, info, builder) =>
+        registry.registerFunction(id, info, builder)
+      }
   }
 
   /** Folds the (words, k) literal arguments into constructor parameters at
@@ -167,18 +179,6 @@ object GraftFunctions {
   * get `graft_cosine` in SQL from the start.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      (children: Seq[Expression]) => CosineSimilarity(children.head, children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_phash60"),
-      new ExpressionInfo(classOf[PHash60].getName, "graft_phash60"),
-      (children: Seq[Expression]) => PHash60(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_might_contain"),
-      new ExpressionInfo(classOf[BloomMightContain].getName, "graft_bloom_might_contain"),
-      (children: Seq[Expression]) => GraftFunctions.bloomExpr(children)))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.Builtins.foreach(ext.injectFunction)
 }

@@ -715,8 +715,8 @@ object Curation {
       .join(broadcast(oldRoots), Seq("cluster_id")).select("doc_id", "cluster_id")
       .persist()
     val folded = Dedup.foldClusterLabels(changedOld, deltaPairs).persist()
-    val touched = bucketSet(changedOld, bucketOf(col("cluster_id"))) ++
-      bucketSet(folded, bucketOf(col("cluster_id")))
+    val touched = bucketSet(changedOld.select("cluster_id")
+      .union(folded.select("cluster_id")), bucketOf(col("cluster_id")))
     // a touched bucket can end up EMPTY (a merge moves a whole component
     // to another residue); partitionBy writes no directory for it, so the
     // manifest must carry only the buckets that actually hold rows —
@@ -763,6 +763,14 @@ object Curation {
     deltaPairs.unpersist()
     ((epLabelPaths ++ carryPaths).distinct, docmapPaths)
   }
+
+  /** The directories [[clusterIngestBatch]] writes for `batchId`. */
+  private[graft] def clusterIngestDirs(indexDir: String, pairsDir: String,
+                                       labelsDir: String,
+                                       batchId: Long): Seq[String] =
+    Seq(s"$indexDir/docs/batch=$batchId", s"$indexDir/bands/batch=$batchId",
+      s"$pairsDir/batch=$batchId", s"$labelsDir/batch=$batchId",
+      s"$labelsDir/batch=$batchId/docmap")
 
   /** A committed batch's view of the label state: `labels` maps each live
     * cluster bucket (cbkt) to the batch directory owning its current

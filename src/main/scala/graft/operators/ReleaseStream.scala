@@ -365,163 +365,220 @@ object ReleaseStream {
       gatePersisted.foreach(_.unpersist())
       return ReadPaths(Nil, Nil, Nil, Nil)
     }
-    // labels constituent: the existing cluster-label stream, reused whole
-    // (its own bucketed state, docmap mirror, manifests, replay rules)
-    Curation.clusterIngestBatch(d.select("doc_id", "text"), batchId,
-      s"$root/cidx", s"$root/cpairs", s"$root/clabels", THRESHOLD)
-    val bsh = Dedup.hashedShingles(d.select("doc_id", "text")).persist()
+    // Two dataflows that share no data: the labels constituent (the
+    // existing cluster-label stream, reused whole: its own bucketed state
+    // under cidx/cpairs/clabels, docmap mirror, manifests and replay
+    // rules) and the release stores, which read only `prior`'s leaves.
+    // The labels fold on a thread of their own beside the stores and are
+    // joined before the one release manifest, so they still commit first.
+    val (man, read) = try alongside {
+      Curation.clusterIngestBatch(d.select("doc_id", "text"), batchId,
+        s"$root/cidx", s"$root/cpairs", s"$root/clabels", THRESHOLD)
+    } {
+      val bsh = Dedup.hashedShingles(d.select("doc_id", "text")).persist()
 
-    // ---- exact stage: batch minima per text hash vs stored running minima
-    val bmin = d.groupBy("h").agg(min(col("doc_id")).as("bdoc")).persist()
-    val touchedX = bucketSet(bmin, bkt(xxhash64(col("h"))))
-    val exPaths = storePaths(root, prior, "ex", touchedX)
-    val pmin = readStore(spark, exPaths, "ex")
-      .join(bmin.select("h"), Seq("h"), "left_semi")
-      .groupBy("h").agg(min(col("doc_id")).as("pdoc"))
-    val exCombined = bmin.join(pmin, Seq("h"), "left")
-      .withColumn("newmin",
-        least(col("bdoc"), coalesce(col("pdoc"), col("bdoc"))))
-      .persist()
-    // out-of-order arrival: an old keeper losing to a smaller new id
-    val flips = exCombined
-      .filter(col("pdoc").isNotNull && col("bdoc") < col("pdoc"))
-      .select(col("pdoc").as("doc_id")).distinct().persist()
+      // ---- exact stage: batch minima per text hash vs stored running minima
+      val bmin = d.groupBy("h").agg(min(col("doc_id")).as("bdoc")).persist()
+      val touchedX = bucketSet(bmin, bkt(xxhash64(col("h"))))
+      val exPaths = storePaths(root, prior, "ex", touchedX)
+      val pmin = readStore(spark, exPaths, "ex")
+        .join(bmin.select("h"), Seq("h"), "left_semi")
+        .groupBy("h").agg(min(col("doc_id")).as("pdoc"))
+      val exCombined = bmin.join(pmin, Seq("h"), "left")
+        .withColumn("newmin",
+          least(col("bdoc"), coalesce(col("pdoc"), col("bdoc"))))
+        .persist()
+      // out-of-order arrival: an old keeper losing to a smaller new id
+      val flips = exCombined
+        .filter(col("pdoc").isNotNull && col("bdoc") < col("pdoc"))
+        .select(col("pdoc").as("doc_id")).distinct().persist()
 
-    // ---- eval sample: per-lang smallest-(hash, id) tournament. Old
-    // non-sample docs already lost to the prior sample, so only the prior
-    // sample ∪ batch compete — additions are always batch docs (their
-    // text is in hand), evictions always prior sample docs (their
-    // shingles are in the tiny evalsh relation).
-    val tinyOwner = prior.get("tiny").flatMap(_.headOption)
-    def tinyRead(rel: String): DataFrame = Curation.readLeaves(spark,
-      tinyOwner.map(o => s"$root/batch=$o/tiny/$rel").toSeq, TINY_SCHEMA(rel))
-    val priorEvals = tinyRead("evals").persist()
-    val wSmp = Window.partitionBy("lang").orderBy(col("hsmp"), col("doc_id"))
-    val newEvals = priorEvals.unionByName(d.select("lang", "doc_id", "hsmp"))
-      .withColumn("rnk", row_number().over(wSmp))
-      .filter(col("rnk") <= PER_LANG)
-      .select("lang", "doc_id", "hsmp").persist()
-    val evalAdd = newEvals
-      .join(priorEvals.select("doc_id"), Seq("doc_id"), "left_anti")
-      .select("doc_id")
-    val evalDrop = priorEvals
-      .join(newEvals.select("doc_id"), Seq("doc_id"), "left_anti")
-      .select("doc_id")
-    val priorEvalsh = tinyRead("evalsh").persist()
-    val newEvalsh = priorEvalsh.join(evalDrop, Seq("doc_id"), "left_anti")
-      .unionByName(bsh.join(evalAdd, Seq("doc_id"), "left_semi")
-        .select("doc_id", "shingle"))
-      .persist()
-    val oldSet = priorEvalsh.select("shingle").distinct()
-    val newSet = newEvalsh.select("shingle").distinct().persist()
-    // |sh(d) ∩ new| = |sh(d) ∩ old| + |∩ entering| − |∩ leaving|: exact
-    // set arithmetic, so incremental nhit can never drift from batch
-    val dSh = newSet.except(oldSet).withColumn("dn", lit(1L))
-      .unionByName(oldSet.except(newSet).withColumn("dn", lit(-1L)))
-      .persist()
+      // ---- eval sample: per-lang smallest-(hash, id) tournament. Old
+      // non-sample docs already lost to the prior sample, so only the prior
+      // sample ∪ batch compete — additions are always batch docs (their
+      // text is in hand), evictions always prior sample docs (their
+      // shingles are in the tiny evalsh relation).
+      val tinyOwner = prior.get("tiny").flatMap(_.headOption)
+      def tinyRead(rel: String): DataFrame = Curation.readLeaves(spark,
+        tinyOwner.map(o => s"$root/batch=$o/tiny/$rel").toSeq, TINY_SCHEMA(rel))
+      val priorEvals = tinyRead("evals").persist()
+      val wSmp = Window.partitionBy("lang").orderBy(col("hsmp"), col("doc_id"))
+      val newEvals = priorEvals.unionByName(d.select("lang", "doc_id", "hsmp"))
+        .withColumn("rnk", row_number().over(wSmp))
+        .filter(col("rnk") <= PER_LANG)
+        .select("lang", "doc_id", "hsmp").persist()
+      val evalAdd = newEvals
+        .join(priorEvals.select("doc_id"), Seq("doc_id"), "left_anti")
+        .select("doc_id")
+      val evalDrop = priorEvals
+        .join(newEvals.select("doc_id"), Seq("doc_id"), "left_anti")
+        .select("doc_id")
+      val priorEvalsh = tinyRead("evalsh").persist()
+      val newEvalsh = priorEvalsh.join(evalDrop, Seq("doc_id"), "left_anti")
+        .unionByName(bsh.join(evalAdd, Seq("doc_id"), "left_semi")
+          .select("doc_id", "shingle"))
+        .persist()
+      val oldSet = priorEvalsh.select("shingle").distinct()
+      val newSet = newEvalsh.select("shingle").distinct().persist()
+      // |sh(d) ∩ new| = |sh(d) ∩ old| + |∩ entering| − |∩ leaving|: exact
+      // set arithmetic, so incremental nhit can never drift from batch
+      val dSh = newSet.except(oldSet).withColumn("dn", lit(1L))
+        .unionByName(oldSet.except(newSet).withColumn("dn", lit(-1L)))
+        .persist()
 
-    // ---- old-doc nhit adjustments: probe the shingle index BEFORE this
-    // batch's shingles are appended, so exactly the prior docs are hit
-    val touchedG = bucketSet(dSh, bkt(col("shingle")))
-    val shPaths = storePaths(root, prior, "sh", touchedG)
-    val adj = readStore(spark, shPaths, "sh")
-      .join(broadcast(dSh), Seq("shingle"))
-      .groupBy("doc_id").agg(sum("dn").as("dn"))
-      .filter(col("dn") =!= 0)
-      .persist()
-    val affected = adj.select("doc_id").unionByName(flips)
-      .distinct().persist()
-    val touchedDAff = bucketSet(affected, bkt(col("doc_id")))
-    val docPaths = storePaths(root, prior, "doc", touchedDAff)
-    val updatedOld = latestRows(readStore(spark, docPaths, "doc"))
-      .join(broadcast(affected), Seq("doc_id"), "left_semi")
-      .join(broadcast(adj), Seq("doc_id"), "left")
-      .join(broadcast(flips.withColumn("fl", lit(1L))), Seq("doc_id"), "left")
-      .select(col("doc_id"), col("source"), col("lang"), col("n_tokens"),
-        greatest(col("exact_rm"), coalesce(col("fl"), lit(0L))).as("exact_rm"),
-        col("n_shingles"),
-        (col("nhit") + coalesce(col("dn"), lit(0L))).as("nhit"),
-        lit(batchId).as("ver"))
+      // ---- old-doc nhit adjustments: probe the shingle index BEFORE this
+      // batch's shingles are appended, so exactly the prior docs are hit
+      val touchedG = bucketSet(dSh, bkt(col("shingle")))
+      val shPaths = storePaths(root, prior, "sh", touchedG)
+      val adj = readStore(spark, shPaths, "sh")
+        .join(broadcast(dSh), Seq("shingle"))
+        .groupBy("doc_id").agg(sum("dn").as("dn"))
+        .filter(col("dn") =!= 0)
+        .persist()
+      val affected = adj.select("doc_id").unionByName(flips)
+        .distinct().persist()
+      val touchedDAff = bucketSet(affected, bkt(col("doc_id")))
+      val docPaths = storePaths(root, prior, "doc", touchedDAff)
+      val updatedOld = latestRows(readStore(spark, docPaths, "doc"))
+        .join(broadcast(affected), Seq("doc_id"), "left_semi")
+        .join(broadcast(adj), Seq("doc_id"), "left")
+        .join(broadcast(flips.withColumn("fl", lit(1L))), Seq("doc_id"), "left")
+        .select(col("doc_id"), col("source"), col("lang"), col("n_tokens"),
+          greatest(col("exact_rm"), coalesce(col("fl"), lit(0L))).as("exact_rm"),
+          col("n_shingles"),
+          (col("nhit") + coalesce(col("dn"), lit(0L))).as("nhit"),
+          lit(batchId).as("ver"))
 
-    // ---- new-doc facts, scored against the POST-update eval set
-    val nsh = bsh.groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
-    val nhitNew = bsh.join(broadcast(newSet), Seq("shingle"), "left_semi")
-      .groupBy("doc_id").agg(count(lit(1)).as("nhit"))
-    val newRows = d.join(exCombined.select("h", "newmin"), Seq("h"))
-      .withColumn("exact_rm", (col("doc_id") =!= col("newmin")).cast("long"))
-      .select("doc_id", "source", "lang", "n_tokens", "exact_rm")
-      .join(nsh, Seq("doc_id"), "left")
-      .join(nhitNew, Seq("doc_id"), "left")
-      .na.fill(0L, Seq("n_shingles", "nhit"))
-      .withColumn("ver", lit(batchId))
-    val docWritten = writeBucketedBatch(updatedOld.unionByName(newRows)
-      .withColumn("dbkt", bkt(col("doc_id"))), s"$root/batch=$batchId/doc",
-      "dbkt")
+      // ---- new-doc facts, scored against the POST-update eval set
+      val nsh = bsh.groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
+      val nhitNew = bsh.join(broadcast(newSet), Seq("shingle"), "left_semi")
+        .groupBy("doc_id").agg(count(lit(1)).as("nhit"))
+      val newRows = d.join(exCombined.select("h", "newmin"), Seq("h"))
+        .withColumn("exact_rm", (col("doc_id") =!= col("newmin")).cast("long"))
+        .select("doc_id", "source", "lang", "n_tokens", "exact_rm")
+        .join(nsh, Seq("doc_id"), "left")
+        .join(nhitNew, Seq("doc_id"), "left")
+        .na.fill(0L, Seq("n_shingles", "nhit"))
+        .withColumn("ver", lit(batchId))
+      val docWritten = writeBucketedBatch(updatedOld.unionByName(newRows)
+        .withColumn("dbkt", bkt(col("doc_id"))), s"$root/batch=$batchId/doc",
+        "dbkt")
 
-    // ---- append-only stores: the batch's shingle postings, hash minima,
-    // and source-priority mirror rows
-    val shWritten = writeBucketedBatch(
-      bsh.withColumn("gbkt", bkt(col("shingle"))),
-      s"$root/batch=$batchId/sh", "gbkt")
-    // CLAIM LEDGER (round-17): one (h, doc_id, ver) row per folded doc
-    // VERSION, not per-batch minima. The minima compression was lossy in
-    // exactly the way [[refoldQuarResidue]] cannot afford: a same-batch
-    // copy shadowed by its batch's min went unrecorded, so a repair
-    // excising a residue keeper's claim could not find the next keeper.
-    // pmin above still reads min-over-claims (identical value); the
-    // ledger costs ~40 bytes per folded doc-version — the price of
-    // final-verdict repairability.
-    val exWritten = writeBucketedBatch(d.select(col("h"), col("doc_id"))
-      .withColumn("ver", lit(batchId))
-      .withColumn("xbkt", bkt(xxhash64(col("h")))),
-      s"$root/batch=$batchId/ex", "xbkt")
-    val srcWritten = writeBucketedBatch(d.select("source", "doc_id", "hcap")
-      .withColumn("sbkt", bkt(Sketches.phash60(col("source")))),
-      s"$root/batch=$batchId/src", "sbkt")
+      // ---- append-only stores: the batch's shingle postings, hash minima,
+      // and source-priority mirror rows
+      val shWritten = writeBucketedBatch(
+        bsh.withColumn("gbkt", bkt(col("shingle"))),
+        s"$root/batch=$batchId/sh", "gbkt")
+      // CLAIM LEDGER (round-17): one (h, doc_id, ver) row per folded doc
+      // VERSION, not per-batch minima. The minima compression was lossy in
+      // exactly the way [[refoldQuarResidue]] cannot afford: a same-batch
+      // copy shadowed by its batch's min went unrecorded, so a repair
+      // excising a residue keeper's claim could not find the next keeper.
+      // pmin above still reads min-over-claims (identical value); the
+      // ledger costs ~40 bytes per folded doc-version — the price of
+      // final-verdict repairability.
+      val exWritten = writeBucketedBatch(d.select(col("h"), col("doc_id"))
+        .withColumn("ver", lit(batchId))
+        .withColumn("xbkt", bkt(xxhash64(col("h")))),
+        s"$root/batch=$batchId/ex", "xbkt")
+      val srcWritten = writeBucketedBatch(d.select("source", "doc_id", "hcap")
+        .withColumn("sbkt", bkt(Sketches.phash60(col("source")))),
+        s"$root/batch=$batchId/src", "sbkt")
 
-    // ---- per-source cap: only sources present in the batch can re-rank;
-    // the re-rank reads only their src-mirror buckets
-    val priorCapn = tinyRead("capn")
-    val capn = priorCapn
-      .unionByName(d.groupBy("source").agg(count(lit(1)).as("n")))
-      .groupBy("source").agg(sum("n").as("n")).persist()
-    val deltaSources = d.select("source").distinct().persist()
-    val overDelta = capn.join(deltaSources, Seq("source"), "left_semi")
-      .filter(col("n") > CAP).select("source").persist()
-    val touchedS = bucketSet(overDelta, bkt(Sketches.phash60(col("source"))))
-    val srcPaths = storePaths(root, prior, "src", touchedS)
-    val wCap = Window.partitionBy("source").orderBy(col("hcap"), col("doc_id"))
-    val newKeep = readStore(spark, srcPaths, "src")
-      .unionByName(d.select("source", "doc_id", "hcap"))
-      .join(broadcast(overDelta), Seq("source"))
-      .withColumn("rnk", row_number().over(wCap))
-      .filter(col("rnk") <= CAP).select("source", "doc_id")
-    val capkeep = tinyRead("capkeep")
-      .join(broadcast(deltaSources), Seq("source"), "left_anti")
-      .unionByName(newKeep)
+      // ---- per-source cap: only sources present in the batch can re-rank;
+      // the re-rank reads only their src-mirror buckets
+      val priorCapn = tinyRead("capn")
+      val capn = priorCapn
+        .unionByName(d.groupBy("source").agg(count(lit(1)).as("n")))
+        .groupBy("source").agg(sum("n").as("n")).persist()
+      val deltaSources = d.select("source").distinct().persist()
+      val overDelta = capn.join(deltaSources, Seq("source"), "left_semi")
+        .filter(col("n") > CAP).select("source").persist()
+      val touchedS = bucketSet(overDelta, bkt(Sketches.phash60(col("source"))))
+      val srcPaths = storePaths(root, prior, "src", touchedS)
+      val wCap = Window.partitionBy("source").orderBy(col("hcap"), col("doc_id"))
+      val newKeep = readStore(spark, srcPaths, "src")
+        .unionByName(d.select("source", "doc_id", "hcap"))
+        .join(broadcast(overDelta), Seq("source"))
+        .withColumn("rnk", row_number().over(wCap))
+        .filter(col("rnk") <= CAP).select("source", "doc_id")
+      val capkeep = tinyRead("capkeep")
+        .join(broadcast(deltaSources), Seq("source"), "left_anti")
+        .unionByName(newKeep)
 
-    // ---- tiny store (single owner, rewritten whole — sample-, source-
-    // and keeper-sized relations) + the one atomic manifest, LAST
-    newEvals.write.mode("overwrite")
-      .parquet(s"$root/batch=$batchId/tiny/evals")
-    newEvalsh.write.mode("overwrite")
-      .parquet(s"$root/batch=$batchId/tiny/evalsh")
-    capn.write.mode("overwrite").parquet(s"$root/batch=$batchId/tiny/capn")
-    capkeep.write.mode("overwrite")
-      .parquet(s"$root/batch=$batchId/tiny/capkeep")
-    val man = Seq("doc" -> docWritten, "sh" -> shWritten, "ex" -> exWritten,
-      "src" -> srcWritten).foldLeft(priorQ) { case (m, (store, written)) =>
-        written.foldLeft(m) { (m2, b) =>
-          val k = s"$store/$b"
-          m2 + (k -> (m2.getOrElse(k, Seq.empty[Long]) :+ batchId))
-        }
-      } + ("tiny" -> Seq(batchId))
+      // ---- tiny store (single owner, rewritten whole — sample-, source-
+      // and keeper-sized relations) + the one atomic manifest, LAST
+      newEvals.write.mode("overwrite")
+        .parquet(s"$root/batch=$batchId/tiny/evals")
+      newEvalsh.write.mode("overwrite")
+        .parquet(s"$root/batch=$batchId/tiny/evalsh")
+      capn.write.mode("overwrite").parquet(s"$root/batch=$batchId/tiny/capn")
+      capkeep.write.mode("overwrite")
+        .parquet(s"$root/batch=$batchId/tiny/capkeep")
+      val man = Seq("doc" -> docWritten, "sh" -> shWritten, "ex" -> exWritten,
+        "src" -> srcWritten).foldLeft(priorQ) { case (m, (store, written)) =>
+          written.foldLeft(m) { (m2, b) =>
+            val k = s"$store/$b"
+            m2 + (k -> (m2.getOrElse(k, Seq.empty[Long]) :+ batchId))
+          }
+        } + ("tiny" -> Seq(batchId))
+      Seq(bsh, bmin, exCombined, flips, priorEvals, newEvals, priorEvalsh,
+        newEvalsh, newSet, dSh, adj, affected, capn, deltaSources, overDelta)
+        .foreach(_.unpersist())
+      (man, ReadPaths(exPaths, shPaths, docPaths, srcPaths))
+    } finally {
+      // After each write Spark refreshes the cached relations over its
+      // path, taking a cache entry out while it rebuilds it. A readout's
+      // cached relation spans both branches' stores, so while the branches
+      // overlap one branch's refresh can miss the entry the other is
+      // rebuilding, and a replay would then read overwritten files. Every
+      // write's refresh is issued again once both branches have ended.
+      (Curation.clusterIngestDirs(s"$root/cidx", s"$root/cpairs",
+          s"$root/clabels", batchId) ++
+        (PCOL.keys ++ TINY_SCHEMA.keys.map(r => s"tiny/$r"))
+          .map(store => s"$root/batch=$batchId/$store"))
+        .foreach(spark.catalog.refreshByPath)
+    }
     commit(spark, root, batchId, man)
-    Seq(d, bsh, bmin, exCombined, flips, priorEvals, newEvals, priorEvalsh,
-      newEvalsh, newSet, dSh, adj, affected, capn, deltaSources, overDelta)
-      .foreach(_.unpersist())
+    d.unpersist()
     gatePersisted.foreach(_.unpersist())
-    ReadPaths(exPaths, shPaths, docPaths, srcPaths)
+    read
+  }
+
+  /** The label branch's thread name (one per fold, alive only inside it). */
+  private[graft] val LabelThread = "graft-release-labels"
+
+  /** Runs `side` on a fresh thread named [[LabelThread]] while `main`
+    * runs on this one, and returns `main`'s value only once BOTH have
+    * ended: also when either fails or this thread is interrupted while it
+    * waits, so no write of either lands after the caller gives up. The first failure is
+    * rethrown as itself (a later one rides along suppressed), so callers
+    * such as a stopping streaming query still recognise a cancellation.
+    * A fresh thread, never a pool's: Spark copies the creating thread's
+    * local properties into a new thread, so `side`'s jobs carry the
+    * caller's job group (a stopped query cancels them), its streaming
+    * ids and its tags; a pooled thread would keep stale ones.
+    */
+  private def alongside[A](side: => Unit)(main: => A): A = {
+    val first = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    def fail(t: Throwable): Unit =
+      if (!first.compareAndSet(null, t) && (first.get ne t))
+        first.get.addSuppressed(t)
+    val thread = new Thread(() => try side catch { case t: Throwable => fail(t) },
+      LabelThread)
+    thread.setDaemon(true)
+    thread.start()
+    val out = try Some(main) catch { case t: Throwable => fail(t); None }
+    var interrupted = false
+    while (thread.isAlive)
+      try thread.join()
+      catch { case e: InterruptedException => interrupted = true; fail(e) }
+    Option(first.get).foreach { t =>
+      if (interrupted && !t.isInstanceOf[InterruptedException])
+        Thread.currentThread.interrupt()
+      throw t
+    }
+    out.get
   }
 
   /** The release relation off the newest committed state — equals
@@ -1535,8 +1592,8 @@ object ReleaseStream {
 
     // ---- 7. fact-store rewrite: delete residue, apply promotions +
     // nhit adjustments, PRESERVE ver
-    val updDbkts = rDbkts ++ bucketSet(promoted, bkt(col("doc_id"))) ++
-      bucketSet(adj, bkt(col("doc_id")))
+    val updDbkts = rDbkts ++ bucketSet(promoted.select("doc_id")
+      .union(adj.select("doc_id")), bkt(col("doc_id")))
     val docOut = latestRows(readStore(spark,
         storePaths(root, man, "doc", updDbkts), "doc"))
       .join(rIds, Seq("doc_id"), "left_anti")
@@ -1557,11 +1614,15 @@ object ReleaseStream {
     val gen = math.min(Manifests.batches(fs, root).min, 0L) - 1L
     val docWritten = writeBucketedBatch(docOut, s"$root/batch=$gen/doc",
       "dbkt")
+    // the left_anti joins above put doc_id first: write the declared order
+    def declared(df: DataFrame, store: String): DataFrame =
+      df.select(STORE_SCHEMA(store).fieldNames.toSeq.map(col): _*)
     val exWritten = writeBucketedBatch(
-      remaining.withColumn("xbkt", bkt(xxhash64(col("h")))),
+      declared(remaining, "ex").withColumn("xbkt", bkt(xxhash64(col("h")))),
       s"$root/batch=$gen/ex", "xbkt")
     val srcWritten = writeBucketedBatch(
-      keepSrc.withColumn("sbkt", bkt(Sketches.phash60(col("source")))),
+      declared(keepSrc, "src")
+        .withColumn("sbkt", bkt(Sketches.phash60(col("source")))),
       s"$root/batch=$gen/src", "sbkt")
     newEvals.write.mode("overwrite").parquet(s"$root/batch=$gen/tiny/evals")
     newEvalsh.write.mode("overwrite")

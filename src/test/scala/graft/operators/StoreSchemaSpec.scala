@@ -14,8 +14,8 @@ import graft.sources.Tables
 /** The declared leaf schemas the release and cluster-label stores are
   * read with equal what their writers write. A declared schema drops a
   * column it does not name and reads a column the files lack as NULL,
-  * both silently, so every leaf a small gated two-batch fold leaves on
-  * disk is checked against its declaration: names, column order and
+  * both silently, so every leaf a small gated fold and its refold leave
+  * on disk is checked against its declaration: names, column order and
   * types (nullability aside — a file source reads every column as
   * nullable).
   */
@@ -29,13 +29,24 @@ class StoreSchemaSpec extends AnyFunSuite {
     val langs = corpus.select("lang").distinct().collect()
       .map(_.getString(0)).sorted
     // the first language diverts, so the quar store exists too
-    val policy = IngestPolicy(gateChecks =
-      Seq(Expectations.inSet("lang", langs.tail.toSeq)))
     val root = Files.createTempDirectory("graft-storeschema").toString
-    ReleaseStream.releaseIngestBatch(
-      corpus.filter(pmod(col("doc_id"), lit(2L)) === 0), 0L, root, policy)
+    val archive = s"$root-archive"
+    val policy = IngestPolicy(gateChecks =
+      Seq(Expectations.inSet("lang", langs.tail.toSeq)),
+      archiveDir = Some(archive))
+    val even = corpus.filter(pmod(col("doc_id"), lit(2L)) === 0)
+    ReleaseStream.releaseIngestBatch(even, 0L, root, policy)
     ReleaseStream.releaseIngestBatch(
       corpus.filter(pmod(col("doc_id"), lit(2L)) === 1), 1L, root, policy)
+    // re-crawls of folded docs that now divert: the refold excises them
+    // and writes its own generation, batch=-1
+    ReleaseStream.releaseIngestBatch(even.filter(col("lang") =!= langs.head)
+      .orderBy("doc_id").limit(8).withColumn("lang", lit(langs.head)), 2L,
+      root, policy)
+    val refold = ReleaseStream.refoldQuarResidue(spark, root,
+      ReleaseStream.readArchive(spark, archive, Long.MaxValue))
+      .collect().map(_.getString(0))
+    assert(refold.contains("residue"), refold.mkString("; "))
 
     val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
     def leaves(glob: String): Seq[String] =
@@ -58,9 +69,15 @@ class StoreSchemaSpec extends AnyFunSuite {
       check(s"store $store",
         s"batch=*/$store/${ReleaseStream.PCOL(store)}=*", schema)
     }
+    // the refold rewrites the fact, claim and source-mirror stores
+    Seq("doc", "ex", "src").foreach { store =>
+      check(s"refold store $store",
+        s"batch=-1/$store/${ReleaseStream.PCOL(store)}=*",
+        ReleaseStream.STORE_SCHEMA(store))
+    }
     ReleaseStream.TINY_SCHEMA.foreach { case (rel, schema) =>
-      assert(check(s"tiny $rel", s"batch=*/tiny/$rel", schema) === 2,
-        s"tiny $rel: one copy per folded batch")
+      assert(check(s"tiny $rel", s"batch=*/tiny/$rel", schema) === 3,
+        s"tiny $rel: one copy per folded batch and one from the refold")
     }
     check("labels", "clabels/batch=*/cbkt=*", Curation.LABEL_SCHEMA)
     check("docmap", "clabels/batch=*/docmap/dbkt=*", Curation.DOCMAP_SCHEMA)
