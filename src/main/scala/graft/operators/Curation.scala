@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.sources.Tables
-import graft.store.Manifests
+import graft.store.{Compaction, Manifests}
 import graft.operators.ReleaseStream.Scenarios
 
 /** The composed training-data curation pipeline: quality scoring ->
@@ -207,7 +207,7 @@ object Curation {
     if (!fs.exists(base)) return Nil
     require(fs.getFileStatus(base).isDirectory,
       s"incremental index path $dir exists but is not a directory")
-    recoverCompaction(fs, base)
+    Compaction.recover(fs, dir)
     val wanted = bkts.map(b => s"$bkCol=$b")
     fs.listStatus(base).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch=") &&
@@ -217,53 +217,28 @@ object Curation {
       .map(_.getPath.toString)
   }
 
-  private val COMPACT_TMP = ".compact-tmp"
-  private val COMPACT_MARKER = ".compact-commit"
+  /** The incremental index's relations and each one's bucket column. */
+  private val INDEX_RELATIONS =
+    Seq("docs" -> "dbkt", "bands" -> "bb", "post" -> "sbkt", "pbands" -> "pb")
 
-  /** Finish (or roll back) a compaction that crashed mid-protocol —
-    * idempotent, run before every index read. The commit MARKER is the
-    * pivot: before it exists the original batch dirs are authoritative
-    * and a leftover tmp is deleted; once it exists the merged tmp is
-    * authoritative (deletes of the originals may have begun), so recovery
-    * deletes the remaining merged-in originals, publishes tmp as
-    * `batch=0`, and clears the marker. The marker file records the
-    * compaction's `upToBatch` so recovery knows which dirs were merged.
+  /** Swap the batch dirs below `upTo` of the flat batch-dir store at
+    * `dir` into one `batch=0` dir through [[Compaction]] (recovering any
+    * swap in flight first), when there are at least `minBatches` of them:
+    * `write(rows, tmp)` writes the rewrite of their rows (`batch` column
+    * dropped) to the swap's tmp dir.
     */
-  private def recoverCompaction(fs: org.apache.hadoop.fs.FileSystem,
-                                base: org.apache.hadoop.fs.Path): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(base, COMPACT_TMP)
-    val marker = new org.apache.hadoop.fs.Path(base, COMPACT_MARKER)
-    if (fs.exists(marker)) {
-      val upTo = {
-        val in = fs.open(marker)
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-        finally in.close()
+  private def swapBatches(spark: SparkSession, dir: String, upTo: Long,
+                          minBatches: Int)
+                         (write: (DataFrame, String) => Unit): Unit = {
+    val hconf = spark.sessionState.newHadoopConf()
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(hconf)
+    Compaction.recover(fs, dir)
+    val ids = Manifests.batches(fs, dir).filter(_ < upTo)
+    if (ids.size >= minBatches)
+      Compaction.compact(hconf, dir, ids, upTo) { (dirs, tmp) =>
+        write(spark.read.option("basePath", dir).parquet(dirs: _*)
+          .drop("batch"), tmp)
       }
-      // if tmp is gone the rename already happened and batch=0 IS the
-      // compacted output — keep it; otherwise any batch=0 present is an
-      // unmerged original and goes with the rest
-      val keepZero = !fs.exists(tmp)
-      fs.listStatus(base).toSeq
-        .filter { s =>
-          val n = s.getPath.getName
-          s.isDirectory && n.startsWith("batch=") && {
-            val k = n.stripPrefix("batch=").toLong
-            k < upTo && (k > 0 || !keepZero)
-          }
-        }
-        .foreach(s => fs.delete(s.getPath, true))
-      if (fs.exists(tmp))
-        require(fs.rename(tmp, new org.apache.hadoop.fs.Path(base, "batch=0")),
-          s"could not publish $tmp under $base")
-      // a marker means a compaction committed: record it permanently so
-      // per-batch consumers ([[embeddingDriftFromIndex]]) refuse the tree
-      // even when the crash happened before the happy path could write
-      // the record (inert for indexes with no per-batch consumers)
-      writeCompactedRecord(fs, base, upTo)
-      fs.delete(marker, false)
-    } else if (fs.exists(tmp)) {
-      fs.delete(tmp, true) // died before commit: originals are authoritative
-    }
   }
 
   /** Compact the accumulated batch directories of a bucketed incremental
@@ -279,100 +254,41 @@ object Curation {
     * directory no longer exists; Structured Streaming only ever replays
     * the last uncommitted batch, so compacting up to the checkpoint's
     * committed batch id is always safe, e.g. between runs or from a
-    * maintenance job). Pair outputs are untouched. Crash-safe via a
-    * write-tmp / commit-marker / delete / publish protocol whose every
-    * state is recoverable ([[recoverCompaction]], invoked before every
-    * index read; IncrementalIndexSpec pins both crash windows).
+    * maintenance job). Pair outputs are untouched. Crash-safe through
+    * [[Compaction]], whose recovery runs before every index read
+    * ([[prunedBatchPaths]]; IncrementalIndexSpec pins both crash windows).
     */
   def compactIncrementalIndex(spark: SparkSession, indexDir: String,
-                              upToBatch: Long): Unit = {
-    val hconf = spark.sessionState.newHadoopConf()
-    for (rel <- Seq("docs", "bands", "post", "pbands")) {
-      val base = new org.apache.hadoop.fs.Path(s"$indexDir/$rel")
-      val fs = base.getFileSystem(hconf)
-      if (fs.exists(base)) {
-        recoverCompaction(fs, base)
-        val bkCol = rel match {
-          case "docs" => "dbkt"; case "bands" => "bb"; case "post" => "sbkt"
-          case "pbands" => "pb"
-        }
-        val batches = fs.listStatus(base).toSeq
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch=") &&
-            s.getPath.getName.stripPrefix("batch=").toLong < upToBatch)
-        if (batches.size > 1) {
-          val tmp = new org.apache.hadoop.fs.Path(base, COMPACT_TMP)
-          writeBucketedBatch(spark.read.option("basePath", base.toString)
-            .parquet(batches.map(_.getPath.toString): _*)
-            .drop("batch"), tmp.toString, bkCol)
-          val marker = new org.apache.hadoop.fs.Path(base, COMPACT_MARKER)
-          val out = fs.create(marker, true)
-          try out.write(s"$upToBatch\n".getBytes("UTF-8")) finally out.close()
-          batches.foreach(s => fs.delete(s.getPath, true))
-          require(fs.rename(tmp, new org.apache.hadoop.fs.Path(base, "batch=0")),
-            s"could not publish $tmp under $base")
-          fs.delete(marker, false)
-        }
+                              upToBatch: Long): Unit =
+    for ((rel, bkCol) <- INDEX_RELATIONS)
+      swapBatches(spark, s"$indexDir/$rel", upToBatch, 2) { (rows, tmp) =>
+        writeBucketedBatch(rows, tmp, bkCol)
       }
-    }
-  }
 
   /** Compact a FLAT batch-dir store — the crawl-archive layout
     * ([[graft.operators.ReleaseStream.streamingReleaseIngest]]'s
     * `archiveDir` tee): merge every `batch=<id>` dir with id <
-    * `upToBatch` into ONE `batch=0` dir through the same write-tmp /
-    * commit-marker / delete / publish protocol as
-    * [[compactIncrementalIndex]] (shared recovery —
-    * [[recoverFlatBatchStore]] must run before every read; every crash
-    * state is recoverable). Consolidation is ROW-preserving and rows
-    * carry their own `ver` column, so as-of reads stay exact with a
-    * row-level `ver < below` filter — unlike the per-batch centroid
-    * index, whose consumers need batch identity from DIRECTORY names
-    * and must refuse a compacted tree. Same quiesced-frontier contract
-    * as the index compactor: no batch < upToBatch may be replayed
-    * afterwards.
+    * `upToBatch` into ONE `batch=0` dir through [[Compaction]] (whose
+    * recovery must run before every read). Consolidation is
+    * ROW-preserving and rows carry their own `ver` column, so as-of reads
+    * stay exact with a row-level `ver < below` filter — unlike the
+    * per-batch centroid index, whose consumers need batch identity from
+    * DIRECTORY names and must refuse a compacted tree. Same
+    * quiesced-frontier contract as the index compactor: no batch <
+    * upToBatch may be replayed afterwards.
     */
   private[operators] def compactFlatBatchStore(spark: SparkSession,
                                                dir: String,
-                                               upToBatch: Long): Unit = {
-    val base = new org.apache.hadoop.fs.Path(dir)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(base)) return
-    recoverCompaction(fs, base)
-    val batches = fs.listStatus(base).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch=") &&
-        s.getPath.getName.stripPrefix("batch=").toLong < upToBatch)
-    if (batches.size > 1) {
-      val tmp = new org.apache.hadoop.fs.Path(base, COMPACT_TMP)
-      spark.read.option("basePath", base.toString)
-        .parquet(batches.map(_.getPath.toString): _*)
-        .drop("batch")
-        .write.mode("overwrite").parquet(tmp.toString)
-      val marker = new org.apache.hadoop.fs.Path(base, COMPACT_MARKER)
-      val out = fs.create(marker, true)
-      try out.write(s"$upToBatch\n".getBytes("UTF-8")) finally out.close()
-      batches.foreach(s => fs.delete(s.getPath, true))
-      require(fs.rename(tmp, new org.apache.hadoop.fs.Path(base, "batch=0")),
-        s"could not publish $tmp under $base")
-      fs.delete(marker, false)
+                                               upToBatch: Long): Unit =
+    swapBatches(spark, dir, upToBatch, 2) { (rows, tmp) =>
+      rows.write.mode("overwrite").parquet(tmp)
     }
-  }
-
-  /** Run [[recoverCompaction]] on a flat batch-dir store — the
-    * read-side half of [[compactFlatBatchStore]]'s crash protocol.
-    */
-  private[operators] def recoverFlatBatchStore(spark: SparkSession,
-                                               dir: String): Unit = {
-    val base = new org.apache.hadoop.fs.Path(dir)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(base)) recoverCompaction(fs, base)
-  }
 
   /** EXCISE a doc set from a bucketed incremental index: rewrite every
-    * relation minus the given docs' rows, through [[compactIncrementalIndex]]'s
-    * own write-tmp / commit-marker / delete / publish protocol (the one
-    * crash-safe rewrite this index format has — [[recoverCompaction]]
-    * finishes either side of a crash). Used by the release residue
-    * repair ([[graft.operators.ReleaseStream.refoldQuarResidue]]): a
+    * relation minus the given docs' rows, through [[Compaction]]'s swap
+    * (the one crash-safe rewrite this index format has). Used by the
+    * release residue repair
+    * ([[graft.operators.ReleaseStream.refoldQuarResidue]]): a
     * quarantine-winning doc left in the index would keep minting pairs,
     * re-entering CC as a cluster node and skewing future roots/splits
     * away from the final-verdict batch twin.
@@ -388,40 +304,13 @@ object Curation {
   private[operators] def exciseFromIncrementalIndex(spark: SparkSession,
                                                     indexDir: String,
                                                     docIds: DataFrame,
-                                                    below: Long = Long.MaxValue)
-      : Unit = {
-    val hconf = spark.sessionState.newHadoopConf()
+                                                    below: Long): Unit = {
     val ids = docIds.select("doc_id")
-    for (rel <- Seq("docs", "bands", "post", "pbands")) {
-      val base = new org.apache.hadoop.fs.Path(s"$indexDir/$rel")
-      val fs = base.getFileSystem(hconf)
-      if (fs.exists(base)) {
-        recoverCompaction(fs, base)
-        val bkCol = rel match {
-          case "docs" => "dbkt"; case "bands" => "bb"; case "post" => "sbkt"
-          case "pbands" => "pb"
-        }
-        val batches = fs.listStatus(base).toSeq
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch=")
-            && s.getPath.getName.stripPrefix("batch=").toLong < below)
-        if (batches.nonEmpty) {
-          val upTo = batches.map(
-            _.getPath.getName.stripPrefix("batch=").toLong).max + 1L
-          val tmp = new org.apache.hadoop.fs.Path(base, COMPACT_TMP)
-          writeBucketedBatch(spark.read.option("basePath", base.toString)
-            .parquet(batches.map(_.getPath.toString): _*)
-            .drop("batch")
-            .join(ids, Seq("doc_id"), "left_anti"), tmp.toString, bkCol)
-          val marker = new org.apache.hadoop.fs.Path(base, COMPACT_MARKER)
-          val out = fs.create(marker, true)
-          try out.write(s"$upTo\n".getBytes("UTF-8")) finally out.close()
-          batches.foreach(s => fs.delete(s.getPath, true))
-          require(fs.rename(tmp, new org.apache.hadoop.fs.Path(base, "batch=0")),
-            s"could not publish $tmp under $base")
-          fs.delete(marker, false)
-        }
+    for ((rel, bkCol) <- INDEX_RELATIONS)
+      swapBatches(spark, s"$indexDir/$rel", below, 1) { (rows, tmp) =>
+        writeBucketedBatch(rows.join(ids, Seq("doc_id"), "left_anti"), tmp,
+          bkCol)
       }
-    }
   }
 
   /** Read the pruned subset of a bucketed incremental index, with
@@ -929,14 +818,10 @@ object Curation {
       .persist()
     // 2. surviving internal edges off the pairs log (components are
     // edge-closed, so both-endpoints-in-members == all their edges)
-    val base = new org.apache.hadoop.fs.Path(pairsDir)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    val pairDirs =
-      if (!fs.exists(base)) Seq.empty[String]
-      else fs.listStatus(base).toSeq.filter(s =>
-        s.isDirectory && s.getPath.getName.startsWith("batch=") &&
-          s.getPath.getName.stripPrefix("batch=").toLong < below)
-        .map(_.getPath.toString)
+    val fs = new org.apache.hadoop.fs.Path(pairsDir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val pairDirs = Manifests.batches(fs, pairsDir).filter(_ < below)
+      .map(b => s"$pairsDir/batch=$b")
     val keep = members.select("doc_id").join(ids, Seq("doc_id"), "left_anti")
     val edges =
       if (pairDirs.isEmpty)
@@ -955,7 +840,7 @@ object Curation {
     val touched = rCbkts ++ bucketSet(relab, bucketOf(col("cluster_id")))
     val carryPaths = labelBucketPaths(labelsDir,
       man.labels.filter(kv => touched.contains(kv._1)))
-    val gen = math.min(Manifests.batches(fs, labelsDir).min, 0L) - 1L
+    val gen = Manifests.freshGeneration(Manifests.batches(fs, labelsDir))
     val writtenL = writeBucketedBatch(readLabelPaths(spark, carryPaths)
       .join(oldRoots, Seq("cluster_id"), "left_anti")
       .select("doc_id", "cluster_id")
@@ -1082,9 +967,8 @@ object Curation {
     * crashed compaction first, the [[prunedBatchPaths]] policy).
     */
   def chunkReportFromIndex(spark: SparkSession, chunksDir: String): DataFrame = {
-    val base = new org.apache.hadoop.fs.Path(chunksDir)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(base)) recoverCompaction(fs, base)
+    Compaction.recover(new org.apache.hadoop.fs.Path(chunksDir)
+      .getFileSystem(spark.sessionState.newHadoopConf()), chunksDir)
     val idx = spark.read.parquet(chunksDir)
     // legacy-format detection: pre-r12 indexes keyed on the chunk TEXT
     // ('chunk' column, no 'chunk_hash') — fail with an explicit migration
@@ -1099,42 +983,22 @@ object Curation {
   }
 
   /** Compact the accumulated per-batch chunk partials into ONE `batch=0`
-    * directory — [[compactIncrementalIndex]]'s idiom (write-tmp /
-    * commit-marker / delete / publish, every crash state recoverable by
-    * [[recoverCompaction]]) applied to the append-only chunk index, which
-    * otherwise grows one directory per batch forever. Because the
-    * partials are additive, compaction also RE-AGGREGATES them (sum of
+    * directory — [[compactIncrementalIndex]]'s [[Compaction]] swap applied
+    * to the append-only chunk index, which otherwise grows one directory
+    * per batch forever. Because the partials are additive, compaction
+    * also RE-AGGREGATES them (sum of
     * n_occ per (chunk_hash, n_tokens, doc_id)), so the compacted index
     * is no larger than the distinct (chunk, doc) relation regardless of
     * how many batches fed it. Same contract: `upToBatch` must be <= the
     * stream's committed frontier.
     */
   def compactChunkIndex(spark: SparkSession, chunksDir: String,
-                        upToBatch: Long): Unit = {
-    val base = new org.apache.hadoop.fs.Path(chunksDir)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(base)) return
-    recoverCompaction(fs, base)
-    val batches = fs.listStatus(base).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch=") &&
-        s.getPath.getName.stripPrefix("batch=").toLong < upToBatch)
-    if (batches.size > 1) {
-      val tmp = new org.apache.hadoop.fs.Path(base, COMPACT_TMP)
-      spark.read.option("basePath", base.toString)
-        .parquet(batches.map(_.getPath.toString): _*)
-        .drop("batch")
-        .groupBy("chunk_hash", "n_tokens", "doc_id")
+                        upToBatch: Long): Unit =
+    swapBatches(spark, chunksDir, upToBatch, 2) { (rows, tmp) =>
+      rows.groupBy("chunk_hash", "n_tokens", "doc_id")
         .agg(sum(col("n_occ")).as("n_occ"))
-        .write.mode("overwrite").parquet(tmp.toString)
-      val marker = new org.apache.hadoop.fs.Path(base, COMPACT_MARKER)
-      val out = fs.create(marker, true)
-      try out.write(s"$upToBatch\n".getBytes("UTF-8")) finally out.close()
-      batches.foreach(s => fs.delete(s.getPath, true))
-      require(fs.rename(tmp, new org.apache.hadoop.fs.Path(base, "batch=0")),
-        s"could not publish $tmp under $base")
-      fs.delete(marker, false)
+        .write.mode("overwrite").parquet(tmp)
     }
-  }
 
   /** Streaming CENTROID maintenance — q124's corpus-centroid state as a
     * long-running stream: each micro-batch of `(vec_id, embedding)`
@@ -1177,67 +1041,30 @@ object Curation {
     * policy).
     */
   def centroidFromIndex(spark: SparkSession, centDir: String): DataFrame = {
-    val base = new org.apache.hadoop.fs.Path(centDir)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(base)) recoverCompaction(fs, base)
+    Compaction.recover(new org.apache.hadoop.fs.Path(centDir)
+      .getFileSystem(spark.sessionState.newHadoopConf()), centDir)
     spark.read.parquet(centDir)
       .groupBy("pos").agg(sum("sq").as("sq"), sum("n").as("n"))
   }
 
   /** Compact the accumulated per-batch centroid partials into ONE
-    * `batch=0` directory — [[compactChunkIndex]]'s idiom (write-tmp /
-    * commit-marker / delete / publish, every crash state recoverable by
-    * [[recoverCompaction]]) applied to the centroid index. Each batch
-    * directory is only dim-sized, so this caps METADATA growth (one
-    * directory per micro-batch over an unbounded stream), not data
-    * volume; the partials are additive, so the compacted index is the
-    * dim-sized summed relation regardless of how many batches fed it.
-    * Same contract: `upToBatch` must be <= the stream's committed
-    * frontier.
+    * `batch=0` directory — [[compactChunkIndex]]'s [[Compaction]] swap
+    * applied to the centroid index. Each batch directory is only
+    * dim-sized, so this caps METADATA growth (one directory per
+    * micro-batch over an unbounded stream), not data volume; the partials
+    * are additive, so the compacted index is the dim-sized summed
+    * relation regardless of how many batches fed it. Compaction erases
+    * batch identity, and the swap records that it did: the per-batch
+    * consumers ([[embeddingDriftFromIndex]]) refuse the compacted index
+    * loudly instead of reporting one merged batch with ~zero drift. Same
+    * contract: `upToBatch` must be <= the stream's committed frontier.
     */
   def compactCentroidIndex(spark: SparkSession, centDir: String,
-                           upToBatch: Long): Unit = {
-    val base = new org.apache.hadoop.fs.Path(centDir)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(base)) return
-    recoverCompaction(fs, base)
-    val batches = fs.listStatus(base).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch=") &&
-        s.getPath.getName.stripPrefix("batch=").toLong < upToBatch)
-    if (batches.size > 1) {
-      val tmp = new org.apache.hadoop.fs.Path(base, COMPACT_TMP)
-      spark.read.option("basePath", base.toString)
-        .parquet(batches.map(_.getPath.toString): _*)
-        .drop("batch")
-        .groupBy("pos").agg(sum(col("sq")).as("sq"), sum(col("n")).as("n"))
-        .write.mode("overwrite").parquet(tmp.toString)
-      val marker = new org.apache.hadoop.fs.Path(base, COMPACT_MARKER)
-      val out = fs.create(marker, true)
-      try out.write(s"$upToBatch\n".getBytes("UTF-8")) finally out.close()
-      batches.foreach(s => fs.delete(s.getPath, true))
-      require(fs.rename(tmp, new org.apache.hadoop.fs.Path(base, "batch=0")),
-        s"could not publish $tmp under $base")
-      // permanent record (underscore-prefixed: invisible to the parquet
-      // readers): compaction erases batch identity, and the per-batch
-      // consumers ([[embeddingDriftFromIndex]]) must refuse this index
-      // loudly instead of reporting one merged batch with ~zero drift.
-      // Written BEFORE the marker delete so no crash window leaves a
-      // compacted tree without the record: up to here the marker still
-      // stands and [[recoverCompaction]]'s marker path re-writes it.
-      writeCompactedRecord(fs, base, upToBatch)
-      fs.delete(marker, false)
+                           upToBatch: Long): Unit =
+    swapBatches(spark, centDir, upToBatch, 2) { (rows, tmp) =>
+      rows.groupBy("pos").agg(sum(col("sq")).as("sq"), sum(col("n")).as("n"))
+        .write.mode("overwrite").parquet(tmp)
     }
-  }
-
-  private def writeCompactedRecord(fs: org.apache.hadoop.fs.FileSystem,
-                                   base: org.apache.hadoop.fs.Path,
-                                   upToBatch: Long): Unit = {
-    val done = fs.create(
-      new org.apache.hadoop.fs.Path(base, COMPACTED_RECORD), true)
-    try done.write(s"$upToBatch\n".getBytes("UTF-8")) finally done.close()
-  }
-
-  private[operators] val COMPACTED_RECORD = "_COMPACTED"
 
   /** The q124 report off a centroid index: the identical
     * [[Similarity.outliersAgainst]] tail over the merged components.
@@ -1271,21 +1098,18 @@ object Curation {
     // reading it here would silently report a single batch with ~zero
     // drift, and a CRASHED compaction (tmp/marker present) is a
     // mixed/duplicated tree. Both misuses fail loudly instead.
-    val base = new org.apache.hadoop.fs.Path(centDir)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(base)) {
-      require(!fs.exists(new org.apache.hadoop.fs.Path(base, COMPACT_TMP)) &&
-        !fs.exists(new org.apache.hadoop.fs.Path(base, COMPACT_MARKER)),
-        s"embeddingDriftFromIndex($centDir): a compaction is in flight or " +
-          "crashed (compact tmp/marker present) — run centroidFromIndex " +
-          "(which recovers it) for the summed centroid, or finish the " +
-          "compaction; the drift readout would see a mixed tree")
-      require(!fs.exists(new org.apache.hadoop.fs.Path(base, COMPACTED_RECORD)),
-        s"embeddingDriftFromIndex($centDir): this index was compacted " +
-          "(batch identity erased) — drift is a per-batch readout and " +
-          "needs the uncompacted per-batch dirs; keep a drift-feeding " +
-          "index uncompacted (q124's centroidFromIndex reads it summed)")
-    }
+    val fs = new org.apache.hadoop.fs.Path(centDir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    require(!Compaction.inFlight(fs, centDir),
+      s"embeddingDriftFromIndex($centDir): a compaction is in flight or " +
+        "crashed — run centroidFromIndex (which recovers it) for the " +
+        "summed centroid, or finish the compaction; the drift readout " +
+        "would see a mixed tree")
+    require(!Compaction.compacted(fs, centDir),
+      s"embeddingDriftFromIndex($centDir): this index was compacted " +
+        "(batch identity erased) — drift is a per-batch readout and " +
+        "needs the uncompacted per-batch dirs; keep a drift-feeding " +
+        "index uncompacted (q124's centroidFromIndex reads it summed)")
     Similarity.driftFromComponents(
       spark.read.option("basePath", centDir).parquet(centDir)
         .select(col("batch").cast("long").as("batch_id"), col("pos"),
@@ -2625,8 +2449,8 @@ object Curation {
     // probe + verify off the signature index AND the exact quadratic
     // embedding pair scan per call; for an immutable snapshot both pair
     // relations are build-once state. Same pair sets by the
-    // ArtifactSpec/AnnIndexSpec equality pins; measured same-box
-    // before/after in PLANS.md's round-13 entry.
+    // ArtifactSpec/AnnIndexSpec equality pins; `graft.Explain
+    // q45_crossmodal_dedup` prints the plan.
     "q45_crossmodal_dedup" -> ((s, d) =>
       crossModalPairs(Tables.documents(s, d), Tables.embeddings(s, d),
         txtPairs = Some(s.read.parquet(

@@ -319,13 +319,8 @@ object Expectations {
     */
   private def eligibleBatches(fs: org.apache.hadoop.fs.FileSystem,
                               store: String, below: Long): Seq[Long] = {
-    val base = new org.apache.hadoop.fs.Path(store)
-    if (!fs.exists(base)) return Nil
-    val all = fs.listStatus(base).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .map(_.getPath.getName.stripPrefix("batch=").toLong)
     val gen = readGen(fs, store)
-    all.filter { b =>
+    Manifests.batches(fs, store).filter { b =>
       gen match {
         case Some((g, covered)) => b == g || (b >= 0 && b > covered)
         case None               => b >= 0
@@ -549,10 +544,8 @@ object Expectations {
     stores.foreach { sp =>
       val batches = eligibleBatches(fs, sp.toString, below)
       if (batches.size > 1) {
-        val allDirs = fs.listStatus(sp).toSeq
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-          .map(_.getPath.getName.stripPrefix("batch=").toLong)
-        val gen = math.min(allDirs.min, 0L) - 1L
+        val allDirs = Manifests.batches(fs, sp.toString)
+        val gen = Manifests.freshGeneration(allDirs)
         val covered = batches.filter(_ >= 0).max
         val dirs = batches.map(b => s"$sp/batch=$b")
         val acc = spark.read.option("basePath", sp.toString)
@@ -679,10 +672,8 @@ object Expectations {
         val toRoll = nonNeg.filter(_ < cutoff)
         if (toRoll.nonEmpty) {
           val vcol = historyVcol(store)
-          val allDirs = fs.listStatus(sp).toSeq
-            .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-            .map(_.getPath.getName.stripPrefix("batch=").toLong)
-          val gen = math.min(allDirs.min, 0L) - 1L
+          val allDirs = Manifests.batches(fs, store)
+          val gen = Manifests.freshGeneration(allDirs)
           val covered = toRoll.max
           val fresh = spark.read.option("basePath", store)
             .parquet(toRoll.map(b => s"$store/batch=$b"): _*)
@@ -1615,10 +1606,8 @@ object Expectations {
     if (!fs.exists(base)) return
     val batches = eligibleBatches(fs, root, below)
     if (batches.size > 1) {
-      val allDirs = fs.listStatus(base).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-        .map(_.getPath.getName.stripPrefix("batch=").toLong)
-      val gen = math.min(allDirs.min, 0L) - 1L
+      val allDirs = Manifests.batches(fs, root)
+      val gen = Manifests.freshGeneration(allDirs)
       val covered = batches.filter(_ >= 0).max
       val out = spark.read.option("basePath", root)
         .parquet(batches.map(b => s"$root/batch=$b"): _*)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.StructType
 
 import scala.collection.immutable.ListMap
 
-import graft.store.Manifests
+import graft.store.{Compaction, Manifests}
 import graft.operators.Curation.{bucketSet, writeBucketedBatch}
 
 /** How the release ingest ([[ReleaseStream.releaseIngestBatch]], and
@@ -227,23 +227,19 @@ object ReleaseStream {
   /** The ingest-maintained crawl archive below a batch cutoff —
     * `(doc_id, ver, text, ...)` rows of every batch the stream
     * consumed. Consolidation-transparent: recovery runs first
-    * ([[Curation.recoverFlatBatchStore]] — the archive compactor's
-    * crash protocol), the directory-name cut is only pruning, and the
+    * ([[Compaction.recover]] — the archive compactor's crash
+    * protocol), the directory-name cut is only pruning, and the
     * as-of cut is the rows' own `ver` (a consolidated `batch=0` dir
     * holds many versions, the ones at or above `below` filtered out
     * row-level).
     */
   private[graft] def readArchive(spark: SparkSession, archiveDir: String,
                                  below: Long): DataFrame = {
-    Curation.recoverFlatBatchStore(spark, archiveDir)
-    val base = new org.apache.hadoop.fs.Path(archiveDir)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    val dirs =
-      if (!fs.exists(base)) Seq.empty[String]
-      else fs.listStatus(base).toSeq.filter(s =>
-        s.isDirectory && s.getPath.getName.startsWith("batch=") &&
-          s.getPath.getName.stripPrefix("batch=").toLong < below)
-        .map(_.getPath.toString)
+    val fs = new org.apache.hadoop.fs.Path(archiveDir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    Compaction.recover(fs, archiveDir)
+    val dirs = Manifests.batches(fs, archiveDir).filter(_ < below)
+      .map(b => s"$archiveDir/batch=$b")
     if (dirs.isEmpty) emptyDf(spark, "doc_id BIGINT, ver BIGINT, text STRING")
     else spark.read.option("basePath", archiveDir).parquet(dirs: _*)
       .filter(col("ver") < below)
@@ -1130,7 +1126,7 @@ object ReleaseStream {
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sessionState.newHadoopConf())
     val batchIds = Manifests.batches(fs, root)
-    val gen = math.min(batchIds.min, 0L) - 1L
+    val gen = Manifests.freshGeneration(batchIds)
     def live(store: String): DataFrame =
       readStore(spark, manPaths(root, man, store), store)
     def consolidate(store: String, df: DataFrame,
@@ -1286,9 +1282,7 @@ object ReleaseStream {
         }
       }
     }
-    val lblMan = new org.apache.hadoop.fs.Path(s"$root/clabels")
-    if (!fs.exists(lblMan) || !fs.listStatus(lblMan).exists(s =>
-        s.isDirectory && s.getPath.getName.startsWith("batch=")))
+    if (Manifests.batches(fs, s"$root/clabels").isEmpty)
       findings += (("labels", "error",
         s"cluster-label subtree $root/clabels has no committed state"))
     if (findings.isEmpty)
@@ -1611,7 +1605,7 @@ object ReleaseStream {
     // then the frontier manifest, atomically, LAST
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val gen = math.min(Manifests.batches(fs, root).min, 0L) - 1L
+    val gen = Manifests.freshGeneration(Manifests.batches(fs, root))
     val docWritten = writeBucketedBatch(docOut, s"$root/batch=$gen/doc",
       "dbkt")
     // the left_anti joins above put doc_id first: write the declared order

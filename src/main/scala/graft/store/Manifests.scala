@@ -112,6 +112,13 @@ object Manifests {
       .map(_.getPath.getName.stripPrefix("batch=").toLong).sorted
   }
 
+  /** A fresh generation id for a store whose batch ids are `ids`: below
+    * both 0 and every id, so it collides with no batch and no earlier
+    * generation. A compaction writes its consolidated state there before
+    * pivoting to it.
+    */
+  def freshGeneration(ids: Seq[Long]): Long = (0L +: ids).min - 1L
+
   /** The batch ids under `root` that hold a published manifest, ascending. */
   def committed(fs: FileSystem, root: String): Seq[Long] =
     batches(fs, root).filter(b => fs.exists(path(root, b)))

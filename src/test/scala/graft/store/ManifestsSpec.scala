@@ -32,15 +32,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class ManifestsSpec extends AnyFunSuite {
   import ManifestsSpec._
 
-  private val conf = {
-    val c = new Configuration()
-    c.set("fs.file.impl", classOf[FaultyFs].getName)
-    c.setBoolean("fs.file.impl.disable.cache", true)
-    c.set("fs.crash.impl", classOf[CrashFs].getName)
-    c.setBoolean("fs.crash.impl.disable.cache", true)
-    c.set("fs.AbstractFileSystem.crash.impl", classOf[CrashAfs].getName)
-    c
-  }
+  private val conf = faultyConf()
 
   private val formats = Seq(
     Manifests.Format("test state", Some("GRAFT_TEST_MANIFEST v1"),
@@ -59,11 +51,6 @@ class ManifestsSpec extends AnyFunSuite {
 
   private def sample(seed: Long): Seq[Manifests.Entry] =
     genEntries.apply(Gen.Parameters.default, Seed(seed)).get
-
-  private def tmpRoot(scheme: String): String = {
-    val dir = Files.createTempDirectory("graft-manifests").toString
-    if (scheme == "file") dir else s"$scheme://$dir"
-  }
 
   /** Publish with the k-th filesystem call crashing; true if it crashed. */
   private def crashingWrite(k: Int, root: String, batchId: Long,
@@ -89,7 +76,7 @@ class ManifestsSpec extends AnyFunSuite {
         var k = 1
         var done = false
         while (!done) {
-          val root = tmpRoot(scheme)
+          val root = tmpRoot("graft-manifests", scheme)
           Manifests.write(conf, root, oldB, fmt, old)
           val crashed = crashingWrite(k, root, newB, fmt, neu)
           val got = Manifests.latest(conf, root, Long.MaxValue, fmt)
@@ -121,7 +108,7 @@ class ManifestsSpec extends AnyFunSuite {
   test("latest(below) resolves the newest committed batch strictly below, " +
     "skipping manifest-less and torn-tmp-only batch directories") {
     val fmt = formats.head
-    val root = tmpRoot("file")
+    val root = tmpRoot("graft-manifests", "file")
     assert(Manifests.latest(conf, s"$root/absent", Long.MaxValue, fmt)
       .isEmpty, "a missing root is the first batch")
     val e0 = Seq(Manifests.Entry("A", "0", "0"))
@@ -148,6 +135,25 @@ object ManifestsSpec {
 
   final class Crash(call: String)
       extends IOException(s"injected crash at $call")
+
+  /** A Configuration binding `file://` to [[FaultyFs]] and `crash://` to
+    * [[CrashFs]]/[[CrashAfs]], uncached.
+    */
+  def faultyConf(): Configuration = {
+    val c = new Configuration()
+    c.set("fs.file.impl", classOf[FaultyFs].getName)
+    c.setBoolean("fs.file.impl.disable.cache", true)
+    c.set("fs.crash.impl", classOf[CrashFs].getName)
+    c.setBoolean("fs.crash.impl.disable.cache", true)
+    c.set("fs.AbstractFileSystem.crash.impl", classOf[CrashAfs].getName)
+    c
+  }
+
+  /** A fresh local temp dir, as a `scheme://` root. */
+  def tmpRoot(prefix: String, scheme: String): String = {
+    val dir = Files.createTempDirectory(prefix).toString
+    if (scheme == "file") dir else s"$scheme://$dir"
+  }
 
   /** The mutating filesystem calls seen since the last reset; the call
     * whose 1-based index is `crashAt` throws [[Crash]] instead of running.
