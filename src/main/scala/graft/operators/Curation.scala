@@ -227,9 +227,9 @@ object Curation {
     * `write(rows, tmp)` writes the rewrite of their rows (`batch` column
     * dropped) to the swap's tmp dir.
     */
-  private def swapBatches(spark: SparkSession, dir: String, upTo: Long,
-                          minBatches: Int)
-                         (write: (DataFrame, String) => Unit): Unit = {
+  private[operators] def swapBatches(spark: SparkSession, dir: String,
+                                      upTo: Long, minBatches: Int)(
+      write: (DataFrame, String) => Unit): Unit = {
     val hconf = spark.sessionState.newHadoopConf()
     val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(hconf)
     Compaction.recover(fs, dir)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.sources.Tables
-import graft.store.Manifests
+import graft.store.{Compaction, Manifests}
 
 /** Declarative data-quality expectations (the Deequ/dbt-test capability,
   * re-expressed Spark-first): a constraint suite evaluated against a table
@@ -280,52 +280,24 @@ object Expectations {
     (0 until n).map(i => col(s"$l.k$i") <=> col(s"$r.k$i"))
       .reduce(_ && _)
 
-  private val GEN_MARKER = "_GEN"
-  private val GEN_HEADER = "GRAFT_KAUDIT_GEN v1"
-
-  /** The compaction pointer of a store, if any: `(gen, covered)` — the
-    * negative generation dir holding everything consolidated so far, and
-    * the highest non-negative batch id it covers. Published atomically
-    * (tmp + rename), so it either names a COMPLETE generation or is
-    * absent.
-    */
-  private def readGen(fs: org.apache.hadoop.fs.FileSystem,
-                      store: String): Option[(Long, Long)] = {
-    val p = new org.apache.hadoop.fs.Path(s"$store/$GEN_MARKER")
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val lines = text.linesIterator.filter(_.nonEmpty).toSeq
-    require(lines.headOption.contains(GEN_HEADER),
-      s"unknown keyed-audit gen marker format in $p: " +
-        s"'${lines.headOption.getOrElse("")}' — migration needed")
-    val pointer = lines.drop(1)
-    pointer.map(_.split(" ").toSeq.map(_.toLongOption)) match {
-      case Seq(Seq(Some(g), Some(c))) => Some((g, c))
-      case _ => throw new IllegalArgumentException(s"malformed keyed-audit " +
-        s"gen marker $p: want one '<gen> <covered>' line after the header, " +
-        s"got ${pointer.mkString("[", "; ", "]")} — migration needed")
-    }
-  }
-
-  /** The batch ids a reader (or the compactor) may consume: without a
-    * `_GEN` pointer, every non-negative dir; with one, the named
-    * generation plus non-negative dirs ABOVE its coverage. Negative dirs
-    * not named by the pointer are in-flight or superseded generations —
-    * invisible either way, which is what makes compaction crash-safe
-    * without a per-batch manifest: publish-the-pointer is the commit.
+  /** The batch ids below `below` of a keyed-audit store, after finishing
+    * or rolling back any [[Compaction]] swap in flight: from then on every
+    * `batch=` dir is live. A store in the retired generation-pointer
+    * layout (a pointer file, superseded generations in negative `batch=`
+    * dirs) would read as live batches and count twice, so it fails here,
+    * naming the file.
     */
   private def eligibleBatches(fs: org.apache.hadoop.fs.FileSystem,
                               store: String, below: Long): Seq[Long] = {
-    val gen = readGen(fs, store)
-    Manifests.batches(fs, store).filter { b =>
-      gen match {
-        case Some((g, covered)) => b == g || (b >= 0 && b > covered)
-        case None               => b >= 0
-      }
-    }.filter(_ < below)
+    def refuse(name: String): Nothing =
+      throw new IllegalArgumentException(s"keyed-audit store $store holds " +
+        s"$store/$name from the retired `_GEN` generation-pointer layout —" +
+        " rebuild the store")
+    if (fs.exists(new org.apache.hadoop.fs.Path(store, "_GEN"))) refuse("_GEN")
+    Compaction.recover(fs, store)
+    val ids = Manifests.batches(fs, store)
+    ids.find(_ < 0).foreach(b => refuse(s"batch=$b"))
+    ids.filter(_ < below)
   }
 
   /** Prior-store leaf dirs for batches strictly below `batchId`, limited
@@ -359,17 +331,14 @@ object Expectations {
         StructType.fromDDL(schema))
     }
     val cols = (0 until nKeys).map(i => col(s"k$i")) :+ col("cnt")
-    val baseP = new org.apache.hadoop.fs.Path(store)
-    val fsChk = baseP.getFileSystem(spark.sessionState.newHadoopConf())
-    val neverCompacted = fsChk.exists(baseP) &&
-      !fsChk.exists(new org.apache.hadoop.fs.Path(s"$store/$GEN_MARKER"))
-    if (batchId == Long.MaxValue && touched.isEmpty && neverCompacted) {
-      // full-store readout: ONE parallel partition discovery over the
-      // root beats per-leaf enumeration (#batches × #buckets sequential
-      // listStatus calls) — valid only while no `_GEN` pointer exists
-      // (then every visible dir is eligible); a compacted store must go
-      // through the pointer-aware enumeration below
-      spark.read.option("basePath", store).parquet(store)
+    if (batchId == Long.MaxValue && touched.isEmpty) {
+      // full-store readout: after recovery every batch dir is live, and
+      // ONE parallel partition discovery over the root beats per-leaf
+      // enumeration (#batches × #buckets sequential listStatus calls)
+      val fs = new org.apache.hadoop.fs.Path(store)
+        .getFileSystem(spark.sessionState.newHadoopConf())
+      if (eligibleBatches(fs, store, batchId).isEmpty) empty()
+      else spark.read.option("basePath", store).parquet(store)
         .select(cols: _*)
     } else {
       val dirs = storeLeafDirs(spark, store, batchId, touched)
@@ -512,25 +481,15 @@ object Expectations {
     keyedAuditIngestBatch(batch, batchId, root, checks, uniques, refs)
   }
 
-  /** Consolidate a keyed-audit root's PROBED stores: each `key_*` store's
-    * eligible per-batch (key, cnt) partials below `below` sum into one
-    * generation dir (`batch=<gen>`, gen < 0 — the release-state
-    * convention); the `miss` store keeps the latest surviving row per key
+  /** Consolidate a keyed-audit root's PROBED stores into one `batch=0`
+    * each: a `key_*` store's per-batch (key, cnt) partials below `below`
+    * sum; the `miss` store keeps the latest surviving row per key
     * (tombstones and superseded versions drop; `ver` is preserved so
     * later writes still win). Readout equality is by construction (sums
     * of sums; LWW of LWW); the per-batch HISTORY stores (`scalar`,
-    * `live`, `liveref` — the q143 timeline) are untouched.
-    *
-    * Crash safety WITHOUT per-batch manifests, via the `_GEN` pointer
-    * (publish-the-pointer is the commit):
-    *  1. stage the consolidated relation into a hidden `.compact.tmp`
-    *     (invisible to every reader),
-    *  2. rename it to `batch=<gen>` — still invisible: readers ignore
-    *     negative dirs the pointer does not name,
-    *  3. atomically publish `_GEN  (gen, covered)` — the ONE commit
-    *     point; from here readers see exactly {gen} ∪ {b > covered},
-    *  4. delete the consolidated dirs (stale leftovers from a crash here
-    *     are invisible by the pointer rule and swept by the next pass).
+    * `live`, `liveref` — the q143 timeline) are untouched. Crash-safe
+    * through [[Compaction]], whose recovery every reader runs first
+    * ([[eligibleBatches]]).
     */
   def compactKeyedAuditStores(spark: SparkSession, root: String,
                               below: Long = Long.MaxValue): Unit = {
@@ -542,72 +501,41 @@ object Expectations {
         s.getPath.getName == "miss"))
       .map(_.getPath)
     stores.foreach { sp =>
-      val batches = eligibleBatches(fs, sp.toString, below)
-      if (batches.size > 1) {
-        val allDirs = Manifests.batches(fs, sp.toString)
-        val gen = Manifests.freshGeneration(allDirs)
-        val covered = batches.filter(_ >= 0).max
-        val dirs = batches.map(b => s"$sp/batch=$b")
-        val acc = spark.read.option("basePath", sp.toString)
-          .parquet(dirs: _*)
+      swapStore(spark, fs, sp.toString, below) { acc =>
         val kCols = acc.columns.toSeq
           .filter(c => c.startsWith("k") && c != "kbkt").sorted
-        val out =
-          if (sp.getName == "miss") {
-            // LWW: latest row per key, survivors only (cnt > 0)
-            import org.apache.spark.sql.expressions.Window
-            acc.withColumn("rn", row_number().over(
-                Window.partitionBy(kCols.map(col): _*)
-                  .orderBy(col("ver").desc)))
-              .filter(col("rn") === 1 && col("cnt") > 0)
-              .select((kCols.map(col) :+ col("cnt") :+ col("ver") :+
-                col("kbkt")): _*)
-          } else
-            acc.groupBy((kCols :+ "kbkt").map(col): _*)
-              .agg(sum(col("cnt")).as("cnt"))
-              .select((kCols.map(col) :+ col("cnt") :+ col("kbkt")): _*)
-        // steps 1-4 (stage hidden / rename / atomic pointer / retire)
-        // shared with the history rollup
-        publishGeneration(spark, fs, sp.toString, gen, covered, allDirs,
-          out.repartition(col("kbkt")).write.partitionBy("kbkt"))
+        if (sp.getName == "miss") {
+          // LWW: latest row per key, survivors only (cnt > 0)
+          import org.apache.spark.sql.expressions.Window
+          acc.withColumn("rn", row_number().over(
+              Window.partitionBy(kCols.map(col): _*)
+                .orderBy(col("ver").desc)))
+            .filter(col("rn") === 1 && col("cnt") > 0)
+            .select((kCols.map(col) :+ col("cnt") :+ col("ver") :+
+              col("kbkt")): _*)
+        } else
+          acc.groupBy((kCols :+ "kbkt").map(col): _*)
+            .agg(sum(col("cnt")).as("cnt"))
+            .select((kCols.map(col) :+ col("cnt") :+ col("kbkt")): _*)
       }
     }
   }
 
-  /** The crash-safe generation-publish protocol shared by the key-store
-    * compaction and the history rollup:
-    *  1. stage the consolidated relation into a hidden `.compact.tmp`
-    *     (invisible to every reader; a crashed prior attempt is swept),
-    *  2. rename it to `batch=<gen>` — still invisible: readers ignore
-    *     negative dirs the pointer does not name,
-    *  3. atomically publish `_GEN (gen, covered)` — the ONE commit
-    *     point. Overwrite must be a true atomic swap (the round-13
-    *     release-manifest lesson): a delete-then-rename window with NO
-    *     pointer would hide every consolidated generation from readers
-    *     ([[Manifests.publish]]),
-    *  4. retire everything the pointer no longer names (stale leftovers
-    *     from a crash here are invisible by the pointer rule and swept
-    *     by the next pass).
+  /** Swap the batch dirs below `below` of a `kbkt`-bucketed keyed-audit
+    * or route store into one `batch=0` when there are at least two
+    * ([[Curation.swapBatches]]), `merge` rewriting their rows. A manual
+    * call (`below = Long.MaxValue`) bounds the swap just above the newest
+    * batch; a policy call keeps its own batch id as the bound.
     */
-  private def publishGeneration(spark: SparkSession,
-                                fs: org.apache.hadoop.fs.FileSystem,
-                                store: String, gen: Long, covered: Long,
-                                allDirs: Seq[Long],
-                                writer: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row])
-      : Unit = {
-    val staging = new org.apache.hadoop.fs.Path(s"$store/.compact.tmp")
-    fs.delete(staging, true)
-    writer.mode("overwrite").parquet(staging.toString)
-    val genDir = new org.apache.hadoop.fs.Path(s"$store/batch=$gen")
-    fs.delete(genDir, true) // only ever a crashed unnamed attempt
-    require(fs.rename(staging, genDir),
-      s"could not move staged generation into $genDir")
-    Manifests.publish(spark.sessionState.newHadoopConf(),
-      new org.apache.hadoop.fs.Path(s"$store/$GEN_MARKER"),
-      s"$GEN_HEADER\n$gen $covered\n".getBytes("UTF-8"))
-    allDirs.filter(b => b != gen && !(b >= 0 && b > covered))
-      .foreach(b => fs.delete(
-        new org.apache.hadoop.fs.Path(s"$store/batch=$b"), true))
+  private def swapStore(spark: SparkSession,
+                        fs: org.apache.hadoop.fs.FileSystem, store: String,
+                        below: Long)(merge: DataFrame => DataFrame): Unit = {
+    val ids = eligibleBatches(fs, store, below)
+    if (ids.nonEmpty)
+      Curation.swapBatches(spark, store,
+          if (below == Long.MaxValue) ids.max + 1 else below, 2) {
+        (rows, tmp) => Curation.writeBucketedBatch(merge(rows), tmp, "kbkt")
+      }
   }
 
   // ------------------------------------------------------------------
@@ -616,10 +544,10 @@ object Expectations {
   // documented q143 timeline contract. The rollup bounds them: batches
   // older than `keepRecent` consolidate into COARSE EPOCH ROWS (one row
   // per (epoch, constraint), carrying the contributing batch range) in
-  // ONE generation dir under the `_GEN` pointer, while the recent window
-  // keeps per-batch granularity. Sums are distributive, so every
-  // sum-of-partials reader (the q141 gate, the live monitors) is exact
-  // over a rolled store; only the PER-BATCH timeline (q143) loses
+  // the store's `batch=0`, swapped in through [[Compaction]], while the
+  // recent window keeps per-batch granularity. Sums are distributive, so
+  // every sum-of-partials reader (the q141 gate, the live monitors) is
+  // exact over a rolled store; only the PER-BATCH timeline (q143) loses
   // resolution below epoch granularity — it refuses a rolled store
   // loudly (the drift-guard rule) and [[corpusGateTimelineEpochs]] is
   // its rolled-store readout.
@@ -631,15 +559,53 @@ object Expectations {
   private def historyVcol(store: String): String =
     if (store.endsWith("/scalar")) "n_violations" else "v_delta"
 
+  /** A history store's live batch ids, split into the epoch-row dir
+    * (`batch=0` once the store was rolled, i.e. [[Compaction.compacted]])
+    * and the per-batch dirs.
+    */
+  private def historyBatches(spark: SparkSession,
+                             store: String): (Seq[Long], Seq[Long]) = {
+    val fs = new org.apache.hadoop.fs.Path(store)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val ids = eligibleBatches(fs, store, Long.MaxValue)
+    if (Compaction.compacted(fs, store)) ids.partition(_ == 0) else (Nil, ids)
+  }
+
+  /** The rows of a history store's epoch dirs `epochs` and per-batch dirs
+    * `batches` as `(epoch, batch_lo, batch_hi, constraint, n_rows,
+    * <value>)`, a per-batch row being the singleton range of its batch
+    * with a NULL epoch. The two read separately (their on-disk schemas
+    * differ) and union — exact for every sum-of-partials consumer because
+    * the epoch rows are already the sums of the batches they replaced.
+    * None when both are empty.
+    */
+  private def historyRows(spark: SparkSession, store: String,
+                          epochs: Seq[Long],
+                          batches: Seq[Long]): Option[DataFrame] = {
+    val vcol = historyVcol(store)
+    val rolled = epochs.map(b => spark.read.parquet(s"$store/batch=$b")
+      .select(col("epoch"), col("batch_lo"), col("batch_hi"),
+        col("constraint"), col("n_rows"), col(vcol)))
+    val recent = Option.when(batches.nonEmpty)(
+      spark.read.option("basePath", store)
+        .parquet(batches.map(b => s"$store/batch=$b"): _*)
+        .select(lit(null).cast("long").as("epoch"),
+          col("batch").cast("long").as("batch_lo"),
+          col("batch").cast("long").as("batch_hi"), col("constraint"),
+          col("n_rows"), col(vcol)))
+    (rolled ++ recent).reduceOption(_ unionByName _)
+  }
+
   /** Roll a keyed-audit root's history stores: batches strictly below
     * `frontier - keepRecent` group into epochs of `epochSize` and
     * consolidate — per (epoch, constraint) one summed row carrying
-    * `(epoch, batch_lo, batch_hi)` — into a new generation published
-    * under the `_GEN` pointer ([[publishGeneration]]: crash anywhere
-    * leaves the prior state readable). A previously-published epoch
-    * generation re-rolls losslessly (its rows already carry their epoch
-    * ids; re-grouping is sum-of-sums). `keepRecent >= 1` keeps the
-    * stream's replayable frontier batch out of every rollup, so a
+    * `(epoch, batch_lo, batch_hi)` — into the store's `batch=0` through
+    * [[Compaction]] (a crash anywhere leaves the prior state or the
+    * rolled one after the next reader's recovery). The epoch rows of a
+    * previous rollup merge in losslessly (they already carry their epoch
+    * ids; re-grouping is sum-of-sums), so a store swaps even when a
+    * single per-batch dir is below the cutoff. `keepRecent >= 1` keeps
+    * the stream's replayable frontier batch out of every rollup, so a
     * replayed ingest batch overwrites its own (un-rolled) dir exactly as
     * before — replay-safe by the same argument as the key-store
     * compaction.
@@ -658,79 +624,45 @@ object Expectations {
     require(keepRecent >= 1,
       "keepRecent >= 1: the stream's replayable frontier batch must stay " +
         "per-batch")
-    val base = new org.apache.hadoop.fs.Path(root)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(base)) return
     HISTORY_STORES.map(s => s"$root/$s").foreach { store =>
-      val sp = new org.apache.hadoop.fs.Path(store)
-      if (fs.exists(sp)) {
-        val eligible = eligibleBatches(fs, store, Long.MaxValue)
-        val nonNeg = eligible.filter(_ >= 0)
-        val cutoff =
-          if (frontier >= 0) frontier - keepRecent
-          else nonNeg.maxOption.getOrElse(-1L) + 1 - keepRecent
-        val toRoll = nonNeg.filter(_ < cutoff)
-        if (toRoll.nonEmpty) {
-          val vcol = historyVcol(store)
-          val allDirs = Manifests.batches(fs, store)
-          val gen = Manifests.freshGeneration(allDirs)
-          val covered = toRoll.max
-          val fresh = spark.read.option("basePath", store)
-            .parquet(toRoll.map(b => s"$store/batch=$b"): _*)
-            .select(expr(s"CAST(batch AS BIGINT) div $epochSize")
-                .as("epoch"),
-              col("batch").cast("long").as("batch_lo"),
-              col("batch").cast("long").as("batch_hi"),
-              col("constraint"), col("n_rows"), col(vcol))
-          val prior = eligible.filter(_ < 0).map { g =>
-            spark.read.parquet(s"$store/batch=$g")
-              .select(col("epoch"), col("batch_lo"), col("batch_hi"),
-                col("constraint"), col("n_rows"), col(vcol))
-          }
-          val out = (fresh +: prior).reduce(_ unionByName _)
-            .groupBy("epoch", "constraint")
-            .agg(min(col("batch_lo")).as("batch_lo"),
-              max(col("batch_hi")).as("batch_hi"),
-              sum(col("n_rows")).as("n_rows"),
-              sum(col(vcol)).as(vcol))
-            .select(col("epoch"), col("batch_lo"), col("batch_hi"),
-              col("constraint"), col("n_rows"), col(vcol))
-          publishGeneration(spark, fs, store, gen, covered, allDirs,
-            out.coalesce(1).write)
+      val (epochs, batches) = historyBatches(spark, store)
+      val cutoff =
+        if (frontier >= 0) frontier - keepRecent
+        else batches.maxOption.getOrElse(-1L) + 1 - keepRecent
+      val toRoll = batches.filter(_ < cutoff)
+      if (toRoll.nonEmpty) {
+        val vcol = historyVcol(store)
+        val out = historyRows(spark, store, epochs, toRoll).get
+          .withColumn("epoch", coalesce(col("epoch"),
+            expr(s"batch_lo div $epochSize")))
+          .groupBy("epoch", "constraint")
+          .agg(min(col("batch_lo")).as("batch_lo"),
+            max(col("batch_hi")).as("batch_hi"),
+            sum(col("n_rows")).as("n_rows"),
+            sum(col(vcol)).as(vcol))
+          .select(col("epoch"), col("batch_lo"), col("batch_hi"),
+            col("constraint"), col("n_rows"), col(vcol))
+        Compaction.compact(spark.sessionState.newHadoopConf(), store,
+            epochs ++ toRoll, cutoff) { (_, tmp) =>
+          out.coalesce(1).write.mode("overwrite").parquet(tmp)
         }
       }
     }
   }
 
-  /** A history store's rows restricted to the named columns, pointer
-    * aware: epoch generations and per-batch dirs read separately (their
-    * on-disk schemas differ) and union — exact for every sum-of-partials
-    * consumer because the rolled rows are already the sums of the dirs
-    * they replaced.
+  /** A history store's rows restricted to the named columns, epoch rows
+    * and per-batch rows alike ([[historyRows]]); empty when the store is
+    * missing or holds no batch.
     */
   private def readHistoryRows(spark: SparkSession, store: String,
                               schema: String): DataFrame = {
     val cols = StructType.fromDDL(schema).fieldNames.toSeq
-    val base = new org.apache.hadoop.fs.Path(store)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(base))
-      return spark.createDataFrame(
+    val (epochs, batches) = historyBatches(spark, store)
+    historyRows(spark, store, epochs, batches)
+      .map(_.select(cols.map(col): _*))
+      .getOrElse(spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType.fromDDL(schema))
-    val (gens, batches) = eligibleBatches(fs, store, Long.MaxValue)
-      .partition(_ < 0)
-    val parts = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    gens.foreach(g => parts +=
-      spark.read.parquet(s"$store/batch=$g").select(cols.map(col): _*))
-    if (batches.nonEmpty) parts +=
-      spark.read.option("basePath", store)
-        .parquet(batches.map(b => s"$store/batch=$b"): _*)
-        .select(cols.map(col): _*)
-    if (parts.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType.fromDDL(schema))
-    else parts.reduce(_ unionByName _)
+        StructType.fromDDL(schema)))
   }
 
   /** The q156 readout: the gate timeline AT THE STORED GRANULARITY —
@@ -745,40 +677,18 @@ object Expectations {
   def corpusGateTimelineEpochs(spark: SparkSession, root: String): DataFrame = {
     def hist(tbl: String, sub: String, rel: String): DataFrame = {
       val store = s"$root/$sub/$rel"
-      val vcol = historyVcol(store)
-      val rangeSchema = s"epoch BIGINT, batch_lo BIGINT, batch_hi BIGINT, " +
-        s"constraint STRING, n_rows BIGINT, $vcol BIGINT"
-      val base = new org.apache.hadoop.fs.Path(store)
-      val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(base))
-        return spark.createDataFrame(
+      val (epochs, batches) = historyBatches(spark, store)
+      // a missing store, or one that holds no batch dirs (e.g. a
+      // created-then-crashed ingest), is the empty relation
+      historyRows(spark, store, epochs, batches)
+        .map(_.select(col("batch_lo"), col("batch_hi"),
+          lit(tbl).as("table_name"), col("constraint"), col("n_rows"),
+          col(historyVcol(store)).as("n_violations")))
+        .getOrElse(spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           StructType.fromDDL("batch_lo BIGINT, batch_hi BIGINT, " +
             "table_name STRING, constraint STRING, n_rows BIGINT, " +
-            "n_violations BIGINT"))
-      val (gens, batches) = eligibleBatches(fs, store, Long.MaxValue)
-        .partition(_ < 0)
-      val parts = scala.collection.mutable.ArrayBuffer[DataFrame]()
-      gens.foreach(g => parts += spark.read.parquet(s"$store/batch=$g")
-        .select(col("batch_lo"), col("batch_hi"), col("constraint"),
-          col("n_rows"), col(vcol).as("n_violations")))
-      if (batches.nonEmpty) parts += spark.read.option("basePath", store)
-        .parquet(batches.map(b => s"$store/batch=$b"): _*)
-        .select(col("batch").cast("long").as("batch_lo"),
-          col("batch").cast("long").as("batch_hi"), col("constraint"),
-          col("n_rows"), col(vcol).as("n_violations"))
-      // a store dir that exists but holds no eligible batch dirs (e.g.
-      // created-then-crashed ingest) is the same empty relation as a
-      // missing store — readHistoryRows' guard, mirrored here
-      if (parts.isEmpty)
-        return spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType.fromDDL("batch_lo BIGINT, batch_hi BIGINT, " +
-            "table_name STRING, constraint STRING, n_rows BIGINT, " +
-            "n_violations BIGINT"))
-      parts.reduce(_ unionByName _)
-        .select(col("batch_lo"), col("batch_hi"), lit(tbl).as("table_name"),
-          col("constraint"), col("n_rows"), col("n_violations"))
+            "n_violations BIGINT")))
     }
     hist("documents", "docs", "scalar")
       .unionByName(hist("documents", "docs", "live"))
@@ -1591,49 +1501,28 @@ object Expectations {
     routeIngestBatch(batch, batchId, root, keyCol, checks, refCols)
   }
 
-  /** Consolidate a route store's eligible per-batch dirs below `below`
-    * into ONE generation under the shared `_GEN` pointer protocol
-    * ([[publishGeneration]] — publish-the-pointer is the commit). Route
-    * rows are per-physical-row FACTS, so consolidation is a rewrite,
-    * not an aggregation: every row survives verbatim (the per-copy
-    * contract — the same rule the release compactor follows for quar
-    * rows), re-bucketed one file per kbkt dir.
+  /** Consolidate a route store's per-batch dirs below `below` into one
+    * `batch=0` through [[Compaction]] (the key-store compactor's swap,
+    * [[swapStore]]). Route rows are per-physical-row FACTS, so
+    * consolidation is a rewrite, not an aggregation: every row survives
+    * verbatim (the per-copy contract — the same rule the release
+    * compactor follows for quar rows), re-bucketed one file per kbkt dir.
     */
   def compactRouteStore(spark: SparkSession, root: String,
-                        below: Long = Long.MaxValue): Unit = {
-    val base = new org.apache.hadoop.fs.Path(root)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(base)) return
-    val batches = eligibleBatches(fs, root, below)
-    if (batches.size > 1) {
-      val allDirs = Manifests.batches(fs, root)
-      val gen = Manifests.freshGeneration(allDirs)
-      val covered = batches.filter(_ >= 0).max
-      val out = spark.read.option("basePath", root)
-        .parquet(batches.map(b => s"$root/batch=$b"): _*)
-        .drop("batch")
-      publishGeneration(spark, fs, root, gen, covered, allDirs,
-        out.repartition(col("kbkt")).write.partitionBy("kbkt"))
-    }
-  }
+                        below: Long = Long.MaxValue): Unit =
+    swapStore(spark, new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sessionState.newHadoopConf()), root, below)(identity)
 
-  /** Pointer-aware whole-store read of a route store: without a `_GEN`
-    * pointer every visible dir is eligible and ONE parallel partition
-    * discovery beats per-leaf enumeration (the readStore fast path);
-    * with one, the named generation plus the batches above its
-    * coverage.
+  /** Whole-store read of a route store: after recovery every batch dir is
+    * live, so ONE parallel partition discovery over the root (the
+    * readStore fast path).
     */
   private def readRouteStore(spark: SparkSession, root: String): DataFrame = {
-    val base = new org.apache.hadoop.fs.Path(root)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    val neverCompacted = fs.exists(base) &&
-      !fs.exists(new org.apache.hadoop.fs.Path(s"$root/$GEN_MARKER"))
-    if (neverCompacted) spark.read.option("basePath", root).parquet(root)
-    else {
-      val dirs = storeLeafDirs(spark, root, Long.MaxValue, None)
-      require(dirs.nonEmpty, s"route store $root has no eligible batches")
-      spark.read.option("basePath", root).parquet(dirs: _*)
-    }
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    require(eligibleBatches(fs, root, Long.MaxValue).nonEmpty,
+      s"route store $root has no eligible batches")
+    spark.read.option("basePath", root).parquet(root)
   }
 
   /** The COMPLETE row-level route off route stores alone — equals
@@ -1967,15 +1856,13 @@ object Expectations {
   def corpusGateTimeline(spark: SparkSession, sfDir: String): DataFrame = {
     val root = ensureKeyedAuditState(spark, sfDir)
     // per-batch resolution is this readout's contract: a ROLLED history
-    // store (epoch generations under a _GEN pointer) can no longer
-    // honor it — refuse loudly (the drift-guard rule) instead of
-    // silently dropping the rolled batches
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    // store (its `batch=0` holds epoch rows) can no longer honor it —
+    // refuse loudly (the drift-guard rule) instead of silently reading
+    // the epoch rows as one batch. historyBatches recovers a swap in
+    // flight first, then asks Compaction.compacted.
     Seq("docs/scalar", "docs/live", "embs/scalar", "embs/live",
       "embs/liveref").foreach { s =>
-      require(!fs.exists(
-          new org.apache.hadoop.fs.Path(s"$root/$s/$GEN_MARKER")),
+      require(historyBatches(spark, s"$root/$s")._1.isEmpty,
         s"corpusGateTimeline: history store $s was rolled to epoch " +
           "granularity — per-batch resolution is gone; read " +
           "corpusGateTimelineEpochs instead")
@@ -2010,15 +1897,17 @@ object Expectations {
     * same mapping: lossless-at-epoch-granularity IS the contract.
     *
     * Keyed on the source tree's content-keyed directory NAME, not its
-    * path, so the tree is shared by every artifact root (v=2; v=1 keyed
-    * on the absolute path and rebuilt under each root).
+    * path, so the tree is shared by every artifact root (v=1 keyed on the
+    * absolute path and rebuilt under each root). v=3: the rolled stores
+    * hold their epoch rows in a [[Compaction]]-swapped `batch=0`; v=2
+    * held them in a negative generation dir named by a pointer file.
     */
   private[graft] def ensureRolledAuditState(spark: SparkSession,
                                             sfDir: String): String =
     DedupArtifacts.cachedDir(s"kauditroll|$sfDir") {
       val src = ensureKeyedAuditState(spark, sfDir)
       DedupArtifacts.ensureTree(
-        s"kauditroll|${DedupArtifacts.keyOf(src)}|e=2|r=1|v=2") { stage =>
+        s"kauditroll|${DedupArtifacts.keyOf(src)}|e=2|r=1|v=3") { stage =>
         val conf = spark.sessionState.newHadoopConf()
         val fs = new org.apache.hadoop.fs.Path(src).getFileSystem(conf)
         Seq("docs", "embs").foreach { sub =>

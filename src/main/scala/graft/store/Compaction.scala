@@ -5,8 +5,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** The one crash-safe directory swap of the flat batch-dir stores (the
   * near-dup and containment indexes, the crawl archive, the chunk and
-  * centroid indexes): merge the `batch=<id>` dirs below a bound `upTo`
-  * into ONE `batch=0` dir.
+  * centroid indexes, and the keyed-audit key, pending-miss, route and
+  * history stores): merge the `batch=<id>` dirs below a bound `upTo` into
+  * ONE `batch=0` dir. The merged relation may have its own schema: a
+  * rolled history store's `batch=0` holds epoch rows, and its readers
+  * tell it apart by [[compacted]].
   *
   * [[compact]] writes the merged relation to `root/.compact-tmp`, then
   * publishes the commit marker `root/.compact-commit` (body `"<upTo>\n"`)

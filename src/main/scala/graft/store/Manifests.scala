@@ -5,9 +5,10 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path,
   UnsupportedFileSystemException}
 
 /** The one commit protocol of the incremental stores (SCD2, release,
-  * cluster labels, and the keyed-audit `_GEN` pointer): a batch writes its
-  * data under `root/batch=<id>/`, then publishes `batch=<id>/_MANIFEST`,
-  * and only a published manifest makes the batch visible.
+  * cluster labels): a batch writes its data under `root/batch=<id>/`,
+  * then publishes `batch=<id>/_MANIFEST`, and only a published manifest
+  * makes the batch visible. [[publish]] is also the commit point of the
+  * directory swap ([[Compaction]]).
   *
   * The manifest text is an optional format-version header line, one
   * `<tag> <key> <value>` line per entry, and an `END <n>` terminator. A

@@ -308,7 +308,7 @@ class ExpectationsSpec extends AnyFunSuite {
       .createTempDirectory("graft-kaudit-compact").toString
     // five batches; id 10 repeats in batches 0 and 4 — the duplicate
     // STRADDLES the compaction at batch 2 (and 4), so detection must
-    // read the consolidated generation, not the retired batch dirs
+    // read the consolidated batch=0, not the retired batch dirs
     val batches = Seq(Seq(10L, 11L), Seq(12L), Seq(13L), Seq(14L),
       Seq(10L, 15L))
     def ingest(i: Int): Unit = {
@@ -323,9 +323,9 @@ class ExpectationsSpec extends AnyFunSuite {
       d.listFiles().filter(f => f.isDirectory &&
         f.getName.startsWith("batch=")).map(_.getName).toSet
     }
-    // after the batch-4 compaction (covers 0-3 incl. the batch-2 gen):
-    // one generation + batch 4 itself
-    assert(dirsOf("key_id") === Set("batch=-2", "batch=4"),
+    // after the batch-4 compaction (merges 0-3, incl. the batch-2 swap's
+    // batch=0): one merged batch=0 + batch 4 itself
+    assert(dirsOf("key_id") === Set("batch=0", "batch=4"),
       s"policy must bound store dirs, got ${dirsOf("key_id")}")
     val want = rows(Expectations.audit("t",
       batches.flatten.toDF("id"), uq).orderBy("constraint"))
@@ -349,24 +349,106 @@ class ExpectationsSpec extends AnyFunSuite {
 
   test("an unknown-format _GEN pointer fails with the migration message, " +
     "never a silent wrong view") {
+    // the retired generation-pointer layout: a `_GEN` file, or a negative
+    // generation dir, would read as live batches (superseded generations
+    // counted twice) — every reader and compactor refuses it, naming the
+    // file and asking for a rebuild
     import spark.implicits._
     val uq = Seq(Expectations.Unique("unique:id", Seq("id")))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-kaudit-gen").toString
-    Expectations.keyedAuditIngestBatch(Seq(1L, 2L).toDF("id"), 0L, root,
-      Seq.empty, uq, Seq.empty)
-    // unknown header; header only; a one-field pointer line
-    for (gen <- Seq("GARBAGE v9\n-1 0\n", "GRAFT_KAUDIT_GEN v1\n",
-        "GRAFT_KAUDIT_GEN v1\n-1\n")) {
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$root/key_id/_GEN"), gen)
-      val e = intercept[IllegalArgumentException] {
-        Expectations.keyedAuditFromStore(spark, "t", root, Seq.empty, uq,
-          Seq.empty).collect()
+    def store(): String = {
+      val root = java.nio.file.Files
+        .createTempDirectory("graft-kaudit-gen").toString
+      Expectations.keyedAuditIngestBatch(Seq(1L, 2L).toDF("id"), 0L, root,
+        Seq.empty, uq, Seq.empty)
+      root
+    }
+    val withGen = store()
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$withGen/key_id/_GEN"),
+      "GRAFT_KAUDIT_GEN v1\n-1 0\n")
+    val withNeg = store()
+    java.nio.file.Files.createDirectory(
+      java.nio.file.Paths.get(s"$withNeg/key_id/batch=-1"))
+    for ((root, file) <- Seq(withGen -> "_GEN", withNeg -> "batch=-1");
+         run <- Seq[() => Unit](
+           () => Expectations.keyedAuditFromStore(spark, "t", root,
+             Seq.empty, uq, Seq.empty).collect(),
+           () => Expectations.compactKeyedAuditStores(spark, root))) {
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains("rebuild the store") &&
+        e.getMessage.contains(s"$root/key_id/$file"),
+        s"a parent-layout store must fail fast naming the file: ${e.getMessage}")
+    }
+  }
+
+  test("a keyed-audit swap that died before its marker rolls back, and " +
+    "one that died after it finishes, on the next readout — in a key " +
+    "store and in a history store") {
+    import spark.implicits._
+    val checks = Seq(Expectations.notNull("text"))
+    val uq = Seq(Expectations.Unique("unique:doc_id", Seq("doc_id")))
+    // id 2 repeats across batches 0 and 2; batch 1 carries a NULL text
+    val batches = Seq(
+      Seq((1L, "aa"), (2L, "bb")),
+      Seq((3L, null.asInstanceOf[String])),
+      Seq((2L, "bb2"), (4L, "dd")))
+    val want = rows(Expectations.audit("t",
+      batches.flatten.toDF("doc_id", "text"), checks ++ uq)
+      .orderBy("constraint"))
+    def ingested(): String = {
+      val root = java.nio.file.Files
+        .createTempDirectory("graft-kaudit-crash").toString
+      batches.zipWithIndex.foreach { case (b, i) =>
+        Expectations.keyedAuditIngestBatch(b.toDF("doc_id", "text"),
+          i.toLong, root, checks, uq, Nil)
       }
-      assert(e.getMessage.contains("migration") &&
-        e.getMessage.contains(s"$root/key_id/_GEN"),
-        s"torn/unknown pointer must fail fast naming the cause: ${e.getMessage}")
+      root
+    }
+    def gate(root: String) = rows(Expectations.keyedAuditFromStore(spark,
+      "t", root, checks, uq, Nil))
+    def file(path: String) = new java.io.File(path)
+    def dirsOf(store: String): Set[String] = file(store).listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("batch="))
+      .map(_.getName).toSet
+    def merged(store: String) = spark.read.option("basePath", store)
+      .parquet(s"$store/batch=0", s"$store/batch=1")
+    // window 1: the swap died BEFORE its marker — a stray tmp must be
+    // discarded, the originals stay authoritative
+    val r1 = ingested()
+    val stores1 = Seq(s"$r1/key_doc_id", s"$r1/scalar")
+    stores1.foreach(s => assert(file(s"$s/.compact-tmp").mkdir()))
+    assert(gate(r1) === want, "readout after a rolled-back swap")
+    stores1.foreach { s =>
+      assert(!file(s"$s/.compact-tmp").exists(),
+        s"$s: an uncommitted tmp must be rolled back")
+      assert(dirsOf(s) === Set("batch=0", "batch=1", "batch=2"))
+    }
+    // window 2: the swap died AFTER its marker — merge batches 0-1 by
+    // hand into tmp (bound 2); the key store's crash came after recovery
+    // deleted the originals, the history store's right after the marker
+    val r2 = ingested()
+    val (key, scalar) = (s"$r2/key_doc_id", s"$r2/scalar")
+    merged(key).groupBy("k0", "kbkt").agg(sum("cnt").as("cnt"))
+      .write.partitionBy("kbkt").parquet(s"$key/.compact-tmp")
+    Seq("batch=0", "batch=1").foreach(b =>
+      org.apache.hadoop.fs.FileUtil.fullyDelete(file(s"$key/$b")))
+    // epoch rows: epochSize 2 puts batches 0-1 in epoch 0
+    merged(scalar).groupBy("constraint")
+      .agg(min(col("batch").cast("long")).as("batch_lo"),
+        max(col("batch").cast("long")).as("batch_hi"),
+        sum("n_rows").as("n_rows"), sum("n_violations").as("n_violations"))
+      .select(lit(0L).as("epoch"), col("batch_lo"), col("batch_hi"),
+        col("constraint"), col("n_rows"), col("n_violations"))
+      .coalesce(1).write.parquet(s"$scalar/.compact-tmp")
+    Seq(key, scalar).foreach(s => java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$s/.compact-commit"), "2\n"))
+    assert(gate(r2) === want, "readout after a finished swap")
+    Seq(key, scalar).foreach { s =>
+      assert(dirsOf(s) === Set("batch=0", "batch=2"),
+        s"$s: the merged batch=0 beside the frontier batch")
+      assert(!file(s"$s/.compact-tmp").exists() &&
+        !file(s"$s/.compact-commit").exists() &&
+        file(s"$s/_COMPACTED").exists(), s"$s: the swap must finish")
     }
   }
 
@@ -566,7 +648,7 @@ class ExpectationsSpec extends AnyFunSuite {
     Expectations.rollupAuditHistory(spark, root, epochSize = 2,
       keepRecent = 1)
     assert(nDirs("scalar") === 2 && nDirs("live") === 2,
-      "rolled stores hold one generation + the recent window")
+      "rolled stores hold one epoch dir + the recent window")
     assert(gate() === gateB, "the gate readout is exact over sums of sums")
     assert(live() === liveB, "the live monitor is exact over sums of sums")
     def agg(rs: Seq[(Long, Long, String, String, Long, Long)],
@@ -580,7 +662,7 @@ class ExpectationsSpec extends AnyFunSuite {
       "the rolled timeline equals the per-batch timeline at epoch " +
         "granularity")
     // a new batch, then a RE-ROLL: batch 3 joins epoch 1 by merging the
-    // published generation (sum-of-sums)
+    // rolled batch=0 (sum-of-sums)
     Expectations.keyedAuditIngestBatch(Seq((6L, "ff")).toDF("doc_id", "text"),
       4L, root, checks, uq, Nil)
     Expectations.rollupAuditHistory(spark, root, epochSize = 2,
@@ -714,8 +796,8 @@ class ExpectationsSpec extends AnyFunSuite {
       .listFiles().count(f => f.isDirectory && f.getName.startsWith("batch="))
     // history: last policy fired at batch 6 with keepRecent=1 (cutoff
     // 6-1=5: rolls 0-4, keeps batch 5 — the replay anchor — plus 6-8
-    // written after) => 1 gen + 4 recent; key store: compacted strictly
-    // below 6, appended 6-8 => 1 gen + 3
+    // written after) => 1 epoch dir + 4 recent; key store: compacted
+    // strictly below 6, appended 6-8 => 1 merged batch=0 + 3
     assert(nDirs("scalar") === 5, s"scalar dirs: ${nDirs("scalar")}")
     assert(nDirs("live") === 5, s"live dirs: ${nDirs("live")}")
     assert(nDirs("key_doc_id") === 4, s"key dirs: ${nDirs("key_doc_id")}")
@@ -965,7 +1047,7 @@ class ExpectationsSpec extends AnyFunSuite {
         Seq(Expectations.Unique("unique:v", Seq("v"))), Nil)
     }
     // coded retention: compaction consolidates the per-batch dirs into
-    // ONE generation under the _GEN pointer, every physical row
+    // ONE batch=0 dir (the Compaction swap), every physical row
     // surviving verbatim (per-copy facts, not aggregates) — the readout
     // is unchanged, dirs are bounded, and further batches fold on top
     Expectations.compactRouteStore(spark, fRoot)
